@@ -361,9 +361,9 @@ class CdcApplier:
         ]
         if not rows:
             # an EMPTY batch still writes one all-zero marker row: the
-            # partition dir is the "side tables committed" flag, and
-            # without it every replay of the empty batch re-runs the
-            # stats job in _backfill_side_tables
+            # partition's part file is the "side tables committed"
+            # flag, and without it every replay of the empty batch
+            # re-runs the stats job in _backfill_side_tables
             rows = [(batch_id, None, None, None, 0, 0, 0, 0,
                      snapshot_version)]
         # driver-side parquet write (pyarrow): the lineage rows are
@@ -404,16 +404,20 @@ class CdcApplier:
         self, events, table, batch_id: int, source_id: str
     ) -> None:
         """Replay of an already-merged batch: re-derive quarantine +
-        lineage only if this batch's lineage partition is missing
-        (crash between merge commit and the side-table writes).
+        lineage only if this batch's lineage part file is missing
+        (crash between merge commit and the side-table writes, or
+        inside the lineage write itself — the partition dir exists
+        from ``makedirs`` before the file is renamed into it).
 
         The recompute is pinned to the snapshot that actually committed
         the batch — not the table head — so the backfilled lineage
         carries the right snapshot_version and the quarantine split
         runs under the schema of the original attempt (the head may
         have evolved since)."""
-        part_dir = os.path.join(self.lineage_path, f"batch_id={batch_id}")
-        if os.path.isdir(part_dir):
+        part = os.path.join(
+            self.lineage_path, f"batch_id={batch_id}", "part-0.parquet"
+        )
+        if os.path.isfile(part):
             return
         commit_snap, schema_snap = self._committing_snapshot(
             table, batch_id, source_id

@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 
 from kafka_jdbc_sink_connector_spark.operators.text import (
     fan_out,
-    simhash32_table,
     word_shingles,
 )
 
@@ -476,15 +475,6 @@ def connected_components_star(
             F.coalesce("lbl", F.col("node")).alias("component"),
         )
     )
-
-
-def simhash_groups(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """doc_id, simhash, canonical id per identical-simhash group."""
-    sh = simhash32_table(docs, id_col, text_col)
-    canon = sh.groupBy("simhash").agg(F.min(id_col).alias("canonical_id"))
-    return sh.join(canon, "simhash").select(id_col, "simhash", "canonical_id")
 
 
 def line_dedup(

@@ -327,12 +327,6 @@ class EmbeddingDedupIndex:
         return self.table.refresh().read()
 
 
-def _emb_cos(va, vb, round_digits: int):
-    from kafka_jdbc_sink_connector_spark.operators.similarity import cosine
-
-    return F.round(cosine(va, vb), round_digits)
-
-
 def _emb_within_pairs(
     bvec: DataFrame, round_digits: int
 ) -> DataFrame:

@@ -513,24 +513,6 @@ def simhash32_table(
     return simhash_table(docs, id_col, text_col, n_bits=32)
 
 
-def simhash32(text: str | Column) -> Column:
-    """32-bit SimHash over word tokens. Bit b is the sign of
-    Σ_words (±1), where the word votes +1 iff hex digit b of
-    md5(word) has its high bit set (digit ∈ 8..f)."""
-    toks = tokens(text)
-
-    def bit_vote(b: int):
-        return lambda acc, w: acc + F.when(
-            F.substring(F.md5(w), b + 1, 1).isin(*_HIGH_HEX), 1
-        ).otherwise(-1)
-
-    out = F.lit(0).cast("long")
-    for b in range(32):
-        vote = F.aggregate(toks, F.lit(0).cast("long"), bit_vote(b))
-        out = out + F.when(vote > 0, F.lit(1 << b).cast("long")).otherwise(0)
-    return out
-
-
 def simhash_dup_pairs(
     docs,
     max_hamming: int = 3,

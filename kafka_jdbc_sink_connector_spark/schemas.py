@@ -100,11 +100,6 @@ LINEAGE_SCHEMA = T.StructType(
 )
 
 
-def payload_fields(schema: T.StructType) -> list[T.StructField]:
-    """Payload (non-transport) fields of a change-event schema."""
-    return [f for f in schema.fields if f.name not in CDC_META_COLUMNS]
-
-
 def missing_nullable_fields(
     target: T.StructType, incoming: T.StructType
 ) -> list[T.StructField]:

@@ -8,8 +8,27 @@ for every pandas interchange, UTC pins oracle comparisons).
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+from kafka_jdbc_sink_connector_spark.config import ConfigError
+
+#: a Spark byte-size string (``JavaUtils.byteStringAsBytes``): whole
+#: digits plus an optional b/k/kb/m/mb/g/gb/t/tb/p/pb unit
+_BYTE_SIZE = re.compile(r"\d+(?:[kmgtp]b?|b)?", re.IGNORECASE)
+
+
+def _env_byte_size(key: str, default: str) -> str:
+    """``key`` from the environment, checked here so a malformed value
+    fails at session build and names the variable, not later as a
+    Spark conf parse error inside the first query that reads it."""
+    raw = os.environ.get(key, default).strip()
+    if not _BYTE_SIZE.fullmatch(raw):
+        raise ConfigError(
+            f"{key}={raw!r} is not a Spark byte size (e.g. 64k, 1m, 1048576)"
+        )
+    return raw
 
 
 def build_session(
@@ -18,6 +37,7 @@ def build_session(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    aqe_min_partition = _env_byte_size("SPARK_GRAFT_AQE_MIN_PARTITION", "64k")
     cores = cores or os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = f"local[{cores}]"
     if shuffle_partitions is None:
@@ -73,7 +93,7 @@ def build_session(
         # floor stays scale-adaptive: AQE still targets
         # max(total/defaultParallelism, this).
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-                os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"))
+                aqe_min_partition)
         # NOTE measured non-win (r8): raising
         # spark.sql.sources.parallelPartitionDiscovery.threshold to
         # keep manifest-known file lists off the distributed-listing

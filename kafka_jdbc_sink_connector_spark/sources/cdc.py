@@ -26,12 +26,3 @@ def file_stream(
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.format(fmt).load(path)
 
-
-def file_batch(
-    spark: SparkSession, path: str, schema: T.StructType | None = None,
-    fmt: str = "parquet",
-) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.format(fmt).load(path)

@@ -1,6 +1,7 @@
-"""Streaming near-duplicate detection: the persisted MinHash index
-(:class:`~..operators.incremental.MinHashDedupIndex`) driven by the
-same managed ``foreachBatch`` loop as the CDC runner.
+"""Streaming near-duplicate detection: a persisted dedup index
+(:class:`~..operators.incremental.MinHashDedupIndex` or
+:class:`~..operators.incremental.EmbeddingDedupIndex`) driven by the
+same managed ``foreachBatch`` shell as the CDC runner.
 
 This is the composition the two suites were built for: documents
 arrive as a stream, each micro-batch is deduped against everything
@@ -8,6 +9,11 @@ already indexed (broadcast-probe — the unboundedly growing index is
 never shuffled), the batch's signatures join the index, and the
 emitted duplicate evidence lands in a second lake table — all with
 the CDC runner's bounded retry and exactly-once replay semantics.
+:class:`PairDedupStreamRunner` holds the whole batch body once;
+:class:`DedupStreamRunner` (MinHash, ``doc_a``/``doc_b`` pairs scored
+by ``n_bands_shared``) and :class:`EmbDedupStreamRunner` (embeddings,
+``id_a``/``id_b`` pairs scored by ``cos_sim``) only name their
+columns.
 
 Exactly-once across TWO tables (index + pairs) without a cross-table
 transaction: both commits carry the ``(source_id, batch_id)``
@@ -35,74 +41,69 @@ drop_doc`` — batch-sized per micro-batch, never corpus-sized.
 
 Reference anchor: the reference's task lifecycle
 (``JdbcAuditSinkTask.java:60-120`` — put → buffered flush → bounded
-retry → offset commit) is what :class:`DedupStreamRunner.process_batch`
+retry → offset commit) is what :meth:`PairDedupStreamRunner.process_batch`
 mirrors, with "the target database remembers what was written"
-replaced by the index table's batch-id watermark.
+replaced by the index table's batch-id watermark. The batch body has
+no single owning applier config, so it retries on the runner module's
+:data:`~..streaming.runner.RETRIES` x
+:data:`~..streaming.runner.RETRY_BACKOFF_S` budget.
 """
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
 from kafka_jdbc_sink_connector_spark.lake.table import LakeTable
 from kafka_jdbc_sink_connector_spark.operators.incremental import (
     MinHashDedupIndex,
 )
-from kafka_jdbc_sink_connector_spark.streaming.runner import NON_RETRIABLE
+from kafka_jdbc_sink_connector_spark.streaming.runner import (
+    RETRIES,
+    RETRY_BACKOFF_S,
+    ForeachBatchRunner,
+    retrying,
+)
 
 
-def _pairs_schema(id_type: T.DataType) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("doc_a", id_type, True),
-            T.StructField("doc_b", id_type, True),
-            T.StructField("n_bands_shared", T.LongType(), True),
-            T.StructField("drop_doc", id_type, True),
-            T.StructField("batch_id", T.LongType(), True),
-        ]
-    )
+class PairDedupStreamRunner(ForeachBatchRunner):
+    """Drives a record stream through an incremental dedup index.
 
-
-class DedupStreamRunner:
-    """Drives a document stream through incremental dedup.
-
-    Per micro-batch: probe + self-join via
-    :meth:`MinHashDedupIndex.add_and_find_dups` (which also appends
-    the batch's signatures, watermarked), mark each pair's losing
-    document, and append the evidence to ``pairs_table`` under the
-    same ``(source_id, batch_id)`` watermark.
+    Per micro-batch: probe + self-join via the index's
+    ``add_and_find_dups`` (which also appends the batch's signatures,
+    watermarked), mark each pair's losing record, and append the
+    evidence to ``pairs_table`` under the same ``(source_id,
+    batch_id)`` watermark.
 
     ``record_parser`` mirrors :class:`..streaming.runner.CdcStreamRunner`:
-    an optional ``DataFrame → DataFrame`` hook run inside the retry
-    loop before dedup (decode/normalize lives there).
+    an optional ``DataFrame → DataFrame`` hook run inside the retried
+    batch body before dedup (decode/normalize lives there).
+
+    Subclasses name the pair columns, the score column and its type,
+    and the keyword the index takes its payload column under.
     """
+
+    pair_cols: tuple[str, str]
+    score_col: str
+    score_type: T.DataType
+    payload_kw: str
 
     def __init__(
         self,
-        index: MinHashDedupIndex,
+        index,
         pairs_table: LakeTable,
         checkpoint_dir: str,
-        source_id: str = "dedup-stream",
-        id_col: str = "doc_id",
-        text_col: str = "text",
+        source_id: str,
+        id_col: str,
+        payload_col: str,
         record_parser=None,
-        max_retries: int = 2,
-        retry_backoff_ms: int = 100,
     ):
+        super().__init__(checkpoint_dir, source_id, record_parser)
         self.index = index
         self.pairs_table = pairs_table
-        self.checkpoint_dir = checkpoint_dir
-        self.source_id = source_id
         self.id_col = id_col
-        self.text_col = text_col
-        self.record_parser = record_parser
-        self.max_retries = max_retries
-        self.retry_backoff_ms = retry_backoff_ms
+        self.payload_col = payload_col
         #: per-batch (batch_id, n_docs, n_pairs, skipped) telemetry
         self.results: list[tuple[int, int, int, bool]] = []
 
@@ -114,40 +115,39 @@ class DedupStreamRunner:
         n_buckets: int = 16,
         id_type: T.DataType = T.LongType(),
     ) -> LakeTable:
-        """The evidence table: bucketed on ``doc_a`` so per-document
-        dup lookups bucket-prune; append-only (pairs are immutable
-        facts about an arrival order)."""
+        """The evidence table: bucketed on the first pair column so
+        per-record dup lookups bucket-prune; append-only (pairs are
+        immutable facts about an arrival order)."""
+        a, b = cls.pair_cols
+        schema = T.StructType(
+            [
+                T.StructField(a, id_type, True),
+                T.StructField(b, id_type, True),
+                T.StructField(cls.score_col, cls.score_type, True),
+                T.StructField("drop_doc", id_type, True),
+                T.StructField("batch_id", T.LongType(), True),
+            ]
+        )
         return LakeTable.create(
             spark,
             path,
-            _pairs_schema(id_type),
+            schema,
             n_buckets=n_buckets,
-            key_fields=["doc_a", "doc_b"],
-            bucket_key="doc_a",
+            key_fields=[a, b],
+            bucket_key=a,
         )
 
     # foreachBatch body — public so tests can drive it directly
     def process_batch(self, batch_df: DataFrame, batch_id: int):
-        attempts = self.max_retries + 1
-        last_err: Exception | None = None
-        for attempt in range(attempts):
-            try:
-                return self._process_once(batch_df, batch_id)
-            except NON_RETRIABLE:
-                raise
-            except Exception as e:  # noqa: BLE001 — mirror catch(SQLException)
-                last_err = e
-                if attempt < attempts - 1:
-                    time.sleep(self.retry_backoff_ms / 1000.0)
-        assert last_err is not None
-        raise last_err
+        return retrying(
+            lambda: self._process_once(batch_df, batch_id),
+            RETRIES + 1,
+            RETRY_BACKOFF_S,
+        )
 
     def _process_once(self, batch_df: DataFrame, batch_id: int):
-        parsed = (
-            self.record_parser(batch_df)
-            if self.record_parser is not None
-            else batch_df
-        )
+        parsed = self.parse(batch_df)
+        a, b = self.pair_cols
         # the batch id set is reused twice (loser marking) and is
         # micro-batch-sized — broadcast both uses
         batch_ids = (
@@ -156,38 +156,38 @@ class DedupStreamRunner:
         pairs = self.index.add_and_find_dups(
             parsed,
             id_col=self.id_col,
-            text_col=self.text_col,
             source_id=self.source_id,
             batch_id=batch_id,
+            **{self.payload_kw: self.payload_col},
         )
-        # loser per pair: a batch-vs-index pair drops the batch doc
+        # loser per pair: a batch-vs-index pair drops the batch record
         # (the index side arrived first); a within-batch pair drops
         # the larger id (both are new; matches exact_dedup's
         # keep-lowest-id rule). Exactly one side of every pair is
         # guaranteed in the batch, so `a_new OR b_new` always holds.
         a_new = batch_ids.select(
-            F.col("__bid").alias("doc_a"), F.lit(True).alias("__a_new")
+            F.col("__bid").alias(a), F.lit(True).alias("__a_new")
         )
         b_new = batch_ids.select(
-            F.col("__bid").alias("doc_b"), F.lit(True).alias("__b_new")
+            F.col("__bid").alias(b), F.lit(True).alias("__b_new")
         )
         marked = (
-            pairs.join(F.broadcast(a_new), "doc_a", "left")
-            .join(F.broadcast(b_new), "doc_b", "left")
+            pairs.join(F.broadcast(a_new), a, "left")
+            .join(F.broadcast(b_new), b, "left")
             .select(
-                "doc_a",
-                "doc_b",
-                "n_bands_shared",
+                a,
+                b,
+                self.score_col,
                 F.when(
                     F.coalesce(F.col("__a_new"), F.lit(False))
                     & F.coalesce(F.col("__b_new"), F.lit(False)),
-                    F.greatest("doc_a", "doc_b"),
+                    F.greatest(a, b),
                 )
                 .when(
                     F.coalesce(F.col("__a_new"), F.lit(False)),
-                    F.col("doc_a"),
+                    F.col(a),
                 )
-                .otherwise(F.col("doc_b"))
+                .otherwise(F.col(b))
                 .alias("drop_doc"),
                 F.lit(batch_id).cast("long").alias("batch_id"),
             )
@@ -200,186 +200,7 @@ class DedupStreamRunner:
             # the index append decision identical
             n_pairs = 0
         else:
-            n_pairs = self._append_pairs(pt, marked, batch_id)
-        n_docs = batch_ids.count()
-        self.results.append((batch_id, n_docs, n_pairs, skipped))
-        return marked
-
-    def _append_pairs(
-        self, pt: LakeTable, marked: DataFrame, batch_id: int
-    ) -> int:
-        # count + append in one pass over a batch-sized frame
-        rows = marked.localCheckpoint(eager=True)
-        n = rows.count()
-        pt.commit_append(
-            pt.with_bucket(rows),
-            source_id=self.source_id,
-            batch_id=batch_id,
-        )
-        return n
-
-    def dup_doc_ids(self) -> DataFrame:
-        """Distinct documents that lost at least one pair — the
-        corpus-wide drop list (LEFT ANTI this against the corpus for
-        the keep list)."""
-        return (
-            self.pairs_table.refresh().read().select("drop_doc").distinct()
-        )
-
-    def start(
-        self,
-        stream_df: DataFrame,
-        available_now: bool = True,
-        processing_time: str | None = None,
-    ) -> StreamingQuery:
-        writer = stream_df.writeStream.foreachBatch(
-            lambda df, bid: self.process_batch(df, bid)
-        ).option("checkpointLocation", self.checkpoint_dir)
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        elif processing_time:
-            writer = writer.trigger(processingTime=processing_time)
-        return writer.start()
-
-    def run_available(self, stream_df: DataFrame, timeout_s: float = 600):
-        """Process everything currently available, then stop."""
-        q = self.start(stream_df, available_now=True)
-        q.awaitTermination(timeout_s)
-        if q.isActive:
-            q.stop()
-        if q.exception() is not None:
-            raise q.exception()
-        return self.results
-
-
-def _emb_pairs_schema(id_type: T.DataType) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("id_a", id_type, True),
-            T.StructField("id_b", id_type, True),
-            T.StructField("cos_sim", T.DoubleType(), True),
-            T.StructField("drop_doc", id_type, True),
-            T.StructField("batch_id", T.LongType(), True),
-        ]
-    )
-
-
-class EmbDedupStreamRunner:
-    """The semantic (embedding) sibling of :class:`DedupStreamRunner`:
-    drives a vector stream through
-    :class:`~..operators.incremental.EmbeddingDedupIndex` with the
-    identical exactly-once-across-two-tables contract — both commits
-    carry the ``(source_id, batch_id)`` watermark, and a batch's
-    cosine-verified pairs are a deterministic function of (batch,
-    index-before-this-batch), so every crash window replays to the
-    same bytes. Loser rule per pair is also identical: batch doc
-    loses against the index (arrived later), larger id loses within a
-    batch."""
-
-    def __init__(
-        self,
-        index,
-        pairs_table: LakeTable,
-        checkpoint_dir: str,
-        source_id: str = "emb-dedup-stream",
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-        record_parser=None,
-        max_retries: int = 2,
-        retry_backoff_ms: int = 100,
-    ):
-        self.index = index
-        self.pairs_table = pairs_table
-        self.checkpoint_dir = checkpoint_dir
-        self.source_id = source_id
-        self.id_col = id_col
-        self.vec_col = vec_col
-        self.record_parser = record_parser
-        self.max_retries = max_retries
-        self.retry_backoff_ms = retry_backoff_ms
-        self.results: list[tuple[int, int, int, bool]] = []
-
-    @classmethod
-    def create_pairs_table(
-        cls,
-        spark,
-        path: str,
-        n_buckets: int = 16,
-        id_type: T.DataType = T.LongType(),
-    ) -> LakeTable:
-        return LakeTable.create(
-            spark,
-            path,
-            _emb_pairs_schema(id_type),
-            n_buckets=n_buckets,
-            key_fields=["id_a", "id_b"],
-            bucket_key="id_a",
-        )
-
-    # foreachBatch body — public so tests can drive it directly
-    def process_batch(self, batch_df: DataFrame, batch_id: int):
-        attempts = self.max_retries + 1
-        last_err: Exception | None = None
-        for attempt in range(attempts):
-            try:
-                return self._process_once(batch_df, batch_id)
-            except NON_RETRIABLE:
-                raise
-            except Exception as e:  # noqa: BLE001 — mirror catch(SQLException)
-                last_err = e
-                if attempt < attempts - 1:
-                    time.sleep(self.retry_backoff_ms / 1000.0)
-        assert last_err is not None
-        raise last_err
-
-    def _process_once(self, batch_df: DataFrame, batch_id: int):
-        parsed = (
-            self.record_parser(batch_df)
-            if self.record_parser is not None
-            else batch_df
-        )
-        batch_ids = (
-            parsed.select(F.col(self.id_col).alias("__bid")).distinct()
-        )
-        pairs = self.index.add_and_find_dups(
-            parsed,
-            id_col=self.id_col,
-            vec_col=self.vec_col,
-            source_id=self.source_id,
-            batch_id=batch_id,
-        )
-        a_new = batch_ids.select(
-            F.col("__bid").alias("id_a"), F.lit(True).alias("__a_new")
-        )
-        b_new = batch_ids.select(
-            F.col("__bid").alias("id_b"), F.lit(True).alias("__b_new")
-        )
-        marked = (
-            pairs.join(F.broadcast(a_new), "id_a", "left")
-            .join(F.broadcast(b_new), "id_b", "left")
-            .select(
-                "id_a",
-                "id_b",
-                "cos_sim",
-                F.when(
-                    F.coalesce(F.col("__a_new"), F.lit(False))
-                    & F.coalesce(F.col("__b_new"), F.lit(False)),
-                    F.greatest("id_a", "id_b"),
-                )
-                .when(
-                    F.coalesce(F.col("__a_new"), F.lit(False)),
-                    F.col("id_a"),
-                )
-                .otherwise(F.col("id_b"))
-                .alias("drop_doc"),
-                F.lit(batch_id).cast("long").alias("batch_id"),
-            )
-        )
-        pt = self.pairs_table.refresh()
-        skipped = batch_id <= pt.applied_batch(self.source_id)
-        if skipped:
-            n_pairs = 0
-        else:
+            # count + append in one pass over a batch-sized frame
             rows = marked.localCheckpoint(eager=True)
             n_pairs = rows.count()
             pt.commit_append(
@@ -392,30 +213,58 @@ class EmbDedupStreamRunner:
         return marked
 
     def dup_doc_ids(self) -> DataFrame:
+        """Distinct records that lost at least one pair — the
+        corpus-wide drop list (LEFT ANTI this against the corpus for
+        the keep list)."""
         return (
             self.pairs_table.refresh().read().select("drop_doc").distinct()
         )
 
-    def start(
-        self,
-        stream_df: DataFrame,
-        available_now: bool = True,
-        processing_time: str | None = None,
-    ) -> StreamingQuery:
-        writer = stream_df.writeStream.foreachBatch(
-            lambda df, bid: self.process_batch(df, bid)
-        ).option("checkpointLocation", self.checkpoint_dir)
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        elif processing_time:
-            writer = writer.trigger(processingTime=processing_time)
-        return writer.start()
 
-    def run_available(self, stream_df: DataFrame, timeout_s: float = 600):
-        q = self.start(stream_df, available_now=True)
-        q.awaitTermination(timeout_s)
-        if q.isActive:
-            q.stop()
-        if q.exception() is not None:
-            raise q.exception()
-        return self.results
+class DedupStreamRunner(PairDedupStreamRunner):
+    """MinHash-LSH streaming dedup over
+    :class:`~..operators.incremental.MinHashDedupIndex`: pairs
+    ``(doc_a, doc_b, n_bands_shared)``."""
+
+    pair_cols = ("doc_a", "doc_b")
+    score_col = "n_bands_shared"
+    score_type = T.LongType()
+    payload_kw = "text_col"
+
+    def __init__(
+        self,
+        index: MinHashDedupIndex,
+        pairs_table: LakeTable,
+        checkpoint_dir: str,
+        source_id: str = "dedup-stream",
+        id_col: str = "doc_id",
+        text_col: str = "text",
+        record_parser=None,
+    ):
+        super().__init__(index, pairs_table, checkpoint_dir, source_id,
+                         id_col, text_col, record_parser)
+
+
+class EmbDedupStreamRunner(PairDedupStreamRunner):
+    """The semantic (embedding) sibling of :class:`DedupStreamRunner`
+    over :class:`~..operators.incremental.EmbeddingDedupIndex`: pairs
+    ``(id_a, id_b, cos_sim)``, cosine-verified, with the identical
+    exactly-once-across-two-tables contract and loser rule."""
+
+    pair_cols = ("id_a", "id_b")
+    score_col = "cos_sim"
+    score_type = T.DoubleType()
+    payload_kw = "vec_col"
+
+    def __init__(
+        self,
+        index,
+        pairs_table: LakeTable,
+        checkpoint_dir: str,
+        source_id: str = "emb-dedup-stream",
+        id_col: str = "vec_id",
+        vec_col: str = "embedding",
+        record_parser=None,
+    ):
+        super().__init__(index, pairs_table, checkpoint_dir, source_id,
+                         id_col, vec_col, record_parser)

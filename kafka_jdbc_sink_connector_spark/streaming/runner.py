@@ -1,12 +1,16 @@
-"""Structured Streaming runner: ``foreachBatch`` apply with bounded
+"""Structured Streaming runners: ``foreachBatch`` apply with bounded
 retry and exactly-once restart semantics.
 
 Maps the reference's task lifecycle (``JdbcAuditSinkTask.java``):
 
-* ``put(records)`` → ``foreachBatch(apply_batch)`` micro-batches,
+* ``put(records)`` → ``foreachBatch`` micro-batches driven by
+  :class:`ForeachBatchRunner`, the one ``start``/``run_available``
+  shell every runner (this module's and ``streaming/dedup.py``'s)
+  shares,
 * bounded retry with writer re-init + backoff
-  (``JdbcAuditSinkTask.java:82-120``) → in-process retry loop that
-  reloads the table handle between attempts; Spark's own
+  (``JdbcAuditSinkTask.java:82-120``) → :func:`retrying`, the one
+  retry loop every runner step goes through (each apply attempt loads
+  the table head afresh — the writer re-init analog); Spark's own
   restart-from-checkpoint covers process death,
 * offset commit after successful ``put`` → checkpoint commit after
   ``foreachBatch`` returns; a batch re-delivered after a crash hits
@@ -14,11 +18,17 @@ Maps the reference's task lifecycle (``JdbcAuditSinkTask.java``):
   end-to-end exactly-once,
 * topic→table routing (``JdbcAuditDbWriter.java:100-110``) →
   :class:`MultiTableRunner` splitting each micro-batch by topic.
+
+Retry budgets: a step owned by one applier retries on that applier's
+``cfg.max_retries``/``cfg.retry_backoff_ms``; steps no single applier
+owns (the multi-table parse and followers, the pair-dedup batch body)
+use :data:`RETRIES` x :data:`RETRY_BACKOFF_S`.
 """
 
 from __future__ import annotations
 
 import json
+import logging
 import os
 import time
 
@@ -35,14 +45,88 @@ from kafka_jdbc_sink_connector_spark.operators.validate import (
     MissingRetainFieldError,
 )
 
+log = logging.getLogger(__name__)
+
 #: deterministic failures — retrying replays the identical input
 #: through the identical code, so fail fast instead of burning the
 #: retry budget (the reference's RetriableException is reserved for
 #: transient SQL/connection errors, JdbcAuditSinkTask.java:96-103)
 NON_RETRIABLE = (ConfigError, SchemaEvolutionError, MissingRetainFieldError)
 
+#: retry budget for steps that no single applier's config owns
+RETRIES = 3
+RETRY_BACKOFF_S = 0.5
 
-class CdcStreamRunner:
+
+def retrying(fn, attempts: int, backoff_s: float):
+    """Return ``fn()``, calling it up to ``attempts`` times with
+    ``backoff_s`` between calls. :data:`NON_RETRIABLE` errors raise at
+    once; the last attempt's error raises as is; every swallowed error
+    is logged at WARNING with its attempt number and traceback."""
+    if attempts < 1:
+        raise ValueError(f"attempts must be >= 1, got {attempts}")
+    for attempt in range(1, attempts + 1):
+        try:
+            return fn()
+        except NON_RETRIABLE:
+            raise
+        except Exception as e:  # noqa: BLE001 — mirror catch(SQLException)
+            if attempt >= attempts:
+                raise
+            log.warning(
+                "%s: attempt %d/%d failed, retrying in %.3fs: %r",
+                getattr(fn, "__qualname__", fn), attempt, attempts,
+                backoff_s, e, exc_info=True,
+            )
+            time.sleep(backoff_s)
+
+
+class ForeachBatchRunner:
+    """The ``foreachBatch`` shell shared by every runner: checkpoint
+    location, source id for the exactly-once watermarks, the optional
+    ``record_parser`` hook, the ``results`` log, and ``start`` /
+    ``run_available``. Subclasses implement ``process_batch(batch_df,
+    batch_id)``; ``start`` dispatches through ``self.process_batch`` so
+    a wrapper installed on the class sees every micro-batch."""
+
+    def __init__(self, checkpoint_dir: str, source_id: str, record_parser=None):
+        self.checkpoint_dir = checkpoint_dir
+        self.source_id = source_id
+        self.record_parser = record_parser
+        self.results: list = []
+
+    def parse(self, batch_df: DataFrame) -> DataFrame:
+        if self.record_parser is None:
+            return batch_df
+        return self.record_parser(batch_df)
+
+    def start(
+        self,
+        stream_df: DataFrame,
+        available_now: bool = True,
+        processing_time: str | None = None,
+    ) -> StreamingQuery:
+        writer = stream_df.writeStream.foreachBatch(
+            lambda df, bid: self.process_batch(df, bid)
+        ).option("checkpointLocation", self.checkpoint_dir)
+        if available_now:
+            writer = writer.trigger(availableNow=True)
+        elif processing_time:
+            writer = writer.trigger(processingTime=processing_time)
+        return writer.start()
+
+    def run_available(self, stream_df: DataFrame, timeout_s: float = 600) -> list:
+        """Process everything currently available, then stop."""
+        q = self.start(stream_df, available_now=True)
+        q.awaitTermination(timeout_s)
+        if q.isActive:
+            q.stop()
+        if q.exception() is not None:
+            raise q.exception()
+        return self.results
+
+
+class CdcStreamRunner(ForeachBatchRunner):
     """Drives one streaming source into one destination table.
 
     ``record_parser`` is the engine-plumbed analog of the reference's
@@ -64,7 +148,7 @@ class CdcStreamRunner:
         )
         runner.start(kafka_stream(spark, brokers, topic))
 
-    The parser runs inside the bounded retry loop, so a transiently
+    The parser runs inside the retried apply, so a transiently
     unreachable registry gets the runner's backoff on top of the HTTP
     client's own retries.
 
@@ -90,12 +174,9 @@ class CdcStreamRunner:
         maintenance_every_batches: int | None = None,
         maintenance_kwargs: dict | None = None,
     ):
+        super().__init__(checkpoint_dir, source_id, record_parser)
         self.applier = applier
-        self.checkpoint_dir = checkpoint_dir
-        self.source_id = source_id
-        self.record_parser = record_parser
         self.followers = list(followers or [])
-        self.results: list[BatchResult] = []
         #: stats-driven maintenance cadence: every N batches run
         #: ``lake.maintenance.plan(table, execute=True, **kwargs)`` —
         #: the policy decides WHETHER anything (compact / cluster /
@@ -110,59 +191,30 @@ class CdcStreamRunner:
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> BatchResult:
         cfg = self.applier.cfg
         attempts = cfg.max_retries + 1
-        last_err: Exception | None = None
-        res: BatchResult | None = None
-        for attempt in range(attempts):
-            try:
-                parsed = (
-                    self.record_parser(batch_df)
-                    if self.record_parser is not None
-                    else batch_df
-                )
-                res = self.applier.apply_batch(
-                    parsed, batch_id=batch_id, source_id=self.source_id
-                )
-                self.results.append(res)
-                break
-            except NON_RETRIABLE:
-                raise
-            except Exception as e:  # noqa: BLE001 — mirror catch(SQLException)
-                last_err = e
-                if attempt < attempts - 1:
-                    # writer re-init analog: drop cached handle, backoff
-                    time.sleep(cfg.retry_backoff_ms / 1000.0)
-        if res is None:
-            assert last_err is not None
-            raise last_err
+        backoff_s = cfg.retry_backoff_ms / 1000.0
+
+        def parse_and_apply() -> BatchResult:
+            return self.applier.apply_batch(
+                self.parse(batch_df), batch_id=batch_id, source_id=self.source_id
+            )
+
+        res = retrying(parse_and_apply, attempts, backoff_s)
+        self.results.append(res)
+
         # compaction runs OUTSIDE the retried apply: a failed compaction
-        # must not re-enter the loop (where the now-applied batch would
-        # be skipped and a duplicate skipped result appended) — it gets
-        # its own bounded retry, and the batch result stands either way
-        for attempt in range(attempts):
-            try:
-                self._maybe_compact(batch_id, skipped=res.skipped)
-                self._maybe_maintain(batch_id, skipped=res.skipped)
-                break
-            except NON_RETRIABLE:
-                raise
-            except Exception:  # noqa: BLE001
-                if attempt == attempts - 1:
-                    raise
-                time.sleep(cfg.retry_backoff_ms / 1000.0)
+        # must not re-enter the apply retry (where the now-applied batch
+        # would be skipped and a duplicate skipped result appended) — it
+        # gets its own bounded retry, and the batch result stands either way
+        def housekeeping() -> None:
+            self._maybe_compact(batch_id, skipped=res.skipped)
+            self._maybe_maintain(batch_id, skipped=res.skipped)
+
+        retrying(housekeeping, attempts, backoff_s)
         # followers (cascades) after the batch landed — same bounded
         # retry; their own upstream-version watermarks make a replayed
         # or crash-retried sync idempotent
         for follower in self.followers:
-            for attempt in range(attempts):
-                try:
-                    follower.sync()
-                    break
-                except NON_RETRIABLE:
-                    raise
-                except Exception:  # noqa: BLE001
-                    if attempt == attempts - 1:
-                        raise
-                    time.sleep(cfg.retry_backoff_ms / 1000.0)
+            retrying(follower.sync, attempts, backoff_s)
         return res
 
     def _maybe_compact(self, batch_id: int, skipped: bool) -> None:
@@ -244,33 +296,8 @@ class CdcStreamRunner:
             else None,
         }
 
-    def start(
-        self,
-        stream_df: DataFrame,
-        available_now: bool = True,
-        processing_time: str | None = None,
-    ) -> StreamingQuery:
-        writer = stream_df.writeStream.foreachBatch(
-            lambda df, bid: self.process_batch(df, bid)
-        ).option("checkpointLocation", self.checkpoint_dir)
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        elif processing_time:
-            writer = writer.trigger(processingTime=processing_time)
-        return writer.start()
 
-    def run_available(self, stream_df: DataFrame, timeout_s: float = 600) -> list[BatchResult]:
-        """Process everything currently available, then stop."""
-        q = self.start(stream_df, available_now=True)
-        q.awaitTermination(timeout_s)
-        if q.isActive:
-            q.stop()
-        if q.exception() is not None:
-            raise q.exception()
-        return self.results
-
-
-class MultiTableRunner:
+class MultiTableRunner(ForeachBatchRunner):
     """Routes one stream to many destination tables by a topic column
     (reference O3/O4: ``table.name.format`` + per-table buffers).
 
@@ -288,6 +315,9 @@ class MultiTableRunner:
     the partial batch, and the per-table watermarks make the restart
     replay converge (table A skips, table B applies) before the
     marker for that batch is finally published.
+
+    ``results`` holds one :class:`BatchResult` per routed table per
+    batch, in topic order.
     """
 
     def __init__(
@@ -297,29 +327,20 @@ class MultiTableRunner:
         topic_column: str = "topic",
         source_id: str = "stream",
         record_parser=None,
-        parse_max_retries: int = 3,
-        parse_backoff_ms: int = 500,
         followers: list | None = None,
         group_dir: str | None = None,
     ):
+        #: same converter-layer hook as CdcStreamRunner; the parser
+        #: must PRESERVE the topic column (parse_kafka_records:
+        #: keep_topic=True) or routing has nothing to split on. The
+        #: parse runs before any applier exists, so its retry uses the
+        #: module budget instead of a per-table cfg
+        super().__init__(checkpoint_dir, source_id, record_parser)
         #: topic -> CdcApplier, created lazily like the per-table
         #: BufferedRecords map (JdbcAuditDbWriter.java:63-83)
         self.appliers: dict[str, CdcApplier] = {}
         self.applier_factory = applier_factory
         self.topic_column = topic_column
-        self.checkpoint_dir = checkpoint_dir
-        self.source_id = source_id
-        #: same converter-layer hook as CdcStreamRunner; the parser
-        #: must PRESERVE the topic column (parse_kafka_records:
-        #: keep_topic=True) or routing has nothing to split on. The
-        #: parse runs before any applier exists, so its bounded retry
-        #: (same contract as CdcStreamRunner's in-loop parse — a
-        #: transiently unreachable registry gets backoff on top of the
-        #: HTTP client's own retries) takes its own knobs instead of a
-        #: per-table cfg
-        self.record_parser = record_parser
-        self.parse_max_retries = parse_max_retries
-        self.parse_backoff_ms = parse_backoff_ms
         #: same post-apply cascade hook as CdcStreamRunner.followers —
         #: run after EVERY table routed in the batch has applied (a
         #: follower may tail any of them; its own upstream-version
@@ -332,78 +353,57 @@ class MultiTableRunner:
         )
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if self.record_parser is not None:
-            attempts = self.parse_max_retries + 1
-            for attempt in range(attempts):
-                try:
-                    batch_df = self.record_parser(batch_df)
-                    break
-                except NON_RETRIABLE:
-                    raise
-                except Exception:  # noqa: BLE001 — transient registry/IO
-                    if attempt == attempts - 1:
-                        raise
-                    time.sleep(self.parse_backoff_ms / 1000.0)
+        parsed = retrying(
+            lambda: self.parse(batch_df), RETRIES + 1, RETRY_BACKOFF_S
+        )
         topics = [
             r[0]
-            for r in batch_df.select(self.topic_column).distinct().collect()
+            for r in parsed.select(self.topic_column).distinct().collect()
         ]
         for topic in sorted(topics):
             applier = self.appliers.get(topic)
             if applier is None:
                 applier = self.applier_factory(topic)
                 self.appliers[topic] = applier
-            sub = batch_df.filter(
+            sub = parsed.filter(
                 F.col(self.topic_column) == topic
             ).drop(self.topic_column)
             # same bounded retry as the single-table runner; a topic
             # that already applied this batch id skips via the
             # per-table watermark, so retrying after a partial failure
             # re-applies only the topics that didn't commit
-            attempts = applier.cfg.max_retries + 1
-            for attempt in range(attempts):
-                try:
-                    applier.apply_batch(
-                        sub, batch_id=batch_id, source_id=self.source_id
-                    )
-                    break
-                except NON_RETRIABLE:
-                    raise
-                except Exception:  # noqa: BLE001 — catch(SQLException) analog
-                    if attempt == attempts - 1:
-                        raise
-                    time.sleep(applier.cfg.retry_backoff_ms / 1000.0)
+            self.results.append(retrying(
+                lambda: applier.apply_batch(
+                    sub, batch_id=batch_id, source_id=self.source_id
+                ),
+                applier.cfg.max_retries + 1,
+                applier.cfg.retry_backoff_ms / 1000.0,
+            ))
         # every routed table committed — publish the batch's
         # consistency point (JdbcAuditDbWriter.java:84's commit)
         self._publish_group(batch_id)
         for follower in self.followers:
-            attempts = self.parse_max_retries + 1
-            for attempt in range(attempts):
-                try:
-                    follower.sync()
-                    break
-                except NON_RETRIABLE:
-                    raise
-                except Exception:  # noqa: BLE001
-                    if attempt == attempts - 1:
-                        raise
-                    time.sleep(self.parse_backoff_ms / 1000.0)
+            retrying(follower.sync, RETRIES + 1, RETRY_BACKOFF_S)
 
     # -- commit groups -------------------------------------------------
 
     def _group_path(self, batch_id: int) -> str:
         return os.path.join(self.group_dir, f"g{batch_id:020d}.json")
 
-    def latest_group_id(self) -> int | None:
-        """Highest batch id with a published commit-group marker."""
+    def _group_ids(self) -> list[int]:
+        """Batch ids of every published commit-group marker, ascending."""
         if not os.path.isdir(self.group_dir):
-            return None
-        ids = [
+            return []
+        return sorted(
             int(n[1:-5])
             for n in os.listdir(self.group_dir)
             if n.startswith("g") and n.endswith(".json")
-        ]
-        return max(ids) if ids else None
+        )
+
+    def latest_group_id(self) -> int | None:
+        """Highest batch id with a published commit-group marker."""
+        ids = self._group_ids()
+        return ids[-1] if ids else None
 
     def read_group(self, batch_id: int) -> dict:
         with open(self._group_path(batch_id)) as fh:
@@ -448,17 +448,10 @@ class MultiTableRunner:
         contract as time travel)."""
         if keep_groups < 1:
             raise ValueError("keep_groups must be >= 1")
-        if not os.path.isdir(self.group_dir):
-            return 0
-        names = sorted(
-            n for n in os.listdir(self.group_dir)
-            if n.startswith("g") and n.endswith(".json")
-        )
-        removed = 0
-        for n in names[: max(0, len(names) - keep_groups)]:
-            os.unlink(os.path.join(self.group_dir, n))
-            removed += 1
-        return removed
+        expired = self._group_ids()[:-keep_groups]
+        for gid in expired:
+            os.unlink(self._group_path(gid))
+        return len(expired)
 
     def read_consistent(
         self, spark, batch_id: int | None = None
@@ -483,11 +476,3 @@ class MultiTableRunner:
             )
             for topic, info in rec["tables"].items()
         }
-
-    def start(self, stream_df: DataFrame, available_now: bool = True) -> StreamingQuery:
-        writer = stream_df.writeStream.foreachBatch(
-            lambda df, bid: self.process_batch(df, bid)
-        ).option("checkpointLocation", self.checkpoint_dir)
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()

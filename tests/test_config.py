@@ -166,3 +166,14 @@ def test_from_connect_properties_delete_enabled():
         "delete.as.update.identifier": "op_type=D",
     })
     assert overridden.delete_mode.value == "update"
+
+
+def test_bad_aqe_min_partition_env_fails_at_session_build(monkeypatch):
+    """A malformed SPARK_GRAFT_AQE_MIN_PARTITION raises at
+    build_session, naming the variable — not later as a Spark conf
+    parse error inside the first query."""
+    from kafka_jdbc_sink_connector_spark.session import build_session
+
+    monkeypatch.setenv("SPARK_GRAFT_AQE_MIN_PARTITION", "64 kilobytes")
+    with pytest.raises(ConfigError, match="SPARK_GRAFT_AQE_MIN_PARTITION"):
+        build_session(app_name="bad-env")

@@ -3,10 +3,11 @@
 ``apply_batch`` produces durable side effects at FIVE points: the
 widen metadata commit, the quarantine write, the column-add evolution
 commit, the merge snapshot commit (which advances the exactly-once
-watermark), and the lineage write. A crash after ANY of them followed
-by a replay of the same batch from the checkpoint must converge to
-exactly the no-crash outcome — target rows, lineage (including
-snapshot versions), and quarantine rows. The round-5 widening-pin bug
+watermark), and the lineage write. A crash after ANY of them — or
+inside the lineage write, after its partition dir exists but before
+its part file does — followed by a replay of the same batch from the
+checkpoint must converge to exactly the no-crash outcome — target
+rows, lineage (including snapshot versions), and quarantine rows. The round-5 widening-pin bug
 showed each new commit type opens a new crash window; this sweep is
 parametrized over the boundary list so future commit types get
 coverage by adding one entry.
@@ -21,6 +22,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -40,6 +42,7 @@ BOUNDARIES = [
     "after_quarantine_write",
     "after_evolve_commit",
     "after_merge_commit",
+    "inside_lineage_write",
 ]
 
 
@@ -80,6 +83,13 @@ def _install_crash(monkeypatch, boundary: str) -> None:
             raise Boom(boundary)
 
         monkeypatch.setattr(apply_mod.merge_ops, "merge_into", wrap)
+    elif boundary == "inside_lineage_write":
+        # the lineage write dies after makedirs created its partition
+        # dir, before the part file is written and renamed into it
+        def wrap(*a, **k):
+            raise Boom(boundary)
+
+        monkeypatch.setattr(pq, "write_table", wrap)
     else:  # pragma: no cover
         raise ValueError(boundary)
 
@@ -188,7 +198,7 @@ def test_crash_replay_converges(
         audit_ts=audit_col(),
     )
     res = replayed.apply_batch(b1, batch_id=1)
-    if boundary == "after_merge_commit":
+    if boundary in ("after_merge_commit", "inside_lineage_write"):
         # watermark already advanced — replay must skip the merge and
         # only backfill the side tables
         assert res.skipped

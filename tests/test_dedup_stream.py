@@ -1,4 +1,5 @@
-"""Streaming incremental dedup (streaming/dedup.DedupStreamRunner).
+"""Streaming incremental dedup (streaming/dedup.DedupStreamRunner;
+the retry case also covers EmbDedupStreamRunner).
 
 Invariants under test:
 
@@ -183,10 +184,22 @@ def test_real_stream_matches_direct_batches(spark, docs, tmp_path):
     assert _pair_set(runner.pairs_table) == corpus
 
 
-def test_retry_then_success(spark, docs, tmp_path, monkeypatch):
+@pytest.mark.parametrize("kind", ["minhash", "emb"])
+def test_retry_then_success(spark, docs, tmp_path, monkeypatch, kind):
     """A transient failure inside the batch body consumes one retry
-    and the batch still lands exactly once."""
-    runner = _runner(spark, tmp_path)
+    and the batch still lands exactly once — for both pair-dedup
+    runners."""
+    if kind == "minhash":
+        make, pair_set = _runner, _pair_set
+        b0 = docs.filter(F.col("doc_id") < 40)
+    else:
+        from tests import test_emb_dedup_stream as emb_suite
+
+        make, pair_set = emb_suite._runner, emb_suite._pair_set
+        b0 = spark.read.parquet(
+            os.path.join(SF, "embeddings.parquet")
+        ).filter(F.col("vec_id") % 2 == 0)
+    runner = make(spark, tmp_path)
     real = runner.index.add_and_find_dups
     calls = {"n": 0}
 
@@ -197,9 +210,9 @@ def test_retry_then_success(spark, docs, tmp_path, monkeypatch):
         return real(*a, **kw)
 
     monkeypatch.setattr(runner.index, "add_and_find_dups", flaky)
-    b0 = docs.filter(F.col("doc_id") < 40)
     runner.process_batch(b0, 0)
     assert calls["n"] == 2
-    clean = _runner(spark, tmp_path / "clean")
+    assert len(runner.results) == 1  # the failed attempt left no result
+    clean = make(spark, tmp_path / "clean")
     clean.process_batch(b0, 0)
-    assert _pair_set(runner.pairs_table) == _pair_set(clean.pairs_table)
+    assert pair_set(runner.pairs_table) == pair_set(clean.pairs_table)

@@ -512,3 +512,37 @@ def test_multi_table_followers_cascade(spark, tmp_path):
             .select("conv_id", "turn_idx", "text").collect()
         }
         assert got == live and live
+
+
+def test_multi_table_follower_retry(spark, tmp_path):
+    """A follower whose sync fails transiently is retried on the
+    runner module's budget after the batch's commit-group marker is
+    published; the routed tables are not re-applied."""
+    from tests.test_apply_batch import _events_df, ev
+
+    class FlakyFollower:
+        calls = 0
+
+        def sync(self):
+            self.calls += 1
+            if self.calls == 1:
+                raise IOError("transient follower failure")
+
+    follower = FlakyFollower()
+    cfg = SinkConfig(n_buckets=2)
+    runner = MultiTableRunner(
+        lambda topic: CdcApplier(
+            spark, cfg, str(tmp_path / topic), audit_ts=audit_col()
+        ),
+        str(tmp_path / "ckpt"),
+        followers=[follower],
+    )
+    df = _events_df(
+        spark, [dict(ev(1, "c", "conv-a", 0), topic="t_a")],
+        with_optional=("topic",),
+    )
+    runner.process_batch(df, batch_id=0)
+    assert follower.calls == 2
+    assert runner.latest_group_id() == 0
+    assert [r.skipped for r in runner.results] == [False]
+    assert runner.appliers["t_a"].read_target().count() == 1
