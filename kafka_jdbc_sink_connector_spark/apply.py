@@ -610,10 +610,11 @@ class CdcApplier:
         ids (they grow one partition per micro-batch forever
         otherwise). Observability-only data — the exactly-once
         watermark lives in the table snapshot and is untouched. Safe
-        even inside the checkpoint replay window: the partition dir
-        doubles as the 'side tables committed' flag, so a replay of
-        an expired batch merely recomputes and rewrites its rows
-        (idempotent), it never double-applies."""
+        even inside the checkpoint replay window: the lineage
+        partition's ``part-0.parquet`` doubles as the 'side tables
+        committed' flag, so a replay of an expired batch merely
+        recomputes and rewrites its rows (idempotent), it never
+        double-applies."""
         if keep_batches < 0:
             raise ValueError("keep_batches must be >= 0")
         removed = {"lineage": 0, "quarantine": 0, "lineage_dlq": 0}

@@ -165,8 +165,6 @@ class SinkConfig:
     #: (bucketing hashes are type-sensitive). Connect property:
     #: ``auto.evolve.widen``.
     auto_evolve_widen: bool = False
-    #: salt factor for the two-phase dedup (0/1 = single-phase)
-    dedup_salt: int = 1
 
     # --- batching / retries (O5, O17) --------------------------------
     batch_size: int = 3000  # informational: micro-batch is the real unit
@@ -285,8 +283,6 @@ class SinkConfig:
             raise ConfigError("mor_compact_every_batches must be >= 1")
         if self.n_buckets < 1:
             raise ConfigError("n_buckets must be >= 1")
-        if self.dedup_salt < 0:
-            raise ConfigError("dedup_salt must be >= 0")
         overlap = set(self.delete_retain_fields) & set(self.pk_fields)
         if overlap:
             # keys are always written on insert and matched on delete;
@@ -360,7 +356,6 @@ class SinkConfig:
             "engine.n.buckets": ("n_buckets", int),
             "engine.mor.compact.every.batches":
                 ("mor_compact_every_batches", int),
-            "engine.dedup.salt": ("dedup_salt", int),
             "engine.op.column": ("op_column", str),
             "engine.op.delete.value": ("op_delete_value", str),
             "engine.op.insert.value": ("op_insert_value", str),

@@ -43,15 +43,15 @@ import re
 import shutil
 import time
 import uuid
-
-_DEBUG_TIMING = os.environ.get("SPARK_GRAFT_DEBUG_TIMING") == "1"
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kafka_jdbc_sink_connector_spark.functions.keys import BUCKET_COL, bucket_expr
+from kafka_jdbc_sink_connector_spark.lake import mor
+from kafka_jdbc_sink_connector_spark.lake import stats as stats_mod
 
 _LOG_DIR = "_log"
 _DATA_DIR = "data"
@@ -115,26 +115,183 @@ class Snapshot:
         return Snapshot(**d)
 
     def files(self, buckets: list[int] | None = None) -> list[str]:
-        if buckets is None:
-            return [f for fs in self.buckets.values() for f in fs]
-        return [f for b in buckets for f in self.buckets.get(str(b), [])]
+        return _pick(self.buckets, buckets)
 
     def delta_files(self, buckets: list[int] | None = None) -> list[str]:
-        if buckets is None:
-            return [f for fs in self.delta_buckets.values() for f in fs]
-        return [
-            f for b in buckets for f in self.delta_buckets.get(str(b), [])
-        ]
+        return _pick(self.delta_buckets, buckets)
 
     def sdel_files(self, buckets: list[int] | None = None) -> list[str]:
-        if buckets is None:
-            return [f for fs in self.sdel_buckets.values() for f in fs]
-        return [
-            f for b in buckets for f in self.sdel_buckets.get(str(b), [])
-        ]
+        return _pick(self.sdel_buckets, buckets)
 
     def all_files(self) -> list[str]:
         return self.files() + self.delta_files() + self.sdel_files()
+
+    def mor_bucket_ids(self) -> set[int]:
+        """Buckets carrying unresolved merge-on-read delta or sdel
+        files (reads resolve them; stats cannot answer for them)."""
+        return {
+            int(b) for lists in (self.delta_buckets, self.sdel_buckets)
+            for b, fs in lists.items() if fs
+        }
+
+
+def _pick(lists: dict[str, list[str]], buckets: list[int] | None) -> list[str]:
+    if buckets is None:
+        return [f for fs in lists.values() for f in fs]
+    return [f for b in buckets for f in lists.get(str(b), [])]
+
+
+@dataclass
+class _Edit:
+    """What one commit changes, independent of the head it lands on —
+    applied by :func:`_derive` to the head it was planned against and,
+    after a lost race, to the winner's head."""
+
+    schema: T.StructType
+    n_buckets: int
+    stats: dict
+    #: bucket id (str) -> files this commit adds to the base/delta/sdel
+    #: lists (appended after the head's files)
+    base: dict[str, list[str]] = field(default_factory=dict)
+    delta: dict[str, list[str]] = field(default_factory=dict)
+    sdel: dict[str, list[str]] = field(default_factory=dict)
+    #: copy-on-write: buckets whose base/delta/sdel lists this commit
+    #: replaces (a rewrite writes the buckets' *resolved* contents, so
+    #: their delta/sdel files are folded in and dropped)
+    replaces: list[int] | None = None
+    #: merge-on-read resolution spec a delta commit publishes; None
+    #: keeps the head's (and marks a non-delta commit)
+    mor_meta: dict | None = None
+    #: table properties; None keeps the head's
+    props: dict | None = None
+    source_id: str | None = None
+    batch_id: int | None = None
+    #: footer stats of the files in ``base``, harvested once before
+    #: the first publish attempt
+    file_stats: dict = field(default_factory=dict)
+
+    @property
+    def kind(self) -> str:
+        if self.mor_meta is not None:
+            return "delta"
+        return "append" if self.replaces is None else "rewrite"
+
+
+def _derive(head: Snapshot, edit: _Edit) -> Snapshot:
+    """The snapshot that publishes ``edit`` on top of ``head``: its
+    bucket-list edits, the exactly-once watermark ``max``, and the
+    file stats of every base file still referenced plus the edit's
+    own."""
+    lists = [
+        {b: list(fs) for b, fs in m.items()}
+        for m in (head.buckets, head.delta_buckets, head.sdel_buckets)
+    ]
+    for b in edit.replaces or ():
+        for m in lists:
+            m.pop(str(b), None)
+    for m, added in zip(lists, (edit.base, edit.delta, edit.sdel)):
+        for b, fs in added.items():
+            m.setdefault(b, []).extend(fs)
+    buckets, delta_buckets, sdel_buckets = lists
+    applied = dict(head.applied_batches)
+    if edit.source_id is not None and edit.batch_id is not None:
+        applied[edit.source_id] = max(
+            edit.batch_id, applied.get(edit.source_id, -1)
+        )
+    referenced = {f for fs in buckets.values() for f in fs}
+    file_stats = {
+        f: s for f, s in head.file_stats.items() if f in referenced
+    }
+    file_stats.update(edit.file_stats)
+    return replace(
+        head,
+        version=head.version + 1,
+        parent=head.version,
+        schema=edit.schema,
+        n_buckets=edit.n_buckets,
+        key_fields=list(head.key_fields),
+        buckets=buckets,
+        delta_buckets=delta_buckets,
+        sdel_buckets=sdel_buckets,
+        applied_batches=applied,
+        stats=dict(edit.stats),
+        mor_meta=dict(head.mor_meta if edit.mor_meta is None else edit.mor_meta),
+        props=dict(head.props if edit.props is None else edit.props),
+        file_stats=file_stats,
+        commit_ts=None,
+    )
+
+
+def _rebase(latest: Snapshot, base: Snapshot, edit: _Edit) -> None:
+    """Decide whether a commit planned against ``base`` that lost the
+    publish race to ``latest`` may be re-published on top of it,
+    reusing its written files; raise :class:`CommitConflict` if not
+    (the caller refreshes and redoes the batch from current state —
+    the conservative Iceberg ``validate*`` posture):
+
+    * any schema change on either side declines — evolution must
+      re-read the head to re-plan coercion;
+    * table layout (bucket count/key, pk) must be unchanged;
+    * exactly-once: if the head already applied our (source, batch),
+      re-publishing would double-apply it — decline and let the
+      caller's watermark check skip the batch;
+    * an append is always rebasable — new files are additive no
+      matter what the concurrent commits did;
+    * a delta commit is rebasable only if the delta/sdel file lists
+      are untouched between base and head — a concurrent delta commit
+      would interleave with our files' stamped ``__seq`` (which must
+      stay unique and correctly ordered in the resolution sequence),
+      and a concurrent compaction folds the lists our commit was
+      planned from; concurrent pure appends are fine (deltas resolve
+      over base rows regardless of commit order);
+    * a rewrite is rebasable only if no concurrent commit touched the
+      rewritten buckets' base/delta/sdel lists — a rewrite folds those
+      buckets' state, so any concurrent change to them would be
+      silently lost.
+    """
+
+    def decline(why: str):
+        raise CommitConflict(
+            f"cannot rebase {edit.kind} commit onto version "
+            f"{latest.version}: {why}"
+        )
+
+    def layout(s: Snapshot) -> tuple:
+        return s.n_buckets, s.bucket_key, list(s.key_fields)
+
+    if latest.schema != base.schema:
+        decline("a concurrent commit changed the table schema")
+    if edit.schema != base.schema:
+        decline("this commit changes the schema; refresh and re-plan")
+    if layout(latest) != layout(base):
+        decline("a concurrent commit changed the table layout")
+    if edit.n_buckets != base.n_buckets:
+        decline("this commit changes the table layout (rebucket); "
+                "refresh and re-plan")
+    if (
+        edit.source_id is not None
+        and edit.batch_id is not None
+        and latest.applied_batches.get(edit.source_id, -1) >= edit.batch_id
+    ):
+        decline(
+            f"batch {edit.batch_id} from source {edit.source_id!r} was "
+            f"already applied by a concurrent writer (exactly-once)"
+        )
+    if edit.mor_meta is not None and (
+        latest.delta_buckets != base.delta_buckets
+        or latest.sdel_buckets != base.sdel_buckets
+    ):
+        decline(
+            "concurrent delta/sdel commits would interleave the "
+            "__seq resolution order"
+        )
+    for bi in edit.replaces or ():
+        b = str(bi)
+        if any(
+            getattr(latest, m).get(b) != getattr(base, m).get(b)
+            for m in ("buckets", "delta_buckets", "sdel_buckets")
+        ):
+            decline(f"a concurrent commit touched rewritten bucket {b}")
 
 
 class LakeTable:
@@ -142,7 +299,7 @@ class LakeTable:
 
     #: optimistic-concurrency retry budget: on a lost publish race the
     #: writer re-reads the winner's snapshot, validates no semantic
-    #: conflict (see :meth:`_rebase`), and re-publishes its
+    #: conflict (see :func:`_rebase`), and re-publishes its
     #: already-written files against the new head — the Delta/Iceberg
     #: commit-retry protocol. 0 disables rebasing (the first conflict
     #: raises, pre-round-6 behavior).
@@ -249,38 +406,47 @@ class LakeTable:
         base-row columns, so every base row must be present); run
         compaction to restore skippability there.
         """
-        from kafka_jdbc_sink_connector_spark.lake import stats as stats_mod
-
         snap = self.snapshot if version is None else self._read_version(version)
-        if not snap.delta_files(buckets) and not snap.sdel_files(buckets):
-            df = self._read_base(snap, buckets, where=where)
-        else:
-            from kafka_jdbc_sink_connector_spark.lake import mor
+        base_schema = T.StructType(
+            list(snap.schema.fields)
+            + [T.StructField(BUCKET_COL, T.IntegerType(), True)]
+        )
 
-            # only buckets that actually carry deltas (pk deltas or
-            # subset-delete overlays) pay the resolve join; the rest
-            # are a plain parquet scan unioned in
-            requested = (
-                list(range(snap.n_buckets)) if buckets is None else buckets
-            )
-            delta_ids = {
-                int(b) for b, fs in snap.delta_buckets.items() if fs
-            } | {int(b) for b, fs in snap.sdel_buckets.items() if fs}
-            hot = [b for b in requested if b in delta_ids]
-            cold = [b for b in requested if b not in delta_ids]
-            has_sdel = bool(snap.sdel_files(hot))
+        def base(bs: list[int] | None, pred=None) -> DataFrame:
+            rel = snap.files(bs)
+            if pred is not None and snap.file_stats:
+                rel = stats_mod.prune_files(snap.file_stats, rel, pred)
+            return self._scan(rel, base_schema)
+
+        # only buckets that actually carry deltas (pk deltas or
+        # subset-delete overlays) pay the resolve join; the rest are a
+        # plain parquet scan unioned in
+        hot_ids = snap.mor_bucket_ids()
+        requested = range(snap.n_buckets) if buckets is None else buckets
+        hot = [b for b in requested if b in hot_ids]
+        if not hot:
+            df = base(buckets, where)
+        else:
+            cold = [b for b in requested if b not in hot_ids]
+            sdels = snap.sdel_files(hot)
             df = mor.resolve(
-                self._read_base(snap, hot),
-                self._read_deltas(snap, hot),
+                base(hot),
+                self._scan(snap.delta_files(hot),
+                           mor.delta_schema(snap.schema, snap.key_fields)),
                 snap,
-                carry_pos=has_sdel,
+                carry_pos=bool(sdels),
             )
-            if has_sdel:
+            if sdels:
                 df = mor.apply_subset_overlays(
-                    df, self._read_sdels(snap, hot), snap
+                    df,
+                    self._scan(sdels, mor.sdel_schema(
+                        snap.schema, snap.key_fields,
+                        list(snap.mor_meta.get("sdel_key") or []),
+                    )),
+                    snap,
                 )
             if cold:
-                df = df.unionByName(self._read_base(snap, cold, where=where))
+                df = df.unionByName(base(cold, where))
         if where is not None:
             df = df.filter(stats_mod.predicate_column(where))
         return df if include_bucket else df.drop(BUCKET_COL)
@@ -302,12 +468,8 @@ class LakeTable:
         "rows since T" count over a time-clustered table touches ~one
         boundary file per bucket instead of the table.
         """
-        from kafka_jdbc_sink_connector_spark.lake import stats as stats_mod
-
         snap = self.snapshot
-        delta_ids = {
-            int(b) for b, fs in snap.delta_buckets.items() if fs
-        } | {int(b) for b, fs in snap.sdel_buckets.items() if fs}
+        delta_ids = snap.mor_bucket_ids()
         total = 0
         if delta_ids:
             hot = sorted(delta_ids)
@@ -325,9 +487,7 @@ class LakeTable:
                 partial.append(f)
             # else: proven empty under the predicate — skip
         if partial:
-            df = self.spark.read.schema(snap.schema).parquet(
-                *[os.path.join(self.path, f) for f in partial]
-            )
+            df = self._scan(partial, snap.schema)
             if where is not None:
                 df = df.filter(stats_mod.predicate_column(where))
             total += df.count()
@@ -343,12 +503,8 @@ class LakeTable:
         — are scanned, in ONE job for all requested columns. On a
         time-clustered 100 TB table, "newest event ts" is pure
         metadata."""
-        from kafka_jdbc_sink_connector_spark.lake import stats as stats_mod
-
         snap = self.snapshot
-        delta_ids = {
-            int(b) for b, fs in snap.delta_buckets.items() if fs
-        } | {int(b) for b, fs in snap.sdel_buckets.items() if fs}
+        delta_ids = snap.mor_bucket_ids()
         cold = [b for b in range(snap.n_buckets) if b not in delta_ids]
         out: dict[str, tuple] = {}
         scan_files: set[str] = set()
@@ -363,11 +519,7 @@ class LakeTable:
         # result — one aggregate over the union handles all columns
         frames = []
         if scan_files:
-            frames.append(
-                self.spark.read.schema(snap.schema).parquet(
-                    *[os.path.join(self.path, f) for f in sorted(scan_files)]
-                )
-            )
+            frames.append(self._scan(sorted(scan_files), snap.schema))
         if delta_ids:
             frames.append(
                 self.read(buckets=sorted(delta_ids)).select(
@@ -399,50 +551,14 @@ class LakeTable:
                 )
         return out
 
-    def _read_base(
-        self,
-        snap: Snapshot,
-        buckets: list[int] | None,
-        where: list[tuple] | None = None,
-    ) -> DataFrame:
-        rel = snap.files(buckets)
-        if where is not None and snap.file_stats:
-            from kafka_jdbc_sink_connector_spark.lake import stats as stats_mod
-
-            rel = stats_mod.prune_files(snap.file_stats, rel, where)
-        files = [os.path.join(self.path, f) for f in rel]
-        schema = T.StructType(
-            list(snap.schema.fields)
-            + [T.StructField(BUCKET_COL, T.IntegerType(), True)]
+    def _scan(self, files: list[str], schema: T.StructType) -> DataFrame:
+        """Parquet scan of table-relative ``files`` under ``schema``;
+        an empty list yields an empty frame."""
+        if not files:
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(
+            *[os.path.join(self.path, f) for f in files]
         )
-        if not files:
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(*files)
-
-    def _read_deltas(
-        self, snap: Snapshot, buckets: list[int] | None
-    ) -> DataFrame:
-        from kafka_jdbc_sink_connector_spark.lake import mor
-
-        files = [os.path.join(self.path, f) for f in snap.delta_files(buckets)]
-        schema = mor.delta_schema(snap.schema, snap.key_fields)
-        if not files:
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(*files)
-
-    def _read_sdels(
-        self, snap: Snapshot, buckets: list[int] | None
-    ) -> DataFrame:
-        from kafka_jdbc_sink_connector_spark.lake import mor
-
-        files = [os.path.join(self.path, f) for f in snap.sdel_files(buckets)]
-        schema = mor.sdel_schema(
-            snap.schema, snap.key_fields,
-            list(snap.mor_meta.get("sdel_key") or []),
-        )
-        if not files:
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(*files)
 
     def history(self) -> list[int]:
         log = os.path.join(self.path, _LOG_DIR)
@@ -536,7 +652,6 @@ class LakeTable:
         source_id: str | None = None,
         batch_id: int | None = None,
         stats: dict | None = None,
-        collect_stats: bool = True,
         preserve_layout: bool = False,
         new_n_buckets: int | None = None,
     ) -> Snapshot:
@@ -544,12 +659,10 @@ class LakeTable:
         contents of ``new_data`` (which must carry ``__bucket`` and only
         rows belonging to those buckets); all other buckets carry over
         untouched. Optionally evolves the schema and records a batch id
-        for exactly-once.
-
-        ``collect_stats`` harvests footer min/max stats for the
-        written files into the snapshot (data skipping,
-        :mod:`.stats`) — a metadata-only read of this commit's own
-        files, like the Delta/Iceberg writer's stats collection.
+        for exactly-once. Footer min/max stats of the written files are
+        harvested into the snapshot (data skipping, :mod:`.stats`) — a
+        metadata-only read of this commit's own files, like the
+        Delta/Iceberg writer's stats collection.
 
         ``preserve_layout`` skips the default one-partition-per-bucket
         repartition and writes the caller's partitioning as-is — the
@@ -566,109 +679,40 @@ class LakeTable:
         snap = self.snapshot
         schema = new_schema or snap.schema
         n_buckets = snap.n_buckets
+        valid_ids = set(rewrite_buckets)
         if new_n_buckets is not None:
-            if set(rewrite_buckets) != set(range(snap.n_buckets)):
+            if valid_ids != set(range(snap.n_buckets)):
                 raise ValueError(
                     "changing n_buckets requires rewriting every bucket "
                     f"(got {sorted(rewrite_buckets)} of "
                     f"{snap.n_buckets})"
                 )
             n_buckets = new_n_buckets
-        version = snap.version + 1
-        commit_name = f"commit-{version:010d}-{uuid.uuid4().hex[:8]}"
-        out_dir = os.path.join(self.path, _DATA_DIR, commit_name)
+            valid_ids = set(range(n_buckets))
+        name = self._new_dir("commit")
 
-        out_cols = [f.name for f in schema.fields] + [BUCKET_COL]
-        _t0 = time.monotonic()
-        # NOTE measured non-win: sortWithinPartitions(bucket, pk) before
-        # the write changed written bytes by 0 (dictionary encoding
-        # already absorbs repeated keys regardless of row order) and
-        # showed no reproducible speed effect on this host — keep the
-        # write unsorted and let the merge join's ordering fall where
-        # it may
-        arranged = new_data.withColumn(
-            _PART_DIR_COL, F.col(BUCKET_COL)
-        ).select(*out_cols, _PART_DIR_COL)
-        if not preserve_layout:
-            # pin the partition count to the bucket count: an AQE-
-            # coalescible repartition(col) collapses a small commit to
-            # ONE task that then writes every bucket's file SERIALLY —
-            # per-file writer overhead (open/zstd/footer/commit) is
-            # invisible to AQE's byte-based sizing and measured ~1 s
-            # per micro-batch. One writer task per bucket is the
-            # natural layout at any scale (file count is fixed by the
-            # bucket contract either way).
-            arranged = arranged.repartition(n_buckets, F.col(BUCKET_COL))
-        arranged.write.partitionBy(_PART_DIR_COL).parquet(out_dir)
-        if _DEBUG_TIMING:
-            print(f"    [timing] rewrite data write: "
-                  f"{time.monotonic() - _t0:.2f}s", flush=True)
+        def build() -> _Edit:
+            # NOTE measured non-win: sortWithinPartitions(bucket, pk)
+            # before the write changed written bytes by 0 (dictionary
+            # encoding already absorbs repeated keys regardless of row
+            # order) and showed no reproducible speed effect
+            written = self._write_bucketed(
+                new_data.select(*schema.fieldNames(), BUCKET_COL), name,
+                None if preserve_layout else n_buckets,
+            )
+            for b in written:
+                if int(b) not in valid_ids:
+                    raise ValueError(
+                        f"new_data contained rows for bucket {b} which is "
+                        f"not in rewrite_buckets={rewrite_buckets}"
+                    )
+            return _Edit(
+                schema=schema, n_buckets=n_buckets, stats=stats or {},
+                base=written, replaces=list(rewrite_buckets),
+                source_id=source_id, batch_id=batch_id,
+            )
 
-        # map written files back to buckets from the directory layout
-        written: dict[str, list[str]] = {}
-        for name in os.listdir(out_dir):
-            if not name.startswith(f"{_PART_DIR_COL}="):
-                continue
-            b = name.split("=", 1)[1]
-            files = [
-                os.path.join(_DATA_DIR, commit_name, name, f)
-                for f in os.listdir(os.path.join(out_dir, name))
-                if f.endswith(".parquet")
-            ]
-            written[b] = sorted(files)
-
-        buckets = dict(snap.buckets)
-        # a rewrite replaces the bucket's *resolved* contents, so its
-        # delta/sdel files are folded in and dropped from the new
-        # snapshot (callers obtain new_data via read(), which resolves)
-        delta_buckets = dict(snap.delta_buckets)
-        sdel_buckets = dict(snap.sdel_buckets)
-        for b in rewrite_buckets:
-            buckets.pop(str(b), None)
-            delta_buckets.pop(str(b), None)
-            sdel_buckets.pop(str(b), None)
-        valid_ids = (
-            set(range(n_buckets)) if new_n_buckets is not None
-            else set(rewrite_buckets)
-        )
-        for b, files in written.items():
-            if int(b) not in valid_ids:
-                raise ValueError(
-                    f"new_data contained rows for bucket {b} which is not "
-                    f"in rewrite_buckets={rewrite_buckets}"
-                )
-            buckets[b] = files
-
-        applied = dict(snap.applied_batches)
-        if source_id is not None and batch_id is not None:
-            applied[source_id] = max(batch_id, applied.get(source_id, -1))
-
-        new_snap = Snapshot(
-            version=version,
-            schema=schema,
-            n_buckets=n_buckets,
-            key_fields=snap.key_fields,
-            bucket_key=snap.bucket_key,
-            buckets=buckets,
-            applied_batches=applied,
-            stats=stats or {},
-            parent=snap.version,
-            delta_buckets=delta_buckets,
-            sdel_buckets=sdel_buckets,
-            mor_meta=dict(snap.mor_meta),
-            props=dict(snap.props),
-            file_stats=self._carry_file_stats(
-                snap, buckets,
-                [f for fs in written.values() for f in fs]
-                if collect_stats else None,
-            ),
-        )
-        return self._publish_rebasing(
-            new_snap, base=snap, kind="rewrite", added_base=written,
-            rewrite_buckets=list(rewrite_buckets),
-            cleanup_dirs=(out_dir,),
-            source_id=source_id, batch_id=batch_id,
-        )
+        return self._commit(build, name)
 
     def commit_append(
         self,
@@ -677,66 +721,20 @@ class LakeTable:
         source_id: str | None = None,
         batch_id: int | None = None,
         stats: dict | None = None,
-        collect_stats: bool = True,
     ) -> Snapshot:
         """Append-only commit: new files are *added* to their buckets,
         existing files are untouched (no copy-on-write)."""
         snap = self.snapshot
         schema = new_schema or snap.schema
-        version = snap.version + 1
-        commit_name = f"commit-{version:010d}-{uuid.uuid4().hex[:8]}"
-        out_dir = os.path.join(self.path, _DATA_DIR, commit_name)
-        out_cols = [f.name for f in schema.fields] + [BUCKET_COL]
-        (
-            new_data.withColumn(_PART_DIR_COL, F.col(BUCKET_COL))
-            .select(*out_cols, _PART_DIR_COL)
-            # pinned count: see commit_rewrite — avoids the serial
-            # one-task many-files write on small appends
-            .repartition(snap.n_buckets, F.col(BUCKET_COL))
-            .write.partitionBy(_PART_DIR_COL)
-            .parquet(out_dir)
-        )
-        buckets = {b: list(fs) for b, fs in snap.buckets.items()}
-        added: dict[str, list[str]] = {}
-        new_files: list[str] = []
-        for name in os.listdir(out_dir):
-            if not name.startswith(f"{_PART_DIR_COL}="):
-                continue
-            b = name.split("=", 1)[1]
-            files = sorted(
-                os.path.join(_DATA_DIR, commit_name, name, f)
-                for f in os.listdir(os.path.join(out_dir, name))
-                if f.endswith(".parquet")
-            )
-            added[b] = files
-            buckets.setdefault(b, []).extend(files)
-            new_files.extend(files)
-        applied = dict(snap.applied_batches)
-        if source_id is not None and batch_id is not None:
-            applied[source_id] = max(batch_id, applied.get(source_id, -1))
-        new_snap = Snapshot(
-            version=version,
-            schema=schema,
-            n_buckets=snap.n_buckets,
-            key_fields=snap.key_fields,
-            bucket_key=snap.bucket_key,
-            buckets=buckets,
-            applied_batches=applied,
-            stats=stats or {},
-            parent=snap.version,
-            delta_buckets=dict(snap.delta_buckets),
-            sdel_buckets=dict(snap.sdel_buckets),
-            mor_meta=dict(snap.mor_meta),
-            props=dict(snap.props),
-            file_stats=self._carry_file_stats(
-                snap, buckets, new_files if collect_stats else None
+        name = self._new_dir("commit")
+        return self._commit(lambda: _Edit(
+            schema=schema, n_buckets=snap.n_buckets, stats=stats or {},
+            base=self._write_bucketed(
+                new_data.select(*schema.fieldNames(), BUCKET_COL), name,
+                snap.n_buckets,
             ),
-        )
-        return self._publish_rebasing(
-            new_snap, base=snap, kind="append", added_base=added,
-            cleanup_dirs=(out_dir,),
             source_id=source_id, batch_id=batch_id,
-        )
+        ), name)
 
     def commit_delta(
         self,
@@ -756,82 +754,21 @@ class LakeTable:
         order). ``sdel_rows`` (subset-key delete lists, same minus
         ``__seq``) commit alongside under the same version."""
         snap = self.snapshot
-        schema = new_schema or snap.schema
-        version = snap.version + 1
-        commit_name = f"delta-{version:010d}-{uuid.uuid4().hex[:8]}"
-        out_dir = os.path.join(self.path, _DATA_DIR, commit_name)
+        name = self._new_dir("delta")
+        sdel_name = f"s{name}"
 
-        def _write_bucketed(rows: DataFrame, dest: str) -> dict[str, list[str]]:
-            (
-                rows.withColumn("__seq", F.lit(version).cast("long"))
-                .withColumn(_PART_DIR_COL, F.col(BUCKET_COL))
-                # pinned count: see commit_rewrite — a delta batch is
-                # small by design, and AQE would coalesce the write to
-                # one task that writes every touched bucket's delta
-                # file serially
-                .repartition(snap.n_buckets, F.col(BUCKET_COL))
-                .write.partitionBy(_PART_DIR_COL)
-                .parquet(dest)
+        def write(rows: DataFrame, dir_name: str) -> dict[str, list[str]]:
+            seq = F.lit(snap.version + 1).cast("long")
+            return self._write_bucketed(
+                rows.withColumn("__seq", seq), dir_name, snap.n_buckets
             )
-            written: dict[str, list[str]] = {}
-            rel_base = os.path.relpath(dest, self.path)
-            for name in os.listdir(dest):
-                if not name.startswith(f"{_PART_DIR_COL}="):
-                    continue
-                b = name.split("=", 1)[1]
-                written[b] = sorted(
-                    os.path.join(rel_base, name, f)
-                    for f in os.listdir(os.path.join(dest, name))
-                    if f.endswith(".parquet")
-                )
-            return written
 
-        delta_buckets = {
-            b: list(fs) for b, fs in snap.delta_buckets.items()
-        }
-        added_delta = _write_bucketed(delta_rows, out_dir)
-        for b, files in added_delta.items():
-            delta_buckets.setdefault(b, []).extend(files)
-        sdel_buckets = {
-            b: list(fs) for b, fs in snap.sdel_buckets.items()
-        }
-        sdel_dir = None
-        added_sdel: dict[str, list[str]] = {}
-        if sdel_rows is not None:
-            sdel_dir = os.path.join(
-                self.path, _DATA_DIR, f"s{commit_name}"
-            )
-            added_sdel = _write_bucketed(sdel_rows, sdel_dir)
-            for b, files in added_sdel.items():
-                sdel_buckets.setdefault(b, []).extend(files)
-        applied = dict(snap.applied_batches)
-        if source_id is not None and batch_id is not None:
-            applied[source_id] = max(batch_id, applied.get(source_id, -1))
-        new_snap = Snapshot(
-            version=version,
-            schema=schema,
-            n_buckets=snap.n_buckets,
-            key_fields=snap.key_fields,
-            bucket_key=snap.bucket_key,
-            buckets=dict(snap.buckets),
-            applied_batches=applied,
-            stats=stats or {},
-            parent=snap.version,
-            delta_buckets=delta_buckets,
-            sdel_buckets=sdel_buckets,
-            mor_meta=mor_meta,
-            props=dict(snap.props),
-            # base files untouched: carry their stats verbatim (delta
-            # files are never file-pruned — see read()'s MOR note —
-            # so no stats are harvested for them)
-            file_stats=dict(snap.file_stats),
-        )
-        return self._publish_rebasing(
-            new_snap, base=snap, kind="delta", added_delta=added_delta,
-            added_sdel=added_sdel,
-            cleanup_dirs=(out_dir, sdel_dir) if sdel_dir else (out_dir,),
-            source_id=source_id, batch_id=batch_id,
-        )
+        return self._commit(lambda: _Edit(
+            schema=new_schema or snap.schema, n_buckets=snap.n_buckets,
+            stats=stats or {}, delta=write(delta_rows, name),
+            sdel={} if sdel_rows is None else write(sdel_rows, sdel_name),
+            mor_meta=mor_meta, source_id=source_id, batch_id=batch_id,
+        ), name, sdel_name)
 
     def set_props(self, updates: dict) -> Snapshot:
         """Update table properties as a metadata-only commit (Delta
@@ -856,27 +793,13 @@ class LakeTable:
         self, new_schema: T.StructType, stats: dict | None = None,
         new_props: dict | None = None,
     ) -> Snapshot:
-        """Metadata-only commit (e.g. pure schema evolution)."""
+        """Metadata-only commit (e.g. pure schema evolution). A lost
+        race raises :class:`CommitConflict`; there is no rebase."""
         snap = self.snapshot
-        new_snap = Snapshot(
-            version=snap.version + 1,
-            schema=new_schema,
-            n_buckets=snap.n_buckets,
-            key_fields=snap.key_fields,
-            bucket_key=snap.bucket_key,
-            buckets=dict(snap.buckets),
-            applied_batches=dict(snap.applied_batches),
-            stats=stats or {},
-            parent=snap.version,
-            delta_buckets=dict(snap.delta_buckets),
-            sdel_buckets=dict(snap.sdel_buckets),
-            mor_meta=dict(snap.mor_meta),
-            props=dict(snap.props) if new_props is None else dict(new_props),
-            file_stats=dict(snap.file_stats),
-        )
-        self._publish(new_snap)
-        self.snapshot = new_snap
-        return new_snap
+        return self._advance(_derive(snap, _Edit(
+            schema=new_schema, n_buckets=snap.n_buckets,
+            stats=stats or {}, props=new_props,
+        )))
 
     def overwrite(self, df: DataFrame, source_id: str | None = None,
                   batch_id: int | None = None) -> Snapshot:
@@ -937,66 +860,111 @@ class LakeTable:
                 f"file(s) it references were removed by vacuum "
                 f"(first: {missing[0]})"
             )
-        new_snap = Snapshot(
-            version=snap.version + 1,
-            schema=target.schema,
-            n_buckets=target.n_buckets,
-            key_fields=list(target.key_fields),
-            bucket_key=target.bucket_key,
-            buckets={b: list(fs) for b, fs in target.buckets.items()},
-            applied_batches=dict(target.applied_batches),
-            stats={"restored_from": version},
-            parent=snap.version,
-            delta_buckets={
-                b: list(fs) for b, fs in target.delta_buckets.items()
-            },
-            sdel_buckets={
-                b: list(fs) for b, fs in target.sdel_buckets.items()
-            },
-            mor_meta=dict(target.mor_meta),
-            props=dict(target.props),
-            file_stats=dict(target.file_stats),
-        )
-        self._publish(new_snap)
-        self.snapshot = new_snap
-        return new_snap
+        # the target's contents re-headed on the current version: the
+        # restore is one more commit on top of it, no rebase
+        return self._advance(_derive(
+            replace(target, version=snap.version),
+            _Edit(schema=target.schema, n_buckets=target.n_buckets,
+                  stats={"restored_from": version}),
+        ))
 
     # -- internals ----------------------------------------------------
 
-    def _carry_file_stats(
-        self,
-        snap: Snapshot,
-        new_buckets: dict[str, list[str]],
-        new_files: list[str] | None,
-    ) -> dict:
-        """Next snapshot's ``file_stats``: prior entries for files
-        still referenced (dropped entries would only bloat the
-        manifest) plus freshly harvested footer stats for this
-        commit's ``new_files`` (None = stats collection disabled for
-        this commit; those files are simply never skipped)."""
-        referenced = {f for fs in new_buckets.values() for f in fs}
-        carried = {
-            f: s for f, s in snap.file_stats.items() if f in referenced
-        }
-        if new_files:
-            from kafka_jdbc_sink_connector_spark.lake import stats as stats_mod
+    def _new_dir(self, prefix: str) -> str:
+        """Name of a fresh data directory for the next commit."""
+        return f"{prefix}-{self.snapshot.version + 1:010d}-{uuid.uuid4().hex[:8]}"
 
-            harvested = stats_mod.harvest_file_stats(self.path, new_files)
-            spec = stats_mod.bloom_spec(snap.props)
-            if spec:
-                # opt-in (`bloom.cols` table property): reads the
-                # indexed columns of THIS commit's files only
-                blooms = stats_mod.harvest_blooms(
-                    self.path, new_files, spec
-                )
-                for rel, per_col in blooms.items():
-                    ent = harvested.setdefault(rel, {"cols": {}})
-                    for c, b in per_col.items():
-                        ent.setdefault("cols", {}).setdefault(c, {})[
-                            "bloom"
-                        ] = b
-            carried.update(harvested)
-        return carried
+    def _write_bucketed(
+        self, rows: DataFrame, dir_name: str, n_partitions: int | None
+    ) -> dict[str, list[str]]:
+        """Write ``rows`` (carrying ``__bucket``) under
+        ``data/<dir_name>``, one directory per bucket, and return
+        ``{bucket: sorted table-relative files}``.
+
+        ``n_partitions`` pins the write to that many tasks hashed on
+        the bucket: an AQE-coalescible ``repartition(col)`` collapses a
+        small commit to ONE task that then writes every bucket's file
+        SERIALLY — per-file writer overhead (open/zstd/footer/commit)
+        is invisible to AQE's byte-based sizing and measured ~1 s per
+        micro-batch. ``None`` writes the caller's partitioning as is.
+        """
+        rel = os.path.join(_DATA_DIR, dir_name)
+        out = os.path.join(self.path, rel)
+        rows = rows.withColumn(_PART_DIR_COL, F.col(BUCKET_COL))
+        if n_partitions is not None:
+            rows = rows.repartition(n_partitions, F.col(BUCKET_COL))
+        rows.write.partitionBy(_PART_DIR_COL).parquet(out)
+        prefix = f"{_PART_DIR_COL}="
+        return {
+            name[len(prefix):]: sorted(
+                os.path.join(rel, name, f)
+                for f in os.listdir(os.path.join(out, name))
+                if f.endswith(".parquet")
+            )
+            for name in os.listdir(out)
+            if name.startswith(prefix)
+        }
+
+    def _harvest(self, props: dict, new_files: list[str]) -> dict:
+        """Footer stats (plus opt-in blooms) of this commit's files."""
+        harvested = stats_mod.harvest_file_stats(self.path, new_files)
+        spec = stats_mod.bloom_spec(props)
+        if spec:
+            # opt-in (`bloom.cols` table property): reads the indexed
+            # columns of THIS commit's files only
+            blooms = stats_mod.harvest_blooms(self.path, new_files, spec)
+            for rel, per_col in blooms.items():
+                ent = harvested.setdefault(rel, {"cols": {}})
+                for c, b in per_col.items():
+                    ent.setdefault("cols", {}).setdefault(c, {})["bloom"] = b
+        return harvested
+
+    def _commit(self, build, *dir_names: str) -> Snapshot:
+        """Run ``build`` — it writes this commit's files into
+        ``dir_names`` and returns the :class:`_Edit` — harvest the new
+        base files' stats, and publish; on a lost race, rebase onto the
+        winner's head and retry (up to ``max_commit_retries``).
+
+        The data dirs are removed on any failure before the first
+        publish, and on a declined rebase or an exhausted budget
+        (:class:`CommitConflict`) — the only points at which no
+        published snapshot can reference them."""
+        dirs = [os.path.join(self.path, _DATA_DIR, n) for n in dir_names]
+
+        def remove_dirs():
+            for d in dirs:
+                shutil.rmtree(d, ignore_errors=True)
+
+        base = self.snapshot
+        try:
+            edit = build()
+            new_files = [f for fs in edit.base.values() for f in fs]
+            if new_files:
+                edit.file_stats = self._harvest(base.props, new_files)
+            snap = _derive(base, edit)
+        except BaseException:
+            remove_dirs()
+            raise
+        attempt = 0
+        while True:
+            try:
+                return self._advance(snap)
+            except CommitConflict:
+                attempt += 1
+                try:
+                    if attempt > self.max_commit_retries:
+                        raise
+                    latest = self._read_latest(self.path)
+                    _rebase(latest, base, edit)
+                except CommitConflict:
+                    remove_dirs()
+                    raise
+                snap = _derive(latest, edit)
+
+    def _advance(self, snap: Snapshot) -> Snapshot:
+        self._publish(snap)
+        self.snapshot = snap
+        return snap
 
     def version_as_of(self, ts: float) -> int:
         """Latest version whose commit time is <= ``ts`` (epoch
@@ -1050,208 +1018,6 @@ class LakeTable:
         """Time travel by wall clock: read the table as it was at
         epoch-seconds ``ts``."""
         return self.read(version=self.version_as_of(ts), **kwargs)
-
-    def _publish_rebasing(
-        self,
-        new_snap: Snapshot,
-        *,
-        base: Snapshot,
-        kind: str,
-        added_base: dict[str, list[str]] | None = None,
-        added_delta: dict[str, list[str]] | None = None,
-        added_sdel: dict[str, list[str]] | None = None,
-        rewrite_buckets: list[int] | None = None,
-        cleanup_dirs: tuple[str, ...] = (),
-        source_id: str | None = None,
-        batch_id: int | None = None,
-    ) -> Snapshot:
-        """Publish ``new_snap``; on a lost race, rebase onto the
-        winner's head and retry (up to ``max_commit_retries``). A
-        semantic conflict (``_rebase`` declines) or an exhausted
-        budget removes this commit's already-written files and
-        re-raises :class:`CommitConflict` — the data dirs are only
-        safe to delete while no published snapshot references them."""
-        snap = new_snap
-        attempt = 0
-        while True:
-            try:
-                self._publish(snap)
-                self.snapshot = snap
-                return snap
-            except CommitConflict:
-                attempt += 1
-                try:
-                    if attempt > self.max_commit_retries:
-                        raise
-                    latest = self._read_latest(self.path)
-                    snap = self._rebase(
-                        latest, base, snap, kind=kind,
-                        added_base=added_base, added_delta=added_delta,
-                        added_sdel=added_sdel,
-                        rewrite_buckets=rewrite_buckets,
-                        source_id=source_id, batch_id=batch_id,
-                    )
-                except CommitConflict:
-                    for d in cleanup_dirs:
-                        if d is not None:
-                            shutil.rmtree(d, ignore_errors=True)
-                    raise
-
-    def _rebase(
-        self,
-        latest: Snapshot,
-        base: Snapshot,
-        ours: Snapshot,
-        *,
-        kind: str,
-        added_base: dict[str, list[str]] | None,
-        added_delta: dict[str, list[str]] | None,
-        added_sdel: dict[str, list[str]] | None,
-        rewrite_buckets: list[int] | None,
-        source_id: str | None,
-        batch_id: int | None,
-    ) -> Snapshot:
-        """Re-target a failed commit at the current head ``latest``
-        (the snapshot it lost the race to), reusing its written files.
-
-        Validation rules (decline = raise CommitConflict, caller
-        refreshes and redoes the batch from current state — the
-        conservative Iceberg ``validate*`` posture):
-
-        * any schema change on either side declines — evolution must
-          re-read the head to re-plan coercion;
-        * table layout (bucket count/key, pk) must be unchanged;
-        * exactly-once: if the head already applied our (source,
-          batch), re-publishing would double-apply it — decline and
-          let the caller's watermark check skip the batch;
-        * ``append``: always rebasable — new files are additive no
-          matter what the concurrent commits did;
-        * ``delta``: rebasable only if the delta/sdel file lists are
-          untouched between base and head — a concurrent delta commit
-          would interleave with our files' stamped ``__seq`` (which
-          must stay unique and correctly ordered in the resolution
-          sequence), and a concurrent compaction folds the lists our
-          snapshot was built from; concurrent pure appends are fine
-          (deltas resolve over base rows regardless of commit order);
-        * ``rewrite``: rebasable only if no concurrent commit touched
-          the rewritten buckets' base/delta/sdel lists — a rewrite
-          folds those buckets' state, so any concurrent change to
-          them would be silently lost.
-        """
-
-        def decline(why: str):
-            raise CommitConflict(
-                f"cannot rebase {kind} commit onto version "
-                f"{latest.version}: {why}"
-            )
-
-        if latest.schema != base.schema:
-            decline("a concurrent commit changed the table schema")
-        if ours.schema != base.schema:
-            decline("this commit changes the schema; refresh and re-plan")
-        if (
-            latest.n_buckets != base.n_buckets
-            or latest.bucket_key != base.bucket_key
-            or list(latest.key_fields) != list(base.key_fields)
-        ):
-            decline("a concurrent commit changed the table layout")
-        if (
-            ours.n_buckets != base.n_buckets
-            or ours.bucket_key != base.bucket_key
-            or list(ours.key_fields) != list(base.key_fields)
-        ):
-            decline("this commit changes the table layout (rebucket); "
-                    "refresh and re-plan")
-        if (
-            source_id is not None
-            and batch_id is not None
-            and latest.applied_batches.get(source_id, -1) >= batch_id
-        ):
-            decline(
-                f"batch {batch_id} from source {source_id!r} was already "
-                f"applied by a concurrent writer (exactly-once)"
-            )
-
-        buckets = {b: list(fs) for b, fs in latest.buckets.items()}
-        delta_buckets = {
-            b: list(fs) for b, fs in latest.delta_buckets.items()
-        }
-        sdel_buckets = {b: list(fs) for b, fs in latest.sdel_buckets.items()}
-        mor_meta = dict(latest.mor_meta)
-        our_new_files: list[str] = []
-
-        if kind == "append":
-            for b, fs in (added_base or {}).items():
-                buckets.setdefault(b, []).extend(fs)
-                our_new_files.extend(fs)
-        elif kind == "delta":
-            if (
-                latest.delta_buckets != base.delta_buckets
-                or latest.sdel_buckets != base.sdel_buckets
-            ):
-                decline(
-                    "concurrent delta/sdel commits would interleave the "
-                    "__seq resolution order"
-                )
-            for b, fs in (added_delta or {}).items():
-                delta_buckets.setdefault(b, []).extend(fs)
-            for b, fs in (added_sdel or {}).items():
-                sdel_buckets.setdefault(b, []).extend(fs)
-            mor_meta = dict(ours.mor_meta)
-        elif kind == "rewrite":
-            for bi in rewrite_buckets or []:
-                b = str(bi)
-                if (
-                    latest.buckets.get(b) != base.buckets.get(b)
-                    or latest.delta_buckets.get(b)
-                    != base.delta_buckets.get(b)
-                    or latest.sdel_buckets.get(b) != base.sdel_buckets.get(b)
-                ):
-                    decline(
-                        f"a concurrent commit touched rewritten bucket {b}"
-                    )
-                buckets.pop(b, None)
-                delta_buckets.pop(b, None)
-                sdel_buckets.pop(b, None)
-            for b, fs in (added_base or {}).items():
-                buckets[b] = list(fs)
-                our_new_files.extend(fs)
-        else:  # pragma: no cover - internal misuse
-            decline(f"unknown commit kind {kind!r}")
-
-        applied = dict(latest.applied_batches)
-        if source_id is not None and batch_id is not None:
-            applied[source_id] = max(batch_id, applied.get(source_id, -1))
-
-        referenced = {f for fs in buckets.values() for f in fs}
-        file_stats = {
-            f: s for f, s in latest.file_stats.items() if f in referenced
-        }
-        # our files' footer stats were harvested before the first
-        # publish attempt — reuse them instead of re-reading footers
-        file_stats.update({
-            f: ours.file_stats[f]
-            for f in our_new_files
-            if f in ours.file_stats
-        })
-
-        return Snapshot(
-            version=latest.version + 1,
-            schema=ours.schema,
-            n_buckets=latest.n_buckets,
-            key_fields=list(latest.key_fields),
-            bucket_key=latest.bucket_key,
-            buckets=buckets,
-            applied_batches=applied,
-            stats=dict(ours.stats),
-            parent=latest.version,
-            delta_buckets=delta_buckets,
-            sdel_buckets=sdel_buckets,
-            mor_meta=mor_meta,
-            props=dict(latest.props),
-            file_stats=file_stats,
-            commit_ts=None,
-        )
 
     def _publish(self, snap: Snapshot) -> None:
         if snap.commit_ts is None:

@@ -32,11 +32,9 @@ event). The delete side collects a per-key sorted list of delete
 events (offset + retain-field struct); its size is bounded by the
 number of DELETE events per key per micro-batch (~1% of CDC traffic,
 almost always 0 or 1 per key), not by the batch — upsert storms still
-collapse map-side to one struct. An optional salted two-phase variant
-splits pathological single-key floods across ``salt`` reducers first,
-and prunes each salt group's delete list to deletes after the group's
-own latest upsert (a safe superset of the global winner, since the
-global latest upsert offset is the max over groups).
+collapse map-side to one struct. A salted two-phase variant (spread
+each key over several reducers first) was measured slower on hot-key
+storms of 2k and 200k events and on a delete-heavy hot key, and removed.
 """
 
 from __future__ import annotations
@@ -94,7 +92,6 @@ def collapse_last_writer(
     events: DataFrame,
     cfg: SinkConfig,
     payload_cols: list[str],
-    salt: int | None = None,
 ) -> DataFrame:
     """Collapse ``events`` to one row per ``cfg.pk_fields``.
 
@@ -114,7 +111,6 @@ def collapse_last_writer(
     retain fields — the aggregate is sort-based (struct buffers), so
     every byte is sorted and shuffled once.
     """
-    salt = cfg.dedup_salt if salt is None else salt
     op = F.col(cfg.op_column)
     off = F.col(cfg.offset_column)
     is_del = op == F.lit(cfg.op_delete_value)
@@ -133,33 +129,6 @@ def collapse_last_writer(
         F.min(F.when(is_del, off)).alias(FIRST_DEL_OFF),
     ]
 
-    if salt and salt > 1:
-        # phase 1: spread each key over `salt` reducers; phase 2 merges
-        # the per-salt winners. Defeats a single key receiving a large
-        # fraction of the batch (hot-conversation flood).
-        floor1 = F.coalesce(F.col(UPSERT_OFF), F.lit(_LONG_MIN))
-        phase1 = (
-            events.groupBy(*keys, F.pmod(off, F.lit(salt)).alias("__salt"))
-            .agg(*aggs)
-            # prune deletes at/under the group's own latest upsert: the
-            # global latest upsert offset is ≥ every group's, so every
-            # globally surviving delete survives its group's prune
-            .withColumn(
-                DELETE_LIST,
-                F.filter(F.col(DELETE_LIST), lambda d: d["off"] > floor1),
-            )
-        )
-        merged = phase1.groupBy(*keys).agg(
-            F.max_by(F.col(UPSERT_STRUCT), F.col(UPSERT_OFF)).alias(
-                UPSERT_STRUCT
-            ),
-            F.max(F.col(UPSERT_OFF)).alias(UPSERT_OFF),
-            F.array_sort(
-                F.flatten(F.collect_list(F.col(DELETE_LIST)))
-            ).alias(DELETE_LIST),
-            F.min(F.col(FIRST_DEL_OFF)).alias(FIRST_DEL_OFF),
-        )
-        return _winner_select(merged, keys)
     return _winner_select(events.groupBy(*keys).agg(*aggs), keys)
 
 

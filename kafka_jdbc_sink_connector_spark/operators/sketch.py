@@ -27,6 +27,8 @@ second pass, no shuffle beyond the (tiny) register aggregation.
 
 from __future__ import annotations
 
+import bisect
+import itertools
 import math
 
 from pyspark.sql import Column, DataFrame
@@ -39,9 +41,9 @@ _MAX_RHO = _RHO_HEX * 4 + 1
 
 def _leading_zero_bits(hexcol: Column) -> Column:
     """Leading zero BITS of a lowercase hex string, via nibble
-    arithmetic — portable to ANSI-ish SQL (ltrim/length/CASE), and
-    exact where ``floor(log2(x))`` float tricks are not."""
-    stripped = F.ltrim(hexcol, F.lit("0"))
+    arithmetic — portable to ANSI-ish SQL (regexp_replace/length/CASE),
+    and exact where ``floor(log2(x))`` float tricks are not."""
+    stripped = F.regexp_replace(hexcol, "^0+", "")
     nz_nibbles = (F.length(hexcol) - F.length(stripped)) * 4
     first = F.substring(stripped, 1, 1)
     in_first = (
@@ -281,29 +283,21 @@ def qsketch_quantiles(
     midpoint of the sub-bucket where the cumulative count reaches
     ``ceil(q·N)`` (negatives excluded from ranking, zero exact).
     Returns ``(q: double, estimate: double)`` — the histogram is
-    bucket-count-sized, so this is a tiny window job."""
-    from pyspark.sql import Window
-
-    ranked = hist.filter(F.col("bucket") >= -1)
-    w = Window.orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
+    bucket-count-sized, so the cumulative counts are prefix sums over
+    its collected rows on the driver."""
+    ranked = (
+        hist.filter(F.col("bucket") >= -1).orderBy("bucket")
+        .select("bucket", "cnt").collect()
     )
-    cum = ranked.select(
-        "bucket",
-        F.sum("cnt").over(w).alias("cum"),
-        F.sum("cnt").over(
-            Window.orderBy(F.lit(1)).rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        ).alias("n"),
+    cum = list(itertools.accumulate(r["cnt"] for r in ranked))
+    picks = {}
+    for q in map(float, qs):
+        i = bisect.bisect_left(cum, math.ceil(q * cum[-1])) if cum else 0
+        if i < len(cum):
+            picks[q] = ranked[i]["bucket"]
+    first = hist.sparkSession.createDataFrame(
+        sorted(picks.items()), "q double, bucket long"
     )
-    qdf = cum.sparkSession.createDataFrame(
-        [(float(q),) for q in qs], "q double"
-    )
-    j = cum.join(F.broadcast(qdf), F.col("cum") >= F.ceil(
-        F.col("q") * F.col("n")
-    ))
-    first = j.groupBy("q").agg(F.min("bucket").alias("bucket"))
     octave = F.floor(F.col("bucket") / s)
     sub = F.col("bucket") % s
     mid = F.pow(F.lit(2.0), octave.cast("double")) * (

@@ -123,3 +123,12 @@ def test_subject_name_strategy_properties():
         })
     with pytest.raises(ConfigError, match="subject_name_strategy"):
         SinkConfig(subject_name_strategy="bogus")
+
+
+def test_removed_dedup_salt_property_is_rejected():
+    # the salted two-phase collapse was removed; its old engine knob
+    # must fail loudly instead of being silently ignored
+    with pytest.raises(ConfigError, match="engine.dedup.salt"):
+        SinkConfig.from_connect_properties({
+            "pk.fields": "conv_id", "engine.dedup.salt": "8",
+        })

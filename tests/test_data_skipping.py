@@ -193,13 +193,13 @@ def test_pre_stats_snapshot_full_scan_correct(spark, appended_table):
     assert df.count() == 100
 
 
-def test_collect_stats_false_and_compaction_restores(spark, tmp_path):
+def test_statless_files_and_compaction_restores(spark, tmp_path):
+    """Files without stats (a pre-upgrade manifest) are never skipped;
+    a compaction harvests stats for the files it rewrites."""
     path = str(tmp_path / "tnostat")
     t = LakeTable.create(spark, path, SCHEMA, n_buckets=2, key_fields=["k"])
-    t.commit_append(
-        t.with_bucket(_mk_rows(spark, 0, 50, 1)), collect_stats=False
-    )
-    assert t.snapshot.file_stats == {}
+    t.commit_append(t.with_bucket(_mk_rows(spark, 0, 50, 1)))
+    t.snapshot.file_stats = {}
     # no stats -> no skipping, still correct
     assert t.read(where=[("v", ">=", 480)]).count() == 2
     # a rewrite (compaction path) harvests stats for rewritten files

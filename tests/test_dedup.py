@@ -1,5 +1,5 @@
 """Collapse/dedup operator: max_by vs window formulations agree,
-salted two-phase agrees, duplicates (redelivery) are absorbed."""
+duplicates (redelivery) are absorbed."""
 
 from __future__ import annotations
 
@@ -42,17 +42,6 @@ def test_maxby_equals_window_formulation(spark):
     )
     a = _norm(collapse_last_writer(events, cfg, PAYLOAD))
     b = _norm(collapse_last_writer_window(events, cfg, PAYLOAD))
-    assert a == b
-
-
-def test_salted_two_phase_equals_single_phase(spark):
-    cfg = SinkConfig()
-    events = generate_cdc_events(
-        spark, GenSpec(n_events=2000, n_conversations=10,
-                       turns_per_conversation=3, delete_fraction=0.05),
-    )
-    a = _norm(collapse_last_writer(events, cfg, PAYLOAD, salt=1))
-    b = _norm(collapse_last_writer(events, cfg, PAYLOAD, salt=16))
     assert a == b
 
 
@@ -103,12 +92,10 @@ def test_collapse_winner_delete_is_earliest_after_last_upsert(spark):
         "kafka_partition int, kafka_offset long, op string, conv_id string, "
         "turn_idx int, role string, text string, ts string",
     ).withColumn("ts", F.col("ts").cast("timestamp"))
-    for salt in (1, 8):
-        r = collapse_last_writer(
-            df, cfg, ["conv_id", "turn_idx", "role", "text", "ts"],
-            salt=salt,
-        ).collect()[0]
-        assert r[UPSERT_OFF] == 3 and r[UPSERT_STRUCT]["text"] == "v3"
-        assert r[DELETE_OFF] == 4
-        assert str(r[DELETE_STRUCT]["ts"]) == "2024-01-01 00:00:04"
-        assert r[FIRST_DEL_OFF] == 2
+    r = collapse_last_writer(
+        df, cfg, ["conv_id", "turn_idx", "role", "text", "ts"],
+    ).collect()[0]
+    assert r[UPSERT_OFF] == 3 and r[UPSERT_STRUCT]["text"] == "v3"
+    assert r[DELETE_OFF] == 4
+    assert str(r[DELETE_STRUCT]["ts"]) == "2024-01-01 00:00:04"
+    assert r[FIRST_DEL_OFF] == 2

@@ -226,6 +226,23 @@ def test_delta_commit_conflict_cleans_up(spark, tmp_path):
     assert {r["k"]: r["v"] for r in t2.read().collect()} == {"a": 3}
 
 
+def test_failed_rewrite_leaves_no_orphan_data_dir(spark, tmp_path):
+    """A commit that fails after writing its files but before publishing
+    (here: rows for a bucket outside ``rewrite_buckets``) removes its
+    data dir instead of leaving it for ``vacuum``."""
+    import os
+
+    p = str(tmp_path / "t")
+    t = LakeTable.create(spark, p, SCHEMA, n_buckets=4, key_fields=["k"])
+    t.overwrite(_df(spark, [(f"k{i}", i) for i in range(20)]))
+    before = sorted(os.listdir(os.path.join(p, "data")))
+    rows = t.with_bucket(_df(spark, [(f"k{i}", i) for i in range(20)]))
+    with pytest.raises(ValueError, match="not in rewrite_buckets"):
+        t.commit_rewrite(rows, [0])
+    assert sorted(os.listdir(os.path.join(p, "data"))) == before
+    assert t.version == 1 and t.read().count() == 20
+
+
 def test_describe_history_operations(spark, tmp_path):
     from kafka_jdbc_sink_connector_spark.lake.maintenance import (
         compact,
