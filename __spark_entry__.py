@@ -50,46 +50,41 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
+def _scratch_dir(prefix: str) -> str:
+    """A fresh temporary directory, removed when the process exits."""
+    tmp = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    return tmp
+
+
 def _events_max_id(spark: SparkSession, sf_dir: str) -> int:
     """``max(event_id)`` over the events table, answered from parquet
-    FOOTER statistics when every row group carries them (exact for
-    int64 — same metadata-only idea as ``LakeTable.min_max``), with a
-    Spark aggregate job as the fallback. Several queries only need
-    this scalar to slice the stream into batches; the footer read
-    replaces a full scan job per query."""
-    path = os.path.join(sf_dir, "events.parquet")
-    try:
-        import pyarrow.parquet as pq
+    FOOTER statistics (the same reader as ``LakeTable.min_max``:
+    ``lake.stats.harvest_file_stats`` + ``bounds_from_stats``); only
+    files whose footers cannot decide it are scanned, by a Spark
+    aggregate. Several queries only need this scalar to slice the
+    stream into batches; the footer read replaces a full scan job per
+    query."""
+    from kafka_jdbc_sink_connector_spark.lake.stats import (
+        bounds_from_stats,
+        harvest_file_stats,
+    )
 
-        files = (
-            [os.path.join(path, f) for f in os.listdir(path)
-             if f.endswith(".parquet")]
-            if os.path.isdir(path)
-            else [path]
-        )
-        if not files:
-            raise ValueError("no parquet files")
-        mx = None
-        for f in files:
-            md = pq.ParquetFile(f).metadata
-            for gi in range(md.num_row_groups):
-                rg = md.row_group(gi)
-                for ci in range(rg.num_columns):
-                    c = rg.column(ci)
-                    if c.path_in_schema != "event_id":
-                        continue
-                    st = c.statistics
-                    if st is None or not st.has_min_max:
-                        raise ValueError("row group without stats")
-                    mx = st.max if mx is None else max(mx, st.max)
-        if mx is None:
-            raise ValueError("event_id column not found")
-        return int(mx)
-    except Exception:
-        row = _t(spark, sf_dir, "events").agg(
-            F.max("event_id")
-        ).collect()[0]
-        return int(row[0])
+    path = os.path.join(sf_dir, "events.parquet")
+    if os.path.isdir(path):
+        root = path
+        files = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+    else:
+        root, files = os.path.dirname(path), [os.path.basename(path)]
+    _, hi, scan = bounds_from_stats(
+        harvest_file_stats(root, files), files, "event_id"
+    )
+    if scan:
+        got = spark.read.parquet(
+            *[os.path.join(root, f) for f in scan]
+        ).agg(F.max("event_id")).collect()[0][0]
+        hi = max((v for v in (hi, got) if v is not None), default=None)
+    return int(hi)
 
 
 def _events_as_cdc(events: DataFrame) -> DataFrame:
@@ -157,8 +152,7 @@ def q_cdc_apply_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     cdc = _events_as_cdc(_t(spark, sf_dir, "events"))
     # session-scoped scratch dir (cleaned at interpreter exit) so the
     # returned DataFrame stays lazy — no driver-side collect
-    tmp = tempfile.mkdtemp(prefix="cdc_final_state_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = _scratch_dir("cdc_final_state_")
     applier = CdcApplier(spark, cfg, os.path.join(tmp, "tgt"))
     applier.apply_batch(cdc, batch_id=0)
     return applier.read_target().select(
@@ -217,8 +211,7 @@ def q_cdc_apply_final_state_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     cfg = SinkConfig(merge_mode="mor", **_CDC_CFG)
     cdc = _events_as_cdc(_t(spark, sf_dir, "events"))
     mid = _events_max_id(spark, sf_dir) // 2
-    tmp = tempfile.mkdtemp(prefix="cdc_final_state_mor_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = _scratch_dir("cdc_final_state_mor_")
     applier = CdcApplier(spark, cfg, os.path.join(tmp, "tgt"))
     applier.apply_batch(cdc.filter(F.col("kafka_offset") <= mid), batch_id=0)
     applier.apply_batch(cdc.filter(F.col("kafka_offset") > mid), batch_id=1)
@@ -240,8 +233,7 @@ def q_cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     cfg = SinkConfig(**_CDC_CFG)
     cdc = _events_as_cdc(_t(spark, sf_dir, "events"))
     mid = _events_max_id(spark, sf_dir) // 2
-    tmp = tempfile.mkdtemp(prefix="cdc_snapshot_diff_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = _scratch_dir("cdc_snapshot_diff_")
     applier = CdcApplier(spark, cfg, os.path.join(tmp, "tgt"))
     r1 = applier.apply_batch(
         cdc.filter(F.col("kafka_offset") <= mid), batch_id=0
@@ -330,8 +322,7 @@ def q_cdc_restore_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     cfg = SinkConfig(**_CDC_CFG)
     cdc = _events_as_cdc(_t(spark, sf_dir, "events"))
     mid = _events_max_id(spark, sf_dir) // 2
-    tmp = tempfile.mkdtemp(prefix="cdc_restore_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = _scratch_dir("cdc_restore_")
     applier = CdcApplier(spark, cfg, os.path.join(tmp, "tgt"))
     r0 = applier.apply_batch(
         cdc.filter(F.col("kafka_offset") <= mid), batch_id=0
@@ -387,8 +378,7 @@ def q_cdc_cascade_view(spark: SparkSession, sf_dir: str) -> DataFrame:
                      delete_mode="delete")
     cdc = _events_as_cdc(_t(spark, sf_dir, "events"))
     mid = _events_max_id(spark, sf_dir) // 2
-    tmp = tempfile.mkdtemp(prefix="cdc_cascade_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = _scratch_dir("cdc_cascade_")
     bronze = CdcApplier(spark, cfg, os.path.join(tmp, "bronze"))
     silver = CdcApplier(
         spark,
@@ -459,8 +449,7 @@ def q_cdc_agg_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cdc = _events_as_cdc(_t(spark, sf_dir, "events"))
     hi = _events_max_id(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="cdc_aggview_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = _scratch_dir("cdc_aggview_")
     bronze = CdcApplier(
         spark,
         SinkConfig(pk_fields=("user_id",), n_buckets=8,
@@ -542,8 +531,7 @@ def q_cdc_rollup_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cdc = _events_as_cdc(_t(spark, sf_dir, "events"))
     hi = _events_max_id(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="cdc_rollup_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = _scratch_dir("cdc_rollup_")
     bronze = CdcApplier(
         spark,
         SinkConfig(pk_fields=("user_id",), n_buckets=8,
@@ -623,8 +611,7 @@ def q_cdc_rebucket_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cfg = SinkConfig(**_CDC_CFG)
     cdc = _events_as_cdc(_t(spark, sf_dir, "events"))
-    tmp = tempfile.mkdtemp(prefix="cdc_rebucket_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = _scratch_dir("cdc_rebucket_")
     applier = CdcApplier(spark, cfg, os.path.join(tmp, "tgt"))
     applier.apply_batch(cdc, batch_id=0)
     rebucket(applier.table(), 32)
@@ -658,8 +645,7 @@ def q_cdc_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("event_id"))
         .collect()[0][0]
     )
-    tmp = tempfile.mkdtemp(prefix="cdc_bloom_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = _scratch_dir("cdc_bloom_")
     t = LakeTable.create(
         spark, os.path.join(tmp, "tgt"), ev.schema, n_buckets=8,
         key_fields=["user_id"], props={"bloom.cols": ["event_id"]},
@@ -698,8 +684,7 @@ def q_cdc_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
                      n_buckets=8, delete_mode="delete")
     cdc = _events_as_cdc(_t(spark, sf_dir, "events"))
     mid = _events_max_id(spark, sf_dir) // 2
-    tmp = tempfile.mkdtemp(prefix="cdc_change_feed_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = _scratch_dir("cdc_change_feed_")
     applier = CdcApplier(spark, cfg, os.path.join(tmp, "tgt"))
     r1 = applier.apply_batch(
         cdc.filter(F.col("kafka_offset") <= mid), batch_id=0
@@ -774,8 +759,7 @@ def q_cdc_change_feed_soft(spark: SparkSession, sf_dir: str) -> DataFrame:
     cfg = SinkConfig(merge_mode="mor", **_CDC_CFG)
     cdc = _events_as_cdc(_t(spark, sf_dir, "events"))
     mid = _events_max_id(spark, sf_dir) // 2
-    tmp = tempfile.mkdtemp(prefix="cdc_change_feed_soft_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = _scratch_dir("cdc_change_feed_soft_")
     applier = CdcApplier(spark, cfg, os.path.join(tmp, "tgt"))
     r1 = applier.apply_batch(
         cdc.filter(F.col("kafka_offset") <= mid), batch_id=0
@@ -935,8 +919,7 @@ def q_cdc_dlq_replay_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.pmod("user_id", F.lit(10)) == 3, F.lit("x"))
         .otherwise(F.col("op")),
     )
-    tmp = tempfile.mkdtemp(prefix="cdc_dlq_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = _scratch_dir("cdc_dlq_")
     applier = CdcApplier(spark, cfg, os.path.join(tmp, "tgt"))
     applier.apply_batch(mangled, batch_id=0)
 
@@ -1013,8 +996,7 @@ def q_cdc_schema_widening_state(
     b1 = frame(ev.filter(F.col("event_id") % 2 == 1), wide)
     cfg = SinkConfig(pk_fields=("user_id",), n_buckets=8,
                      auto_evolve_widen=True)
-    tmp = tempfile.mkdtemp(prefix="cdc_widening_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = _scratch_dir("cdc_widening_")
     applier = CdcApplier(spark, cfg, os.path.join(tmp, "tgt"))
     applier.apply_batch(b0, batch_id=0)
     res = applier.apply_batch(b1, batch_id=1)
@@ -1080,8 +1062,7 @@ def q_cdc_time_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "ts", "user_id", "event_type", "value"
     )
     max_id = _events_max_id(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="cdc_skip_scan_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = _scratch_dir("cdc_skip_scan_")
     t = LakeTable.create(
         spark, os.path.join(tmp, "t"), sel.schema,
         n_buckets=8, key_fields=["event_id"], bucket_key="user_id",
@@ -1138,8 +1119,7 @@ def q_cdc_metadata_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "ts", "user_id", "event_type", "value"
     )
     max_id = _events_max_id(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="cdc_meta_count_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = _scratch_dir("cdc_meta_count_")
     t = LakeTable.create(
         spark, os.path.join(tmp, "t"), sel.schema,
         n_buckets=8, key_fields=["event_id"], bucket_key="user_id",
@@ -1197,8 +1177,7 @@ def q_cdc_metadata_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "ts", "user_id", "event_type", "value"
     )
     max_id = _events_max_id(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="cdc_meta_minmax_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = _scratch_dir("cdc_meta_minmax_")
     t = LakeTable.create(
         spark, os.path.join(tmp, "t"), sel.schema,
         n_buckets=8, key_fields=["event_id"], bucket_key="user_id",
@@ -1254,8 +1233,7 @@ def q_cdc_clustered_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "ts", "user_id", "event_type", "value"
     )
     max_uid = sel.agg(F.max("user_id")).collect()[0][0]
-    tmp = tempfile.mkdtemp(prefix="cdc_clustered_scan_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = _scratch_dir("cdc_clustered_scan_")
     t = LakeTable.create(
         spark, os.path.join(tmp, "t"), sel.schema,
         n_buckets=4, key_fields=["event_id"], bucket_key="event_id",
@@ -1300,8 +1278,7 @@ def q_cdc_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     mx = sel.agg(
         F.max("user_id").alias("u"), F.max("event_id").alias("e")
     ).collect()[0]
-    tmp = tempfile.mkdtemp(prefix="cdc_zorder_scan_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = _scratch_dir("cdc_zorder_scan_")
     t = LakeTable.create(
         spark, os.path.join(tmp, "t"), sel.schema,
         n_buckets=4, key_fields=["event_id"], bucket_key="event_id",
@@ -2486,8 +2463,7 @@ def q_doc_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     result must equal the corpus-wide LSH self-join pair set — the
     oracle is exactly ``doc_minhash_lsh_pairs``'s."""
     d = _t(spark, sf_dir, "documents")
-    tmp = tempfile.mkdtemp(prefix="mh_idx_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = _scratch_dir("mh_idx_")
     idx = incremental.MinHashDedupIndex.create(
         spark, os.path.join(tmp, "idx"), n_buckets=8, n_perm=8, bands=4,
         k=5,
@@ -2520,8 +2496,7 @@ def q_doc_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = _t(spark, sf_dir, "documents")
-    tmp = tempfile.mkdtemp(prefix="dedup_stream_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = _scratch_dir("dedup_stream_")
     idx = incremental.MinHashDedupIndex.create(
         spark, os.path.join(tmp, "idx"), n_buckets=8, n_perm=8, bands=4,
         k=5,
@@ -2858,8 +2833,7 @@ def q_emb_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``cosine_dup_pairs`` set — the oracle is exactly
     ``emb_cosine_dup_pairs``'s."""
     emb = _t(spark, sf_dir, "embeddings")
-    tmp = tempfile.mkdtemp(prefix="emb_idx_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = _scratch_dir("emb_idx_")
     idx = incremental.EmbeddingDedupIndex.create(
         spark, os.path.join(tmp, "idx"), n_buckets=8, n_planes=8,
         dim=64, threshold=0.3, round_digits=4,
@@ -2891,8 +2865,7 @@ def q_doc_search_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    tmp = tempfile.mkdtemp(prefix="doc_sindex_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = _scratch_dir("doc_sindex_")
     bronze = CdcApplier(
         spark,
         SinkConfig(pk_fields=("doc_id",), n_buckets=8,
@@ -2976,8 +2949,7 @@ def q_emb_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    tmp = tempfile.mkdtemp(prefix="emb_stream_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = _scratch_dir("emb_stream_")
     idx = incremental.EmbeddingDedupIndex.create(
         spark, os.path.join(tmp, "idx"), n_buckets=8, n_planes=8,
         dim=64, threshold=0.3, round_digits=4,
@@ -3660,8 +3632,7 @@ def _cdc_subset_delete_state(
     )
     cdc = _events_as_cdc(_t(spark, sf_dir, "events"))
     mid = _events_max_id(spark, sf_dir) // 2
-    tmp = tempfile.mkdtemp(prefix=f"cdc_subset_{merge_mode}_")
-    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    tmp = _scratch_dir(f"cdc_subset_{merge_mode}_")
     applier = CdcApplier(spark, cfg, os.path.join(tmp, "tgt"))
     applier.apply_batch(cdc.filter(F.col("kafka_offset") <= mid), batch_id=0)
     applier.apply_batch(cdc.filter(F.col("kafka_offset") > mid), batch_id=1)

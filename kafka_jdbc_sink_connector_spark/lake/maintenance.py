@@ -46,7 +46,7 @@ def compact(
     all_ids = set(snap.buckets) | set(snap.delta_buckets) | set(
         snap.sdel_buckets
     )
-    candidates = [
+    candidates = sorted(
         int(b)
         for b in all_ids
         if (
@@ -58,7 +58,7 @@ def compact(
             or len(snap.buckets.get(b, [])) >= min_files
         )
         and (buckets is None or int(b) in set(buckets))
-    ]
+    )
     if not candidates:
         return []
     data = table.read(buckets=candidates, include_bucket=True)

@@ -219,7 +219,7 @@ def range_join_bins(
     ts_d = lambda c: F.col(c).cast("timestamp").cast("double")  # noqa: E731
     p = points.withColumn(
         "__bin", F.floor(ts_d(point_ts) / bin_width).cast("long")
-    )
+    ).alias("__p")
     iv = intervals.withColumn(
         "__bin",
         F.explode(
@@ -232,10 +232,15 @@ def range_join_bins(
                 F.floor(ts_d(end_ts) / bin_width).cast("long"),
             )
         ),
-    )
-    cond = [p[k] == iv[k] for k in on] + [p["__bin"] == iv["__bin"]]
-    contained = (ts_d(point_ts) >= ts_d(start_ts)) & (
-        ts_d(point_ts) < ts_d(end_ts)
+    ).alias("__iv")
+    # both sides may come from one scan (same attribute ids): compare
+    # alias-qualified columns so the key predicate is not a self-equality
+    pc = lambda c: F.col(f"__p.`{c}`")  # noqa: E731
+    ic = lambda c: F.col(f"__iv.`{c}`")  # noqa: E731
+    cond = [pc(k) == ic(k) for k in [*on, "__bin"]]
+    t = ts_d(f"__p.`{point_ts}`")
+    contained = (t >= ts_d(f"__iv.`{start_ts}`")) & (
+        t < ts_d(f"__iv.`{end_ts}`")
     )
     if how == "inner":
         j = p.join(iv, cond, "inner").filter(contained)
@@ -245,6 +250,6 @@ def range_join_bins(
         # asked to keep
         j = p.join(iv, [*cond, contained], "left")
     return j.select(
-        *[p[c] for c in points.columns],
-        *[iv[c] for c in intervals.columns if c not in on],
+        *[pc(c) for c in points.columns],
+        *[ic(c) for c in intervals.columns if c not in on],
     )

@@ -38,18 +38,16 @@ downstream machinery built on the engine's own feed + apply halves.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_jdbc_sink_connector_spark.apply import BatchResult, CdcApplier
+from kafka_jdbc_sink_connector_spark.apply import CdcApplier
 from kafka_jdbc_sink_connector_spark.lake.changes import table_changes
 from kafka_jdbc_sink_connector_spark.lake.table import LakeTable
-from kafka_jdbc_sink_connector_spark.streaming.cascade import CascadeResult
+from kafka_jdbc_sink_connector_spark.streaming.cascade import ViewSync, _expr
 
 
-class AggViewRunner:
+class AggViewRunner(ViewSync):
     """One maintained aggregate view.
 
     Parameters
@@ -72,6 +70,14 @@ class AggViewRunner:
         a group whose rows all leave the filter is deleted from the
         view; NULL predicate counts as failing).
     """
+
+    _kind = "aggview"
+    # read_target() consumers see a soft-delete marker as just another
+    # column: vanished groups would keep reporting stale aggregates
+    _hard_deletes = (
+        "aggregate-view",
+        "emptied groups must leave the view, not be soft-marked",
+    )
 
     def __init__(
         self,
@@ -97,26 +103,10 @@ class AggViewRunner:
             raise ValueError(
                 f"agg output(s) {sorted(overlap)} collide with group_by"
             )
-        from kafka_jdbc_sink_connector_spark.config import DeleteMode
-
-        if applier.cfg.delete_mode is not DeleteMode.DELETE:
-            # soft deletes would only mark emptied groups, and
-            # read_target() consumers see the marker column as just
-            # another column — vanished groups would keep reporting
-            # stale aggregates. Hard deletes are the view's contract.
-            raise ValueError(
-                "aggregate-view applier must use delete_mode='delete' "
-                f"(got {applier.cfg.delete_mode.value!r}): emptied "
-                "groups must leave the view, not be soft-marked"
-            )
-        self.spark = spark
-        self.upstream_path = upstream_path
-        self.applier = applier
+        super().__init__(spark, upstream_path, applier, source_id)
         self.group_by = list(group_by)
         self.aggs = dict(aggs)
-        self.row_filter = (
-            F.expr(row_filter) if isinstance(row_filter, str) else row_filter
-        )
+        self.row_filter = _expr(row_filter)
         #: optional PROJECTION-ONLY callable run on upstream rows
         #: (feed rows included) before grouping — how DERIVED group
         #: columns work, e.g. a time bucket
@@ -126,72 +116,34 @@ class AggViewRunner:
         #: belongs in ``row_filter``): pre-images re-derive the OLD
         #: group through the same expression.
         self.transform = transform
-        self.source_id = source_id or (
-            f"aggview:{os.path.abspath(upstream_path)}"
-        )
 
-    # -- state ---------------------------------------------------------
-
-    def watermark(self) -> int:
-        t = self.applier.table()
-        return -1 if t is None else t.applied_batch(self.source_id)
-
-    # -- sync ----------------------------------------------------------
-
-    def sync(self, full_refresh: bool = False) -> CascadeResult:
-        """Bring the view up to the upstream head: bootstrap (full
-        aggregate) on first run, group-wise partial recompute after,
-        ``full_refresh=True`` to reconcile after a vacuumed feed
-        window (recompute all groups + anti-join deletes)."""
-        up = LakeTable.load(self.spark, self.upstream_path)
-        head = up.version
-        w = self.watermark()
-        if head <= w:
-            return CascadeResult(mode="noop", upstream_version=head,
-                                 from_version=w)
-        if w < 0 or full_refresh:
-            fresh = self._aggregate(self._live(up.read(version=head)))
-            dels = self._gone_groups(fresh) if full_refresh else None
-            mode = "refresh" if full_refresh else "bootstrap"
-        else:
-            feed = table_changes(up, w, head, include_preimages=True)
+    def _events(self, mode: str, up: LakeTable, w: int) -> DataFrame:
+        g = self.group_by
+        if mode == "incremental":
+            feed = table_changes(up, w, include_preimages=True)
             if self.transform is not None:
                 feed = self.transform(feed)
             # NULL-group images are rows outside the view (same rule
             # as _live): they can't name an affected group
-            affected = (
-                feed.select(*self.group_by)
-                .na.drop(subset=self.group_by)
-                .distinct()
-                .localCheckpoint(eager=False)
+            affected = self._checkpoint(
+                feed.select(*g).na.drop(subset=g).distinct()
             )
-            live = self._live(up.read(version=head))
-            relevant = live.join(
-                F.broadcast(affected), self.group_by, "left_semi"
+            relevant = self._live(up.read()).join(
+                F.broadcast(affected), g, "left_semi"
             )
             fresh = self._aggregate(relevant)
             # affected groups with no surviving rows leave the view
-            dels = affected.join(
-                fresh.select(*self.group_by), self.group_by, "left_anti"
-            )
-            mode = "incremental"
-        # the batch frame is a computed pipeline (feed + broadcast
-        # semi-join + re-aggregation), not a parquet-backed scan: the
-        # applier's stats and merge jobs would each re-execute the
-        # whole pipeline. Cut the recompute with a lazy localCheckpoint
-        # (materializes with the stats job, reused by the merge) — the
-        # frame is group-count-sized for the affected groups, i.e.
-        # batch-bounded in the incremental path and view-sized at
-        # worst on bootstrap/refresh (disk-backed storage level, the
-        # same order as the view table the apply writes anyway).
-        events = self._events(fresh, dels).localCheckpoint(eager=False)
-        res = self.applier.apply_batch(
-            events, batch_id=head, source_id=self.source_id
-        )
-        return CascadeResult(mode=mode, upstream_version=head,
-                             from_version=w, batch=res)
-
-    # -- pieces --------------------------------------------------------
+            dels = affected.join(fresh.select(*g), g, "left_anti")
+        else:
+            fresh = self._aggregate(self._live(up.read()))
+            dels = self._gone_keys(fresh) if mode == "refresh" else None
+        ev = self._op(fresh, False)
+        if dels is not None:
+            ev = ev.unionByName(self._op(dels, True), allowMissingColumns=True)
+        # a computed pipeline (feed, semi-join, re-aggregation) sized by
+        # the group count — batch-bounded incrementally, view-sized at
+        # worst — so it is checkpointed in every mode
+        return self._checkpoint(self._stamp(ev, g))
 
     def _live(self, rows: DataFrame) -> DataFrame:
         if self.transform is not None:
@@ -204,49 +156,10 @@ class AggViewRunner:
                 )
         rows = rows.na.drop(subset=self.group_by)
         if self.row_filter is not None:
-            rows = rows.filter(
-                F.coalesce(self.row_filter, F.lit(False))
-            )
+            rows = rows.filter(F.coalesce(self.row_filter, F.lit(False)))
         return rows
 
     def _aggregate(self, rows: DataFrame) -> DataFrame:
         return rows.groupBy(*self.group_by).agg(
             *[c.alias(name) for name, c in self.aggs.items()]
-        )
-
-    def _gone_groups(self, fresh: DataFrame) -> DataFrame | None:
-        t = self.applier.table()
-        if t is None:
-            return None
-        return t.read().select(*self.group_by).join(
-            fresh.select(*self.group_by), self.group_by, "left_anti"
-        )
-
-    def _events(
-        self, fresh: DataFrame, dels: DataFrame | None
-    ) -> DataFrame:
-        cfg = self.applier.cfg
-        up_op = (
-            cfg.op_update_values[0]
-            if cfg.op_update_values
-            else cfg.op_insert_value
-        )
-        ev = fresh.withColumn(cfg.op_column, F.lit(up_op))
-        if dels is not None:
-            ev = ev.unionByName(
-                dels.withColumn(
-                    cfg.op_column, F.lit(cfg.op_delete_value)
-                ),
-                allowMissingColumns=True,
-            )
-        keys = [F.col(k) for k in self.group_by]
-        # deterministic transport columns (hash of the group key):
-        # the feed emits one state per group per window, so collapse
-        # order is immaterial; determinism keeps crash replays
-        # byte-identical — same scheme as the row cascade
-        return ev.withColumn(
-            cfg.offset_column, F.xxhash64(*keys)
-        ).withColumn(
-            cfg.partition_column,
-            F.pmod(F.xxhash64(*keys, F.lit(1)), F.lit(1024)).cast("int"),
         )

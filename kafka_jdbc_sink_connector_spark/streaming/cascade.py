@@ -28,6 +28,9 @@ naive "apply the filter to the change rows" silently strands such
 rows downstream forever). ``sync`` therefore maps change rows to
 ops first: upstream delete OR post-image failing the filter → ``d``,
 else ``u``.
+
+:class:`ViewSync` is the sync core all maintained views share (this
+mirror, :mod:`.aggview`, :mod:`.textindex`).
 """
 
 from __future__ import annotations
@@ -39,6 +42,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_jdbc_sink_connector_spark.apply import BatchResult, CdcApplier
+from kafka_jdbc_sink_connector_spark.config import DeleteMode
 from kafka_jdbc_sink_connector_spark.lake.changes import (
     CHANGE_TYPE,
     FROM_VERSION,
@@ -58,7 +62,145 @@ class CascadeResult:
     batch: BatchResult | None = None
 
 
-class CascadeRunner:
+class ViewSync:
+    """Sync core of a view maintained over an upstream lake table: the
+    watermark, the mode choice, the apply and the release of the
+    sync's local checkpoints. A view sets :attr:`_kind` and builds its
+    events in ``_events(mode, up, w)``."""
+
+    #: prefix of the default ``source_id`` (``"<kind>:" + abspath``) —
+    #: it keys the view's watermark in the downstream manifests
+    _kind = ""
+    #: ``(who, why)`` of a view whose contract needs hard deletes
+    _hard_deletes: tuple[str, str] | None = None
+    _refreshable = True
+
+    def __init__(self, spark: SparkSession, upstream_path: str,
+                 applier: CdcApplier, source_id: str | None):
+        delete_mode = applier.cfg.delete_mode
+        if self._hard_deletes and delete_mode is not DeleteMode.DELETE:
+            who, why = self._hard_deletes
+            raise ValueError(
+                f"{who} applier must use delete_mode='delete' "
+                f"(got {delete_mode.value!r}): {why}"
+            )
+        self.spark = spark
+        self.upstream_path = upstream_path
+        self.applier = applier
+        self.source_id = (
+            source_id or f"{self._kind}:{os.path.abspath(upstream_path)}"
+        )
+        self._checkpoints: list[DataFrame] = []
+
+    def watermark(self) -> int:
+        """Last upstream version applied downstream (-1 = never)."""
+        t = self.applier.table()
+        return -1 if t is None else t.applied_batch(self.source_id)
+
+    def sync(self, full_refresh: bool = False) -> CascadeResult:
+        """Bring the downstream table up to the upstream head.
+
+        * first run (no watermark): bootstrap — the view of the full
+          upstream state, as upserts;
+        * afterwards: incremental — from the change feed over
+          ``(watermark, head]`` only;
+        * ``full_refresh=True``: reconcile against the full upstream
+          state (upserts for live rows + deletes for downstream keys
+          no longer present) — the recovery path when the watermarked
+          upstream version was vacuumed and the feed window is gone.
+        """
+        if full_refresh and not self._refreshable:
+            raise ValueError(
+                f"{type(self).__name__} has no full_refresh: drop the "
+                f"downstream table and sync to rebuild it"
+            )
+        up = LakeTable.load(self.spark, self.upstream_path)
+        head, w = up.version, self.watermark()
+        if head <= w:
+            return CascadeResult(mode="noop", upstream_version=head,
+                                 from_version=w)
+        mode = ("refresh" if full_refresh
+                else "bootstrap" if w < 0 else "incremental")
+        try:
+            res = self.applier.apply_batch(
+                self._events(mode, up, w), batch_id=head,
+                source_id=self.source_id,
+            )
+        finally:
+            self._free_checkpoints()
+        return CascadeResult(mode=mode, upstream_version=head,
+                             from_version=w, batch=res)
+
+    def _checkpoint(self, df: DataFrame) -> DataFrame:
+        """Lazy ``localCheckpoint`` of a computed event pipeline, so
+        the applier's stats and merge jobs do not each re-run it;
+        freed when the sync ends. Caveat: a local checkpoint is lost
+        with its executor (no replica), failing the sync's apply."""
+        df = df.localCheckpoint(eager=False)
+        self._checkpoints.append(df)
+        return df
+
+    def _free_checkpoints(self) -> None:
+        # DataFrame.unpersist() does not reach a local checkpoint: its
+        # blocks belong to the RDD behind the frame's LogicalRDD plan
+        for df in self._checkpoints:
+            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        self._checkpoints.clear()
+
+    def _op(self, rows: DataFrame, delete: bool | Column) -> DataFrame:
+        """Stamp the op column: the downstream delete op where
+        ``delete``, else a non-delete op drawn from the DOWNSTREAM
+        config's vocabulary — hardcoding ``'u'`` quarantines every view
+        row when the sink uses a custom vocabulary (``error_expr``
+        checks membership), or worse applies upstream deletes as
+        upserts if ``'d'`` happens to be a configured update value."""
+        cfg = self.applier.cfg
+        upsert = F.lit((cfg.op_update_values or [cfg.op_insert_value])[0])
+        delete_op = F.lit(cfg.op_delete_value)
+        if isinstance(delete, Column):
+            op = F.when(delete, delete_op).otherwise(upsert)
+        else:
+            op = delete_op if delete else upsert
+        return rows.withColumn(cfg.op_column, op)
+
+    def _stamp(self, rows: DataFrame, keys: list[str],
+               offset: int | None = None) -> DataFrame:
+        """Stamp the transport columns the applier expects: offset =
+        ``xxhash64(keys)`` (or the constant ``offset``), partition =
+        ``pmod(xxhash64(keys, 1), 1024)``. Hashed offsets suit a view
+        emitting one state per key per window (collapse order is then
+        immaterial); determinism keeps a crash-retried sync
+        byte-identical."""
+        cfg = self.applier.cfg
+        cols = [F.col(k) for k in keys]
+        return rows.withColumn(
+            cfg.offset_column,
+            F.xxhash64(*cols) if offset is None
+            else F.lit(offset).cast("long"),
+        ).withColumn(
+            cfg.partition_column,
+            F.pmod(F.xxhash64(*cols, F.lit(1)), F.lit(1024)).cast("int"),
+        )
+
+    def _gone_keys(self, fresh: DataFrame) -> DataFrame | None:
+        """Downstream keys absent from ``fresh`` — a refresh's deletes
+        (LEFT ANTI on the pk; both sides pruned to key columns, so the
+        reconcile shuffles keys, not payloads). None before the
+        downstream table exists."""
+        keys = list(self.applier.cfg.pk_fields)
+        t = self.applier.table()
+        if t is None:
+            return None
+        return t.read().select(*keys).join(
+            fresh.select(*keys), keys, "left_anti"
+        )
+
+
+def _expr(c: Column | str | None) -> Column | None:
+    return F.expr(c) if isinstance(c, str) else c
+
+
+class CascadeRunner(ViewSync):
     """One edge of a table-to-table pipeline.
 
     Parameters
@@ -91,6 +233,8 @@ class CascadeRunner:
         marker, silently resurrecting soft-deleted rows.
     """
 
+    _kind = "cascade"
+
     def __init__(
         self,
         spark: SparkSession,
@@ -102,130 +246,23 @@ class CascadeRunner:
         upstream_deleted_when: Column | str | None = None,
         source_id: str | None = None,
     ):
-        self.spark = spark
-        self.upstream_path = upstream_path
-        self.applier = applier
-        self.row_filter = (
-            F.expr(row_filter) if isinstance(row_filter, str) else row_filter
-        )
+        super().__init__(spark, upstream_path, applier, source_id)
+        self.row_filter = _expr(row_filter)
         self.transform = transform
-        self.upstream_deleted_when = (
-            F.expr(upstream_deleted_when)
-            if isinstance(upstream_deleted_when, str)
-            else upstream_deleted_when
-        )
-        self.source_id = source_id or (
-            f"cascade:{os.path.abspath(upstream_path)}"
-        )
+        self.upstream_deleted_when = _expr(upstream_deleted_when)
 
-    # -- state ---------------------------------------------------------
-
-    def watermark(self) -> int:
-        """Last upstream version applied downstream (-1 = never)."""
-        t = self.applier.table()
-        return -1 if t is None else t.applied_batch(self.source_id)
-
-    # -- sync ----------------------------------------------------------
-
-    def sync(self, full_refresh: bool = False) -> CascadeResult:
-        """Bring the downstream table up to the upstream head.
-
-        * first run (no watermark): bootstrap — full upstream state as
-          upserts;
-        * afterwards: incremental — the change feed over
-          ``(watermark, head]`` only;
-        * ``full_refresh=True``: reconcile against the full upstream
-          state (upserts for live rows + deletes for downstream keys
-          no longer present) — the recovery path when the watermarked
-          upstream version was vacuumed and the feed window is gone.
-        """
-        up = LakeTable.load(self.spark, self.upstream_path)
-        head = up.version
-        w = self.watermark()
-        if head <= w:
-            return CascadeResult(mode="noop", upstream_version=head,
-                                 from_version=w)
-        if w < 0:
-            events, mode = self._bootstrap_events(up, head), "bootstrap"
-        elif full_refresh:
-            events, mode = self._refresh_events(up, head), "refresh"
-        else:
-            # the incremental feed is a computed pipeline (change-file
-            # resolution), change-window-sized: a lazy localCheckpoint
-            # stops the applier's stats and merge jobs each re-running
-            # it. Bootstrap/refresh stay unpersisted — they are
-            # table-sized projections of a plain parquet read, cheap
-            # to re-scan and fatal to materialize at 100 TB.
-            events, mode = self._incremental_events(up, w, head) \
-                .localCheckpoint(eager=False), "incremental"
-        res = self.applier.apply_batch(
-            events, batch_id=head, source_id=self.source_id
-        )
-        return CascadeResult(mode=mode, upstream_version=head,
-                             from_version=w, batch=res)
-
-    # -- event construction ---------------------------------------------
-
-    def _op_upsert(self) -> str:
-        """A non-delete op drawn from the DOWNSTREAM config's
-        vocabulary — hardcoding ``'u'`` quarantines every cascaded row
-        when the sink uses a custom vocabulary (``error_expr`` checks
-        membership), or worse applies upstream deletes as upserts if
-        ``'d'`` happens to be a configured update value."""
-        cfg = self.applier.cfg
-        return (
-            cfg.op_update_values[0]
-            if cfg.op_update_values
-            else cfg.op_insert_value
-        )
-
-    def _finish(self, rows: DataFrame, op, apply_transform=True) -> DataFrame:
-        """Project + stamp the transport columns the applier expects.
-
-        Offsets are a deterministic hash of the downstream pk — the
-        feed emits at most one change per key per window, so collapse
-        order within the batch is immaterial; determinism keeps a
-        crash-retried sync byte-identical.
-        """
-        cfg = self.applier.cfg
-        rows = rows.withColumn(cfg.op_column, op)
-        if apply_transform and self.transform is not None:
-            rows = self.transform(rows)
-            required = {cfg.op_column, *cfg.pk_fields}
-            missing = required - set(rows.columns)
-            if missing:
-                raise ValueError(
-                    f"cascade transform dropped required column(s) "
-                    f"{sorted(missing)}; transforms must preserve the "
-                    f"downstream pk and the {cfg.op_column!r} column"
-                )
-        keys = [F.col(k) for k in cfg.pk_fields]
-        return rows.withColumn(
-            cfg.offset_column, F.xxhash64(*keys)
-        ).withColumn(
-            cfg.partition_column,
-            F.pmod(F.xxhash64(*keys, F.lit(1)), F.lit(1024)).cast("int"),
-        )
-
-    def _live(self, rows: DataFrame) -> DataFrame:
-        """Upstream rows belonging to the downstream view."""
-        if self.upstream_deleted_when is not None:
-            rows = rows.filter(
-                ~F.coalesce(self.upstream_deleted_when, F.lit(False))
-            )
-        if self.row_filter is not None:
-            rows = rows.filter(self.row_filter)
-        return rows
-
-    def _bootstrap_events(self, up: LakeTable, head: int) -> DataFrame:
-        return self._finish(
-            self._live(up.read(version=head)), F.lit(self._op_upsert())
-        )
-
-    def _incremental_events(
-        self, up: LakeTable, w: int, head: int
-    ) -> DataFrame:
-        ch = table_changes(up, w, head)
+    def _events(self, mode: str, up: LakeTable, w: int) -> DataFrame:
+        if mode != "incremental":
+            # table-sized projections of a plain parquet read: cheap to
+            # re-scan, fatal to checkpoint at 100 TB. A refresh compares
+            # keys after the transform, in DOWNSTREAM key space
+            live = self._finish(self._op(self._live(up.read()), False))
+            gone = self._gone_keys(live) if mode == "refresh" else None
+            if gone is None:
+                return live
+            dels = self._finish(self._op(gone, True), apply_transform=False)
+            return live.unionByName(dels, allowMissingColumns=True)
+        ch = table_changes(up, w)
         is_del = F.col(CHANGE_TYPE) == F.lit("delete")
         if self.upstream_deleted_when is not None:
             # a soft-delete upstream's logical deletes arrive as
@@ -239,28 +276,32 @@ class CascadeRunner:
             # NULL-valued predicates count as failing (bootstrap's
             # .filter drops them), so coalesce before negating
             is_del = is_del | ~F.coalesce(self.row_filter, F.lit(False))
-        cfg = self.applier.cfg
-        op = F.when(is_del, F.lit(cfg.op_delete_value)).otherwise(
-            F.lit(self._op_upsert())
-        )
-        # stamp the op while the feed meta is still in scope, THEN drop
-        ch = ch.withColumn(cfg.op_column, op).drop(*_FEED_META)
-        return self._finish(ch, F.col(cfg.op_column))
+        # stamp the op while the feed meta is still in scope, THEN drop;
+        # the change-window-sized feed resolution is checkpointed
+        ch = self._op(ch, is_del).drop(*_FEED_META)
+        return self._checkpoint(self._finish(ch))
 
-    def _refresh_events(self, up: LakeTable, head: int) -> DataFrame:
+    def _finish(self, rows: DataFrame, apply_transform=True) -> DataFrame:
+        """Transform op-stamped rows, then stamp the transport columns
+        (offsets hash the downstream pk)."""
         cfg = self.applier.cfg
-        rows = self._live(up.read(version=head))
-        # transform runs on the live rows, so the key comparison below
-        # happens in DOWNSTREAM key space (a transform may derive keys)
-        live = self._finish(rows, F.lit(self._op_upsert()))
-        # keys present downstream but gone upstream → explicit deletes
-        # (LEFT ANTI on pk; both sides pruned to key columns, so the
-        # reconcile shuffles keys, not payloads)
-        want_keys = live.select(*cfg.pk_fields).distinct()
-        gone_keys = self.applier.read_target().select(*cfg.pk_fields).join(
-            want_keys, on=list(cfg.pk_fields), how="left_anti"
-        )
-        dels = self._finish(
-            gone_keys, F.lit(cfg.op_delete_value), apply_transform=False
-        )
-        return live.unionByName(dels, allowMissingColumns=True)
+        if apply_transform and self.transform is not None:
+            rows = self.transform(rows)
+            missing = {cfg.op_column, *cfg.pk_fields} - set(rows.columns)
+            if missing:
+                raise ValueError(
+                    f"cascade transform dropped required column(s) "
+                    f"{sorted(missing)}; transforms must preserve the "
+                    f"downstream pk and the {cfg.op_column!r} column"
+                )
+        return self._stamp(rows, list(cfg.pk_fields))
+
+    def _live(self, rows: DataFrame) -> DataFrame:
+        """Upstream rows belonging to the downstream view."""
+        if self.upstream_deleted_when is not None:
+            rows = rows.filter(
+                ~F.coalesce(self.upstream_deleted_when, F.lit(False))
+            )
+        if self.row_filter is not None:
+            rows = rows.filter(self.row_filter)
+        return rows

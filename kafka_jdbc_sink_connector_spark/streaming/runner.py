@@ -153,15 +153,16 @@ class CdcStreamRunner(ForeachBatchRunner):
     client's own retries.
 
     ``followers`` are objects with an idempotent ``sync()`` —
-    typically :class:`..streaming.cascade.CascadeRunner` instances —
-    run after every applied batch INSIDE the managed ``foreachBatch``,
-    so downstream silver/gold tables advance in lock-step with the
-    ingest (the medallion pipeline in one streaming query). Each
-    follower gets its own bounded retry; a follower failure fails the
-    micro-batch, and on the stream's replay the apply skips via its
-    watermark while the follower syncs the missed window — follower
-    exactly-once rides the upstream-version watermark, so the
-    composition is crash-safe end-to-end.
+    typically the maintained-view runners sharing one sync core
+    (:class:`..streaming.cascade.ViewSync`: cascade, aggregate view,
+    text index) — run after every applied batch INSIDE the managed
+    ``foreachBatch``, so downstream silver/gold tables advance in
+    lock-step with the ingest (the medallion pipeline in one streaming
+    query). Each follower gets its own bounded retry; a follower
+    failure fails the micro-batch, and on the stream's replay the
+    apply skips via its watermark while the follower syncs the missed
+    window — follower exactly-once rides the upstream-version
+    watermark, so the composition is crash-safe end-to-end.
     """
 
     def __init__(

@@ -40,22 +40,16 @@ downstream machinery built from the engine's feed + apply halves.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_jdbc_sink_connector_spark.apply import CdcApplier
 from kafka_jdbc_sink_connector_spark.lake.changes import (
     CHANGE_TYPE,
-    FROM_VERSION,
-    TO_VERSION,
     table_changes,
 )
 from kafka_jdbc_sink_connector_spark.lake.table import LakeTable
-from kafka_jdbc_sink_connector_spark.streaming.cascade import CascadeResult
-
-_FEED_META = (CHANGE_TYPE, FROM_VERSION, TO_VERSION)
+from kafka_jdbc_sink_connector_spark.streaming.cascade import ViewSync
 
 
 def default_tokenizer(text: Column) -> Column:
@@ -143,7 +137,7 @@ def search_postings(
     )
 
 
-class TextIndexRunner:
+class TextIndexRunner(ViewSync):
     """One maintained inverted index.
 
     Parameters
@@ -160,6 +154,15 @@ class TextIndexRunner:
         so a nondeterministic tokenizer would strand postings.
     """
 
+    _kind = "textindex"
+    # postings()/search_postings() do not filter soft-delete markers:
+    # soft-deleted postings would keep appearing as live hits
+    _hard_deletes = (
+        "posting-table",
+        "retracted postings must be removed, not soft-marked",
+    )
+    _refreshable = False
+
     def __init__(
         self,
         spark: SparkSession,
@@ -175,119 +178,41 @@ class TextIndexRunner:
                 f"posting-table pk must be ('term', {id_col!r}), got "
                 f"{list(applier.cfg.pk_fields)}"
             )
-        from kafka_jdbc_sink_connector_spark.config import DeleteMode
-
-        if applier.cfg.delete_mode is not DeleteMode.DELETE:
-            # a soft-delete posting applier would only flip the
-            # marker column on retraction, and postings()/
-            # search_postings() read the table without filtering
-            # markers — deleted postings would keep appearing as
-            # live hits (stale search results). Hard deletes are the
-            # posting table's contract.
-            raise ValueError(
-                "posting-table applier must use delete_mode='delete' "
-                f"(got {applier.cfg.delete_mode.value!r}): retracted "
-                "postings must be removed, not soft-marked"
-            )
-        self.spark = spark
-        self.upstream_path = upstream_path
-        self.applier = applier
+        super().__init__(spark, upstream_path, applier, source_id)
         self.id_col = id_col
         self.text_col = text_col
         self.tokenizer = tokenizer or default_tokenizer
-        self.source_id = source_id or (
-            f"textindex:{os.path.abspath(upstream_path)}"
+
+    def _events(self, mode: str, up: LakeTable, w: int) -> DataFrame:
+        if mode == "bootstrap":
+            # unpersisted: corpus x terms sized
+            return self._postings(up.read(), delete=False)
+        feed = table_changes(up, w, include_preimages=True)
+        ct = F.col(CHANGE_TYPE)
+        pre = feed.filter(ct.isin("delete", "update_preimage"))
+        post = feed.filter(ct.isin("insert", "update_postimage"))
+        # change-window-bounded computed pipeline (feed resolution +
+        # tokenize/explode); _postings projects the feed meta away
+        return self._checkpoint(
+            self._postings(pre, True).unionByName(self._postings(post, False))
         )
 
-    # -- state ---------------------------------------------------------
-
-    def watermark(self) -> int:
-        t = self.applier.table()
-        return -1 if t is None else t.applied_batch(self.source_id)
-
-    # -- sync ----------------------------------------------------------
-
-    def sync(self) -> CascadeResult:
-        up = LakeTable.load(self.spark, self.upstream_path)
-        head = up.version
-        w = self.watermark()
-        if head <= w:
-            return CascadeResult(mode="noop", upstream_version=head,
-                                 from_version=w)
-        if w < 0:
-            events = self._postings(
-                up.read(version=head), op=self._op_upsert(), offset=1
-            )
-            mode = "bootstrap"
-        else:
-            feed = table_changes(up, w, head, include_preimages=True)
-            pre = feed.filter(
-                F.col(CHANGE_TYPE).isin("delete", "update_preimage")
-            ).drop(*_FEED_META)
-            post = feed.filter(
-                F.col(CHANGE_TYPE).isin("insert", "update_postimage")
-            ).drop(*_FEED_META)
-            cfg = self.applier.cfg
-            # change-window-bounded computed pipeline (feed resolution
-            # + tokenize/explode): lazy-checkpoint so the applier's
-            # stats and merge jobs don't each re-run it. The bootstrap
-            # branch stays unpersisted (corpus x terms sized).
-            events = self._postings(
-                pre, op=cfg.op_delete_value, offset=0
-            ).unionByName(
-                self._postings(post, op=self._op_upsert(), offset=1)
-            ).localCheckpoint(eager=False)
-            mode = "incremental"
-        res = self.applier.apply_batch(
-            events, batch_id=head, source_id=self.source_id
-        )
-        return CascadeResult(mode=mode, upstream_version=head,
-                             from_version=w, batch=res)
-
-    # -- pieces --------------------------------------------------------
-
-    def _op_upsert(self) -> str:
-        cfg = self.applier.cfg
-        return (
-            cfg.op_update_values[0]
-            if cfg.op_update_values
-            else cfg.op_insert_value
-        )
-
-    def _postings(self, rows: DataFrame, op: str, offset: int) -> DataFrame:
-        cfg = self.applier.cfg
+    def _postings(self, rows: DataFrame, delete: bool) -> DataFrame:
         terms = rows.select(
-            F.col(self.id_col),
-            F.explode(
-                self.tokenizer(F.col(self.text_col))
-            ).alias("term"),
-        )
-        keys = [F.col("term"), F.col(self.id_col)]
-        # offset 0 for retractions, 1 for insertions — the collapse
-        # orders within a key only, so constant offsets suffice: a
-        # term in both images of one document sees delete@0 then
-        # upsert@1, and "earliest delete AFTER the latest upsert"
-        # keeps the posting alive
-        return terms.select(
-            "term",
+            F.explode(self.tokenizer(F.col(self.text_col))).alias("term"),
             self.id_col,
-            F.lit(op).alias(cfg.op_column),
-            F.lit(offset).cast("long").alias(cfg.offset_column),
-            F.pmod(F.xxhash64(*keys, F.lit(1)), F.lit(1024))
-            .cast("int")
-            .alias(cfg.partition_column),
         )
+        # offset 0 for retractions, 1 for insertions — the collapse
+        # orders within a key only: a term in both images of one
+        # document sees delete@0 then upsert@1, and "earliest delete
+        # AFTER the latest upsert" keeps the posting alive
+        return self._stamp(self._op(terms, delete), ["term", self.id_col],
+                           offset=0 if delete else 1)
 
     # -- queries -------------------------------------------------------
 
     def postings(self) -> DataFrame:
         return self.applier.read_target().select("term", self.id_col)
-
-    def _probe_buckets(self, terms: list[str]) -> list[int]:
-        """Manifest-level pruning: the bucket ids the probe terms hash
-        to — see :func:`_term_buckets` (the shared implementation
-        :func:`search_postings` uses)."""
-        return _term_buckets(self.spark, self.applier.table(), terms)
 
     def lookup(self, terms: list[str], mode: str = "any") -> DataFrame:
         """Documents matching ``terms``: ``any`` (OR) or ``all``

@@ -52,6 +52,21 @@ def test_compact_preserves_contents(applied):
     assert _rows(applied) == before
 
 
+def test_compact_candidates_sorted(spark, tmp_path):
+    """The compacted bucket list — returned, read and recorded in the
+    manifest — is ascending, not in the string-hash order of a set."""
+    applier = CdcApplier(spark, SinkConfig(n_buckets=8), str(tmp_path / "t"),
+                         audit_ts=audit_col())
+    events = generate_cdc_events(
+        spark, GenSpec(n_events=400, n_conversations=40,
+                       turns_per_conversation=2)
+    )
+    applier.apply_batch(events, batch_id=0)
+    done = compact(applier.table(), min_files=1)
+    assert done == list(range(8))
+    assert applier.table().snapshot.stats["compacted_buckets"] == done
+
+
 def test_vacuum_removes_history_keeps_latest(applied, spark):
     before = _rows(applied)
     t = applied.table()

@@ -13,6 +13,7 @@ from kafka_jdbc_sink_connector_spark.apply import CdcApplier
 from kafka_jdbc_sink_connector_spark.config import SinkConfig
 from kafka_jdbc_sink_connector_spark.streaming.textindex import (
     TextIndexRunner,
+    _term_buckets,
     default_tokenizer,
 )
 
@@ -177,7 +178,7 @@ def test_lookup_prunes_to_probe_buckets(spark, tmp_path):
     bronze.apply_batch(_events_df(spark, rows), batch_id=0)
     run.sync()
     t = run.applier.table()
-    probe = run._probe_buckets(["term3"])
+    probe = _term_buckets(spark, t, ["term3"])
     assert len(probe) == 1 and 0 <= probe[0] < t.snapshot.n_buckets
     # pruned result == unpruned filter (correctness of the pruning)
     got = {r[0] for r in run.lookup(["term3"]).collect()}
@@ -187,9 +188,15 @@ def test_lookup_prunes_to_probe_buckets(spark, tmp_path):
     }
     assert got == want == {"c3"}
     # and the pruned read really touches fewer buckets than exist
-    assert len(run._probe_buckets(["term3", "shared"])) <= 2 < (
+    assert len(_term_buckets(spark, t, ["term3", "shared"])) <= 2 < (
         t.snapshot.n_buckets
     )
+
+
+def test_sync_rejects_full_refresh(spark, tmp_path):
+    _, run = _mk(spark, tmp_path)
+    with pytest.raises(ValueError, match="TextIndexRunner has no full_refresh"):
+        run.sync(full_refresh=True)
 
 
 def test_lookup_rejects_empty_terms(spark, tmp_path):
