@@ -337,8 +337,6 @@ class CdcApplier:
                 self.quarantine_path, f"batch_id={batch_id}"
             )
             if os.path.isdir(stale):
-                import shutil
-
                 shutil.rmtree(stale)
         return tagged, casts, stats_rows
 

@@ -323,8 +323,8 @@ def _adjacent_delta_changes(
     of the generic diff's; measured trade at local sizes in SCALE.md
     ("Change data feed").
 
-    New state for the affected keys = ``mor.resolve(old state, new
-    deltas)`` then ``mor.apply_subset_overlays(…, new sdels)`` —
+    New state for the affected keys = ``mor.resolve(old state, folded
+    new deltas)`` then ``mor.apply_subset_overlays(…, new sdels)`` —
     resolution composes (the resolved old row plays the base role at
     position (-1, -inf), exactly how a base file row written by
     compaction would, and every NEW sdel entry is positioned after
@@ -425,13 +425,14 @@ def _adjacent_delta_changes(
         mor.BUCKET_COL,
         F.lit(None).cast("int"),  # only carried through, keys drive joins
     )
+    meta = new_snap.mor_meta
+    new = mor.resolve(
+        base, mor.fold_deltas(deltas, keys, meta), new_snap, meta,
+        carry_pos=sdels is not None,
+    )
     if sdels is not None:
-        resolved = mor.resolve(base, deltas, new_snap, carry_pos=True)
-        new = mor.apply_subset_overlays(resolved, sdels, new_snap).drop(
-            mor.BUCKET_COL
-        )
-    else:
-        new = mor.resolve(base, deltas, new_snap).drop(mor.BUCKET_COL)
+        new = mor.apply_subset_overlays(new, sdels, new_snap, meta)
+    new = new.drop(mor.BUCKET_COL)
     return _keywise_diff(
         new, old, keys, cols, cmp_cols, old_snap.version,
         new_snap.version, include_preimages,

@@ -21,9 +21,13 @@ Delta row layout (per key, per commit):
 * ``__del_off`` — the delete's batch offset,
 * ``__bucket`` — same hash bucket as the base layout.
 
-Resolution (per key, mirrors ``operators/merge.py``'s action table
-across batch boundaries; position = (seq, offset), base row = (-1,
--inf)):
+Resolution (per key, position = (seq, offset), base row = (-1,
+-inf)) is split in two: :func:`fold_deltas` folds a key's delta rows
+across commits (readers only), and :func:`resolve` applies the rule
+below per row. The copy-on-write merge (``operators/merge.py``) runs
+the same :func:`resolve` over one batch's delta rows
+(:func:`batch_keys`, no aggregate) and rewrites the buckets, so both
+layouts share one rule set:
 
 1. ``U`` = the latest delta upsert by position; valid only if the
    insert mode allows it (UPDATE mode needs a base row to match).
@@ -43,7 +47,7 @@ pk hash partitioning and deltas stay small between compactions.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -69,13 +73,18 @@ def row_struct_fields(schema: T.StructType, key_fields: list[str]) -> list[T.Str
     return [f for f in schema.fields if f.name not in set(key_fields)]
 
 
-def delta_schema(schema: T.StructType, key_fields: list[str]) -> T.StructType:
-    """Read schema for delta files at the current table schema (older
-    files null-backfill missing nested fields, same as base files)."""
-    row_t = T.StructType(
+def row_struct_type(schema: T.StructType, key_fields: list[str]) -> T.StructType:
+    """The __ups/__del struct type: the non-key columns, all nullable."""
+    return T.StructType(
         [T.StructField(f.name, f.dataType, True)
          for f in row_struct_fields(schema, key_fields)]
     )
+
+
+def delta_schema(schema: T.StructType, key_fields: list[str]) -> T.StructType:
+    """Read schema for delta files at the current table schema (older
+    files null-backfill missing nested fields, same as base files)."""
+    row_t = row_struct_type(schema, key_fields)
     fields = [schema[k] for k in key_fields]
     fields += [
         T.StructField(DELTA_SEQ, T.LongType(), False),
@@ -89,38 +98,105 @@ def delta_schema(schema: T.StructType, key_fields: list[str]) -> T.StructType:
     return T.StructType(fields)
 
 
-def _dels_agg(hard: bool):
-    """Aggregate expression collecting each key's delete positions,
-    sorted by (seq, off). Each delta row contributes its winning delete
-    (the earliest after its batch's latest upsert). In hard mode a
-    delete *preceding* the latest upsert also matters (it removed the
-    pre-existing row before the upsert re-inserted — or, under
-    insert_mode=update, failed to re-insert), so the batch's
-    ``__first_del_off`` is emitted as a second entry; its overlay
-    struct is NULL, which is fine — hard mode never reads it."""
-    winner = F.when(
-        F.col(DELTA_DEL_OFF).isNotNull(),
+#: per-key resolution input, one row per key (see :func:`resolve`):
+#: ``__u`` — the latest upsert as (seq, off, row), or NULL; ``__dels``
+#: — the key's delete entries (seq, off, row), sorted by position;
+#: ``__dbucket`` — the key's bucket
+KEY_UPS = "__u"
+KEY_DELS = "__dels"
+KEY_BUCKET = "__dbucket"
+
+
+def _entry(off: str, row: str, present: Column | None = None) -> Column:
+    """One delta row's (seq, off, row) entry, NULL when the row has no
+    such event (gated on the offset, not the struct: a hard-mode
+    delete carries a NULL overlay struct but a real position)."""
+    return F.when(
+        F.col(off).isNotNull() if present is None else present,
         F.struct(
             F.col(DELTA_SEQ).alias("seq"),
-            F.col(DELTA_DEL_OFF).alias("off"),
-            F.col(DELTA_DEL).alias("row"),
+            F.col(off).alias("off"),
+            F.col(row).alias("row"),
         ),
     )
+
+
+def _entries(hard: bool) -> tuple[Column, list[Column]]:
+    """A delta row's upsert entry and its delete entries in position
+    order. Each delta row contributes its winning delete (the earliest
+    after its batch's latest upsert). In hard mode a delete *preceding*
+    the latest upsert also matters (it removed the pre-existing row
+    before the upsert re-inserted — or, under insert_mode=update,
+    failed to re-insert), so the batch's ``__first_del_off`` is a
+    second, earlier entry; its overlay struct is NULL, which is fine —
+    hard mode never reads it."""
+    ups = _entry(DELTA_UPS_OFF, DELTA_UPS)
+    winner = _entry(DELTA_DEL_OFF, DELTA_DEL)
     if not hard:
-        return F.array_sort(F.collect_list(winner))
-    first = F.when(
-        F.col(DELTA_FIRST_DEL_OFF).isNotNull()
-        & ~F.col(DELTA_FIRST_DEL_OFF).eqNullSafe(F.col(DELTA_DEL_OFF)),
-        F.struct(
-            F.col(DELTA_SEQ).alias("seq"),
-            F.col(DELTA_FIRST_DEL_OFF).alias("off"),
-            F.col(DELTA_DEL).alias("row"),
-        ),
+        return ups, [winner]
+    first_off = F.col(DELTA_FIRST_DEL_OFF)
+    first = _entry(
+        DELTA_FIRST_DEL_OFF, DELTA_DEL,
+        first_off.isNotNull() & ~first_off.eqNullSafe(F.col(DELTA_DEL_OFF)),
     )
-    entries = F.filter(
-        F.array(winner, first), lambda x: x.isNotNull()
+    return ups, [first, winner]
+
+
+def _present(entries: list[Column]) -> Column:
+    return F.filter(F.array(*entries), lambda x: x.isNotNull())
+
+
+def fold_deltas(deltas: DataFrame, keys: list[str], meta: dict) -> DataFrame:
+    """Per-key fold of delta files (any number of rows per key, across
+    commits) → the :func:`resolve` input: the latest upsert by
+    lexicographic max over (seq, off, row) — (seq, off) is unique per
+    key, so the row never ties — and every delete entry, sorted. A
+    declarative aggregate (partial aggregation map-side, reuses the pk
+    hash partitioning for the join)."""
+    ups, dels = _entries(bool(meta.get("hard")))
+    if len(dels) == 1:
+        dels_agg = F.array_sort(F.collect_list(dels[0]))
+    else:
+        dels_agg = F.array_sort(F.flatten(F.collect_list(_present(dels))))
+    return deltas.groupBy(*keys).agg(
+        F.max(ups).alias(KEY_UPS),
+        dels_agg.alias(KEY_DELS),
+        F.max(BUCKET_COL).alias(KEY_BUCKET),
     )
-    return F.array_sort(F.flatten(F.collect_list(entries)))
+
+
+def batch_keys(delta_rows: DataFrame, keys: list[str], meta: dict) -> DataFrame:
+    """One batch's delta rows (with ``__seq``), already one per key →
+    the :func:`resolve` input without an aggregate: a batch's own
+    entries are already in position order."""
+    ups, dels = _entries(bool(meta.get("hard")))
+    return delta_rows.select(
+        *keys,
+        ups.alias(KEY_UPS),
+        _present(dels).alias(KEY_DELS),
+        F.col(BUCKET_COL).alias(KEY_BUCKET),
+    )
+
+
+def guard_passes(meta: dict, col) -> Column:
+    """The "not already deleted" guard over a row's values (``col(name)``
+    → Column), three-valued like the reference's generated
+    ``col != value`` SQL (``BufferedRecords.java:287-303``): an OR of
+    disjuncts where a NULL guard value passes iff
+    ``guard_null_is_not_null`` and the column is not NULL, and a NULL
+    column blocks a ``!= value`` disjunct."""
+    ok = F.lit(False)
+    for c, value in meta.get("guard", []):
+        if value is None:
+            part = (
+                col(c).isNotNull()
+                if meta.get("guard_null_is_not_null")
+                else F.lit(False)
+            )
+        else:
+            part = col(c) != F.lit(value)
+        ok = ok | part
+    return ok
 
 
 #: subset-delete delta layout (``delete_as_update_key`` ⊂ pk): one row
@@ -135,13 +211,10 @@ SDEL_LIST = "__sdlist"
 
 
 def sdel_schema(schema: T.StructType, snap_key_fields, sdel_key) -> T.StructType:
-    row_t = T.StructType(
-        [T.StructField(f.name, f.dataType, True)
-         for f in row_struct_fields(schema, list(snap_key_fields))]
-    )
     entry = T.StructType(
         [T.StructField("off", T.LongType(), True),
-         T.StructField("row", row_t, True)]
+         T.StructField("row", row_struct_type(schema, list(snap_key_fields)),
+                       True)]
     )
     fields = [schema[k] for k in sdel_key]
     fields += [
@@ -158,23 +231,17 @@ P_POS = "__p_pos"
 
 
 def apply_subset_overlays(
-    resolved: DataFrame, sdels: DataFrame, snap
+    resolved: DataFrame, sdels: DataFrame, snap, meta: dict
 ) -> DataFrame:
-    """Overlay subset-key deletes on pk-resolved rows (``resolved``
-    must carry ``__p_pos`` from :func:`resolve`). Per row, the winning
-    delete is the earliest sdel entry positioned after the row's last
-    upsert — later ones are blocked by the not-already-deleted guard,
-    which is also checked against the row's CURRENT marker (a row
-    already deleted in base stays untouched). Hard mode drops matched
-    rows; under insert_mode=update any matching delete drops the row
-    (updates never re-create it)."""
-    meta = snap.mor_meta
-    soft = bool(meta.get("soft"))
-    hard = bool(meta.get("hard"))
-    upd_only = bool(meta.get("upd_only"))
-    guard = [tuple(g) for g in meta.get("guard", [])]
-    guard_null = bool(meta.get("guard_null_is_not_null"))
-    overlay_cols = set(meta.get("overlay_cols", []))
+    """Overlay subset-key deletes (sdel rows with ``__seq``) on
+    pk-resolved rows (``resolved`` must carry ``__p_pos`` from
+    :func:`resolve`). Per row, the winning delete is the earliest sdel
+    entry positioned after the row's last upsert — later ones are
+    blocked by the not-already-deleted guard, which is also checked
+    against the row's CURRENT marker (a row already deleted in base
+    stays untouched). Hard mode drops matched rows; under
+    insert_mode=update any matching delete drops the row (updates never
+    re-create it)."""
     skey = list(meta.get("sdel_key") or [])
     if not skey:
         return resolved.drop(P_POS)
@@ -206,85 +273,59 @@ def apply_subset_overlays(
     d0 = F.get(applicable, 0)
 
     out_cols = [f.name for f in snap.schema.fields] + [BUCKET_COL]
-    if hard:
+    if meta.get("hard"):
         matched = (
             F.coalesce(F.size("__sd") > 0, F.lit(False))
-            if upd_only
+            if meta.get("upd_only")
             else d0.isNotNull()
         )
         return j.filter(~matched).select(*out_cols)
-    if not soft:
+    if not meta.get("soft"):
         return j.select(*out_cols)  # delete mode none: sdels never written
-    guard_parts = [F.lit(False)]
-    for col, value in guard:
-        if value is None:
-            guard_parts.append(
-                F.col(col).isNotNull() if guard_null else F.lit(False)
-            )
-        else:
-            guard_parts.append(F.col(col) != F.lit(value))
-    guard_ok = guard_parts[0]
-    for g in guard_parts[1:]:
-        guard_ok = guard_ok | g
-    overlay = d0.isNotNull() & guard_ok
-    sel = []
-    for c in out_cols:
-        if c in overlay_cols:
-            sel.append(
-                F.when(overlay, d0["row"][c]).otherwise(F.col(c)).alias(c)
-            )
-        else:
-            sel.append(F.col(c))
-    return j.select(*sel)
+    overlay = d0.isNotNull() & guard_passes(meta, F.col)
+    overlay_cols = set(meta.get("overlay_cols", []))
+    return j.select(*[
+        F.when(overlay, d0["row"][c]).otherwise(F.col(c)).alias(c)
+        if c in overlay_cols else F.col(c)
+        for c in out_cols
+    ])
 
 
 def resolve(
-    base: DataFrame, deltas: DataFrame, snap, carry_pos: bool = False
+    base: DataFrame | None, keyed: DataFrame, snap, meta: dict,
+    carry_pos: bool = False,
 ) -> DataFrame:
-    """Merge base rows with delta rows → the current table state
-    (with ``__bucket``). ``base`` must include ``__bucket``.
+    """Per-row resolution of ``keyed`` (one row per key, from
+    :func:`fold_deltas` or :func:`batch_keys`) over ``base`` (rows with
+    ``__bucket``, at position (-1, LONG_MIN); None when the buckets hold
+    no rows — then there is no join) → the resolved rows, with
+    ``__bucket``. ``meta`` is the resolution spec (``snap.mor_meta`` for
+    readers, the writer's config for a copy-on-write merge).
     ``carry_pos`` appends ``__p_pos`` — each output row's (seq, offset)
-    position (base rows: (-1, LONG_MIN)) — for the subset-delete
-    overlay pass."""
-    meta = snap.mor_meta
+    position — for the subset-delete overlay pass."""
     soft = bool(meta.get("soft"))
     hard = bool(meta.get("hard"))
     upd_only = bool(meta.get("upd_only"))
-    guard = [tuple(g) for g in meta.get("guard", [])]
-    guard_null = bool(meta.get("guard_null_is_not_null"))
     overlay_cols = set(meta.get("overlay_cols", []))
     keys = list(snap.key_fields)
 
     pos = lambda s, o: F.struct(s.alias("seq"), o.alias("off"))  # noqa: E731
 
-    agg = deltas.groupBy(*keys).agg(
-        # lexicographic max over (seq, off, row): picks the latest
-        # upsert; (seq, off) is unique per key so the row never ties
-        # gate on the offsets, not the structs: a hard-mode delete
-        # carries a NULL overlay struct but a real position
-        F.max(
-            F.when(
-                F.col(DELTA_UPS_OFF).isNotNull(),
-                F.struct(
-                    F.col(DELTA_SEQ).alias("seq"),
-                    F.col(DELTA_UPS_OFF).alias("off"),
-                    F.col(DELTA_UPS).alias("row"),
-                ),
-            )
-        ).alias("__u"),
-        _dels_agg(hard).alias("__dels"),
-        F.max(BUCKET_COL).alias("__dbucket"),
-    )
+    if base is None:
+        j = keyed
+        b_exists = F.lit(False)
+        b_col = lambda c: F.lit(None)  # noqa: E731
+    else:
+        b = base.select(
+            *[F.col(c).alias(f"b_{c}") for c in base.columns],
+            F.lit(True).alias("__b_exists"),
+        )
+        cond = [b[f"b_{k}"] == keyed[k] for k in keys]
+        j = b.join(keyed, cond, "full_outer")
+        b_exists = F.col("__b_exists").isNotNull()
+        b_col = lambda c: F.col(f"b_{c}")  # noqa: E731
 
-    b = base.select(
-        *[F.col(c).alias(f"b_{c}") for c in base.columns],
-        F.lit(True).alias("__b_exists"),
-    )
-    cond = [b[f"b_{k}"] == agg[k] for k in keys]
-    j = b.join(agg, cond, "full_outer")
-
-    u = F.col("__u")
-    b_exists = F.col("__b_exists").isNotNull()
+    u = F.col(KEY_UPS)
     u_valid = u.isNotNull()
     if upd_only:
         u_valid = u_valid & b_exists
@@ -293,7 +334,7 @@ def resolve(
             # re-insert possible) — later updates match nothing
             u_valid = u_valid & ~F.coalesce(
                 F.exists(
-                    "__dels",
+                    KEY_DELS,
                     lambda d: pos(d["seq"], d["off"])
                     < pos(u["seq"], u["off"]),
                 ),
@@ -304,28 +345,17 @@ def resolve(
         pos(F.lit(-1).cast("long"), F.lit(_LONG_MIN))
     )
     after = F.filter(
-        "__dels", lambda d: pos(d["seq"], d["off"]) > p_pos
+        KEY_DELS, lambda d: pos(d["seq"], d["off"]) > p_pos
     )
     d_first = F.get(after, 0)  # NULL when no delete follows P
 
     def p_col(c: str):
         if c in keys:
-            return F.coalesce(F.col(c), F.col(f"b_{c}"))
-        return F.when(u_valid, u["row"][c]).otherwise(F.col(f"b_{c}"))
+            return F.coalesce(F.col(c), b_col(c))
+        return F.when(u_valid, u["row"][c]).otherwise(b_col(c))
 
     if soft:
-        guard_parts = [F.lit(False)]
-        for col, value in guard:
-            if value is None:
-                guard_parts.append(
-                    p_col(col).isNotNull() if guard_null else F.lit(False)
-                )
-            else:
-                guard_parts.append(p_col(col) != F.lit(value))
-        guard_ok = guard_parts[0]
-        for g in guard_parts[1:]:
-            guard_ok = guard_ok | g
-        overlay = d_first.isNotNull() & guard_ok
+        overlay = d_first.isNotNull() & guard_passes(meta, p_col)
         drop = ~p_exists
     else:
         overlay = F.lit(False)
@@ -334,17 +364,12 @@ def resolve(
     out = []
     for f in snap.schema.fields:
         c = f.name
-        if c in keys:
-            expr = p_col(c)
-        elif soft and c in overlay_cols:
-            expr = F.when(overlay, d_first["row"][c]).otherwise(p_col(c))
-        else:
-            expr = p_col(c)
+        expr = p_col(c)
+        if soft and c in overlay_cols and c not in keys:
+            expr = F.when(overlay, d_first["row"][c]).otherwise(expr)
         out.append(expr.cast(f.dataType).alias(c))
     out.append(
-        F.coalesce(F.col(f"b_{BUCKET_COL}"), F.col("__dbucket")).alias(
-            BUCKET_COL
-        )
+        F.coalesce(b_col(BUCKET_COL), F.col(KEY_BUCKET)).alias(BUCKET_COL)
     )
     if carry_pos:
         out.append(p_pos.alias(P_POS))

@@ -429,21 +429,24 @@ class LakeTable:
         else:
             cold = [b for b in requested if b not in hot_ids]
             sdels = snap.sdel_files(hot)
+            meta = snap.mor_meta
+            deltas = self._scan(
+                snap.delta_files(hot),
+                mor.delta_schema(snap.schema, snap.key_fields),
+            )
             df = mor.resolve(
                 base(hot),
-                self._scan(snap.delta_files(hot),
-                           mor.delta_schema(snap.schema, snap.key_fields)),
-                snap,
-                carry_pos=bool(sdels),
+                mor.fold_deltas(deltas, list(snap.key_fields), meta),
+                snap, meta, carry_pos=bool(sdels),
             )
             if sdels:
                 df = mor.apply_subset_overlays(
                     df,
                     self._scan(sdels, mor.sdel_schema(
                         snap.schema, snap.key_fields,
-                        list(snap.mor_meta.get("sdel_key") or []),
+                        list(meta.get("sdel_key") or []),
                     )),
-                    snap,
+                    snap, meta,
                 )
             if cold:
                 df = df.unionByName(base(cold, where))

@@ -21,14 +21,17 @@ AUDIT_SENTINEL = "<<audit>>"
 
 
 def replay(
-    events: list[dict], cfg: SinkConfig, payload_cols: list[str]
+    events: list[dict], cfg: SinkConfig, payload_cols: list[str],
+    state: dict[tuple, dict] | None = None,
 ) -> dict[tuple, dict]:
-    """Apply events (dicts) sequentially; returns key -> final row.
+    """Apply events (dicts) sequentially, starting from ``state`` (a
+    previous replay's result, left unchanged) or an empty table;
+    returns key -> final row.
 
     ``audit`` column is set to AUDIT_SENTINEL on every touched row so
     comparisons can substitute the engine's fixed test timestamp.
     """
-    state: dict[tuple, dict] = {}
+    state = {k: dict(v) for k, v in (state or {}).items()}
     marker_col = cfg.soft_delete_column
     soft = cfg.delete_mode is DeleteMode.UPDATE
     hard = cfg.delete_mode is DeleteMode.DELETE

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import zlib
 
 import pytest
 from pyspark.sql import functions as F
@@ -44,7 +45,7 @@ def _events_df(spark, rows, with_optional=()):
 
 def ev(off, op, conv, turn, **kw):
     base = {
-        "kafka_partition": hash(conv) % 4,
+        "kafka_partition": zlib.crc32(str(conv).encode()) % 4,
         "kafka_offset": off,
         "op": op,
         "conv_id": conv,

@@ -4,6 +4,7 @@ snapshot reads."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from kafka_jdbc_sink_connector_spark.apply import CdcApplier
@@ -89,6 +90,34 @@ def test_guard_null_translated_as_is_not_null(spark, tmp_table):
     r2 = applier.read_target().collect()[0]
     assert r2["ts"] != r1["ts"]
     _compare_to_oracle(applier, rows1 + [ev(9, "d", "conv-a", 0)], cfg)
+
+
+@pytest.fixture(params=["cow", "mor"])
+def merge_mode(request):
+    return request.param
+
+
+def test_custom_guard_checks_the_fresh_upsert(spark, tmp_table, merge_mode):
+    """A delete after an upsert in the same batch is the reference's
+    soft-delete UPDATE matching the freshly merged row, so the guard
+    is checked on THAT row. With `op_type != 'U'` (marker value 'U')
+    an update then a delete leaves the update in place, retain field
+    ts included — on a new key (bootstrap batch) and on an existing
+    one (steady batch: a bucket rewrite under cow, a delta commit
+    under mor)."""
+    cfg = SinkConfig(soft_delete_conditions=(("op_type", "U"),),
+                     n_buckets=2, merge_mode=merge_mode)
+    applier = CdcApplier(spark, cfg, tmp_table, audit_ts=audit_col())
+    rows0 = [ev(1, "c", "conv-a", 0), ev(2, "u", "conv-b", 0),
+             ev(3, "d", "conv-b", 0)]
+    rows1 = [ev(4, "u", "conv-a", 0, text="v2"), ev(5, "d", "conv-a", 0)]
+    applier.apply_batch(_events_df(spark, rows0), batch_id=0)
+    applier.apply_batch(_events_df(spark, rows1), batch_id=1)
+    got = {r["conv_id"]: r for r in applier.read_target().collect()}
+    assert got["conv-a"]["text"] == "v2"
+    assert got["conv-a"]["ts"] == ev(4, "u", "conv-a", 0)["ts"]
+    assert got["conv-b"]["ts"] == ev(2, "u", "conv-b", 0)["ts"]
+    _compare_to_oracle(applier, rows0 + rows1, cfg)
 
 
 def test_snapshot_read_op_r(spark, tmp_table):

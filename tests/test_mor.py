@@ -103,44 +103,70 @@ def test_mor_guard_earliest_delete_wins_across_batches(spark, tmp_table):
     assert row["ts"] == ts_first  # second delete blocked by the guard
 
 
-def test_mor_matches_cow_and_oracle_on_generator(spark, tmp_path):
+@pytest.mark.parametrize(
+    "delete_mode,insert_mode,subset",
+    [(d, i, False) for d in ("update", "delete", "none")
+     for i in ("upsert", "update")] + [("update", "upsert", True)],
+    ids=[f"{d}-{i}" for d in ("update", "delete", "none")
+         for i in ("upsert", "update")] + ["update-upsert-subset"],
+)
+def test_mor_matches_cow_and_oracle_on_generator(
+    spark, tmp_path, delete_mode, insert_mode, subset
+):
     """Strong equivalence: 4 micro-batches of the Zipf generator stream
     produce identical final state under COW, MOR, and the sequential
-    replay oracle."""
-    spec = GenSpec(n_events=4000, n_conversations=60,
+    replay oracle — per delete mode × insert mode, and with a subset
+    delete key. Under insert_mode=update the first batch is applied as
+    upserts (an update-only pipeline cannot seed its own rows)."""
+    import datetime as dt
+
+    from tests.oracle import AUDIT_SENTINEL
+
+    spec = GenSpec(n_events=1200, n_conversations=40,
                    turns_per_conversation=8, delete_fraction=0.08)
     events = generate_cdc_events(spark, spec).cache()
+    n = spec.n_events
+    batches = [
+        events.filter((F.col("kafka_offset") >= i * n // 4)
+                      & (F.col("kafka_offset") < (i + 1) * n // 4))
+        for i in range(4)
+    ]
+
+    def cfg(mode, insert):
+        return SinkConfig(
+            n_buckets=8, merge_mode=mode, delete_mode=delete_mode,
+            insert_mode=insert,
+            delete_as_update_key=("conv_id",) if subset else None,
+        )
+
     try:
         finals = {}
         for mode in ("cow", "mor"):
-            cfg = SinkConfig(n_buckets=8, merge_mode=mode)
-            applier = CdcApplier(spark, cfg, str(tmp_path / mode),
+            path = str(tmp_path / mode)
+            CdcApplier(spark, cfg(mode, "upsert"), path,
+                       audit_ts=audit_col()).apply_batch(batches[0], 0)
+            applier = CdcApplier(spark, cfg(mode, insert_mode), path,
                                  audit_ts=audit_col())
-            n = spec.n_events
-            for i in range(4):
-                b = events.filter(
-                    (F.col("kafka_offset") >= i * n // 4)
-                    & (F.col("kafka_offset") < (i + 1) * n // 4)
-                )
-                applier.apply_batch(b, batch_id=i)
+            for i in range(1, 4):
+                applier.apply_batch(batches[i], batch_id=i)
             finals[mode] = {
                 (r["conv_id"], r["turn_idx"]): r.asDict()
                 for r in applier.read_target().collect()
             }
+        assert finals["mor"], "the stream must leave rows to compare"
         assert set(finals["cow"]) == set(finals["mor"])
         for key, crow in finals["cow"].items():
             assert crow == finals["mor"][key], key
-        rows = [r.asDict() for r in events.collect()]
         payload = ["conv_id", "turn_idx", "role", "text", "ts", "tool",
                    "meta_source"]
-        want = replay(rows, SinkConfig(n_buckets=8), payload)
+        rows = [[r.asDict() for r in b.collect()] for b in batches]
+        want = replay(rows[0], cfg("cow", "upsert"), payload)
+        want = replay(rows[1] + rows[2] + rows[3],
+                      cfg("cow", insert_mode), payload, state=want)
         assert set(finals["mor"]) == set(want)
         # full per-row comparison against the sequential replay oracle —
         # every payload column including the retain field ts (a key-set
         # check once hid an intra-batch multi-delete divergence)
-        import datetime as dt
-
-        from tests.oracle import AUDIT_SENTINEL
         fixed = dt.datetime(2024, 6, 1)
         for key, wrow in want.items():
             grow = finals["mor"][key]

@@ -290,6 +290,51 @@ def test_mor_sdel_resolve_plan_shape(spark, tmp_path):
     assert "BroadcastExchange" in plan  # batch-sized sdel side
 
 
+@pytest.mark.parametrize("subset,exchanges,smjs", [(False, 2, 1),
+                                                   (True, 4, 2)],
+                         ids=["soft_delete", "subset_delete"])
+def test_cow_merge_plan_shape(spark, tmp_path, monkeypatch, subset,
+                              exchanges, smjs):
+    """Copy-on-write merge, as the rows handed to ``commit_rewrite``:
+    a steady batch pays the collapse shuffle plus one target-side
+    shuffle into one sort-merge join on the pk (a subset delete adds
+    its own collapse and the overlay join on the subset key); the
+    bootstrap batch has no join at all; no Python nodes anywhere."""
+    from kafka_jdbc_sink_connector_spark.apply import CdcApplier
+
+    from tests.test_apply_batch import _events_df, audit_col, ev
+
+    plans = []
+    real = LakeTable.commit_rewrite
+
+    def spy(self, new_data, *args, **kwargs):
+        plans.append(plan_of(new_data))
+        return real(self, new_data, *args, **kwargs)
+
+    monkeypatch.setattr(LakeTable, "commit_rewrite", spy)
+    cfg = SinkConfig(n_buckets=4, delete_as_update_key=(
+        ("conv_id",) if subset else None))
+    applier = CdcApplier(spark, cfg, str(tmp_path / "t"),
+                         audit_ts=audit_col())
+    applier.apply_batch(_events_df(spark, [ev(1, "c", "conv-a", 0),
+                                           ev(2, "c", "conv-b", 0)]),
+                        batch_id=0)
+    dele = {"kafka_partition": 0, "kafka_offset": 4, "op": "d",
+            "conv_id": "conv-b", "turn_idx": None if subset else 0,
+            "ts": ev(4, "d", "conv-b", 0)["ts"]}
+    applier.apply_batch(_events_df(spark, [
+        ev(3, "u", "conv-a", 0, text="v2"), dele,
+    ]), batch_id=1)
+    bootstrap, steady = plans
+    assert steady.count("Exchange") == exchanges
+    assert steady.count("SortMergeJoin") == smjs
+    if not subset:
+        assert "Join" not in bootstrap
+    for plan in plans:
+        assert "BatchEvalPython" not in plan
+        assert "ArrowEvalPython" not in plan
+
+
 def test_ivf_ann_plan_broadcasts_probes(spark):
     """IVF: the probe side (queries × n_probe cells) broadcasts; the
     corpus is scanned once; assignment is pure codegen'd expressions
