@@ -15,7 +15,7 @@ reference chain ``put → JdbcAuditDbWriter.write → BufferedRecords.flush
 6. **lineage** append (per-partition offset ranges + op counts).
 
 Job economy (the per-batch fixed cost is what bounds throughput on
-small micro-batches): exactly **three Spark jobs per batch** —
+small micro-batches): the events are read by **three consumers** —
 
 * one combined stats pass over the validated-tagged events producing
   per-partition lineage counts, the quarantine count, *and* the set of
@@ -23,8 +23,14 @@ small micro-batches): exactly **three Spark jobs per batch** —
 * one (conditional) quarantine write, only when bad rows exist;
 * the merge itself (collapse → outer join → bucket-partitioned write).
 
-Schema evolution and the lineage append are metadata/driver-side
-(manifest commit; collected lineage rows re-parallelized), not scans.
+Adaptive query execution runs each shuffle map stage as its own Spark
+job, so a steady copy-on-write batch with quarantined rows launches 7
+jobs: 2 for the stats pass, 1 for the quarantine write and 4 for the
+merge. Events a stream runner's record parser produced arrive
+checkpointed (``streaming/runner.py``): the stats pass computes them
+and the other two consumers read them back. Schema evolution and the
+lineage append are metadata/driver-side (manifest commit; lineage rows
+written by the driver), not scans.
 """
 
 from __future__ import annotations
@@ -254,14 +260,12 @@ class CdcApplier:
         cfg = self.cfg
         snap = snap or table.snapshot
         op = F.col(cfg.op_column)
-        # NOTE deliberately NOT persisted: the 2-3 consumer jobs
+        # NOTE not persisted here: on a plain scan the 2-3 consumers
         # (stats, optional quarantine, merge) re-run the vectorized
         # columnar scan, which measures ~20x cheaper than building a
-        # row cache of a wide micro-batch (cache build was the single
-        # largest cost in profiling). Sources that are expensive to
-        # re-read (e.g. Kafka without replay) should materialize the
-        # batch to parquet first, which is what the file-stream source
-        # already provides.
+        # row cache of a wide micro-batch. Computed events — a stream
+        # runner's record parser, e.g. the Python Avro decode — arrive
+        # already checkpointed by the runner, so they are decoded once.
         # per-record type rescue (O18): mistyped values quarantine
         # individually; the rest of the batch applies with try_cast
         casts, cast_err = coerce_for_target(snap.schema, events, cfg)

@@ -33,10 +33,12 @@ layouts share one rule set:
    insert mode allows it (UPDATE mode needs a base row to match).
 2. ``P`` = ``U`` if valid else the base row; no ``P`` → no output row
    (deletes match nothing).
-3. ``D*`` = the **earliest** delete positioned after ``P`` — earliest,
-   not latest, because the reference's "not already deleted" guard
-   blocks every later delete from re-overwriting the retain fields
-   (``BufferedRecords.java:287-303``).
+3. ``D*`` = the delete that ends the run of deletes positioned after
+   ``P`` (:func:`winning_delete`): the reference applies them in order
+   while its "not already deleted" guard passes
+   (``BufferedRecords.java:287-303``), so ``D*`` is the first one whose
+   resulting row fails the guard — with the usual marker guard, the
+   earliest — else the last one. Hard mode takes the earliest.
 4. soft mode: overlay ``D*``'s marker/audit/retain onto ``P`` iff the
    guard passes on ``P``'s values; hard mode: drop the row.
 
@@ -123,8 +125,8 @@ def _entry(off: str, row: str, present: Column | None = None) -> Column:
 
 def _entries(hard: bool) -> tuple[Column, list[Column]]:
     """A delta row's upsert entry and its delete entries in position
-    order. Each delta row contributes its winning delete (the earliest
-    after its batch's latest upsert). In hard mode a delete *preceding*
+    order. Each delta row contributes its batch's winning delete (see
+    ``operators/dedup.py``). In hard mode a delete *preceding*
     the latest upsert also matters (it removed the pre-existing row
     before the upsert re-inserted — or, under insert_mode=update,
     failed to re-insert), so the batch's ``__first_del_off`` is a
@@ -180,23 +182,42 @@ def batch_keys(delta_rows: DataFrame, keys: list[str], meta: dict) -> DataFrame:
 
 def guard_passes(meta: dict, col) -> Column:
     """The "not already deleted" guard over a row's values (``col(name)``
-    → Column), three-valued like the reference's generated
-    ``col != value`` SQL (``BufferedRecords.java:287-303``): an OR of
-    disjuncts where a NULL guard value passes iff
-    ``guard_null_is_not_null`` and the column is not NULL, and a NULL
-    column blocks a ``!= value`` disjunct."""
+    → Column, or a plain value known when the plan is built),
+    three-valued like the reference's generated ``col != value`` SQL
+    (``BufferedRecords.java:287-303``): an OR of disjuncts where a NULL
+    guard value passes iff ``guard_null_is_not_null`` and the column is
+    not NULL, and a NULL column blocks a ``!= value`` disjunct."""
+    null_passes = bool(meta.get("guard_null_is_not_null"))
     ok = F.lit(False)
     for c, value in meta.get("guard", []):
-        if value is None:
-            part = (
-                col(c).isNotNull()
-                if meta.get("guard_null_is_not_null")
-                else F.lit(False)
-            )
+        cur = col(c)
+        if not isinstance(cur, Column):  # fold a known value
+            part = F.lit(cur is not None and (
+                cur != value if value is not None else null_passes
+            ))
+        elif value is None:
+            part = cur.isNotNull() if null_passes else F.lit(False)
         else:
-            part = col(c) != F.lit(value)
+            part = cur != F.lit(value)
         ok = ok | part
     return ok
+
+
+def winning_delete(dels: Column, meta: dict, result_col) -> Column:
+    """The delete that wins a position-ordered run of soft deletes
+    applied to one row. Each delete applies while the guard passes on
+    the row so far, and a delete's resulting row takes the overlay
+    columns from that delete, so the winner is the first delete whose
+    resulting row fails the guard, else the last one (NULL for no
+    deletes). ``result_col(d, c)`` is column ``c`` of the row after
+    delete ``d``."""
+    stops = F.filter(
+        dels,
+        lambda d: ~F.coalesce(
+            guard_passes(meta, lambda c: result_col(d, c)), F.lit(False)
+        ),
+    )
+    return F.coalesce(F.get(stops, 0), F.get(dels, F.size(dels) - 1))
 
 
 #: subset-delete delta layout (``delete_as_update_key`` ⊂ pk): one row
@@ -204,9 +225,9 @@ def guard_passes(meta: dict, col) -> Column:
 #: list. Kept separate from the pk-keyed deltas because one subset
 #: delete hits EVERY row sharing the subset key — resolution is a join
 #: on the subset key over the already pk-resolved rows, and the winning
-#: delete differs per row (earliest positioned after that row's last
-#: upsert). The config guarantees the subset key contains the bucket
-#: key, so sdel files bucket exactly like the rows they affect.
+#: delete differs per row (it follows that row's last upsert). The
+#: config guarantees the subset key contains the bucket key, so sdel
+#: files bucket exactly like the rows they affect.
 SDEL_LIST = "__sdlist"
 
 
@@ -235,9 +256,9 @@ def apply_subset_overlays(
 ) -> DataFrame:
     """Overlay subset-key deletes (sdel rows with ``__seq``) on
     pk-resolved rows (``resolved`` must carry ``__p_pos`` from
-    :func:`resolve`). Per row, the winning delete is the earliest sdel
-    entry positioned after the row's last upsert — later ones are
-    blocked by the not-already-deleted guard, which is also checked
+    :func:`resolve`). Per row, the winning delete is the
+    :func:`winning_delete` of the sdel entries positioned after the
+    row's last upsert; the not-already-deleted guard is also checked
     against the row's CURRENT marker (a row already deleted in base
     stays untouched). Hard mode drops matched rows; under
     insert_mode=update any matching delete drops the row (updates never
@@ -270,20 +291,23 @@ def apply_subset_overlays(
         lambda e: F.struct(e["seq"].alias("seq"), e["off"].alias("off"))
         > F.col(P_POS),
     )
-    d0 = F.get(applicable, 0)
 
     out_cols = [f.name for f in snap.schema.fields] + [BUCKET_COL]
+    overlay_cols = set(meta.get("overlay_cols", []))
     if meta.get("hard"):
         matched = (
             F.coalesce(F.size("__sd") > 0, F.lit(False))
             if meta.get("upd_only")
-            else d0.isNotNull()
+            else F.get(applicable, 0).isNotNull()
         )
         return j.filter(~matched).select(*out_cols)
     if not meta.get("soft"):
         return j.select(*out_cols)  # delete mode none: sdels never written
+    d0 = winning_delete(
+        applicable, meta,
+        lambda d, c: d["row"][c] if c in overlay_cols else F.col(c),
+    )
     overlay = d0.isNotNull() & guard_passes(meta, F.col)
-    overlay_cols = set(meta.get("overlay_cols", []))
     return j.select(*[
         F.when(overlay, d0["row"][c]).otherwise(F.col(c)).alias(c)
         if c in overlay_cols else F.col(c)
@@ -347,7 +371,6 @@ def resolve(
     after = F.filter(
         KEY_DELS, lambda d: pos(d["seq"], d["off"]) > p_pos
     )
-    d_first = F.get(after, 0)  # NULL when no delete follows P
 
     def p_col(c: str):
         if c in keys:
@@ -355,18 +378,24 @@ def resolve(
         return F.when(u_valid, u["row"][c]).otherwise(b_col(c))
 
     if soft:
-        overlay = d_first.isNotNull() & guard_passes(meta, p_col)
+        d_win = winning_delete(
+            after, meta,
+            lambda d, c: (d["row"][c] if c in overlay_cols
+                          and c not in keys else p_col(c)),
+        )
+        overlay = d_win.isNotNull() & guard_passes(meta, p_col)
         drop = ~p_exists
     else:
+        d_win = F.get(after, 0)  # NULL when no delete follows P
         overlay = F.lit(False)
-        drop = ~p_exists | (F.lit(hard) & d_first.isNotNull())
+        drop = ~p_exists | (F.lit(hard) & d_win.isNotNull())
 
     out = []
     for f in snap.schema.fields:
         c = f.name
         expr = p_col(c)
         if soft and c in overlay_cols and c not in keys:
-            expr = F.when(overlay, d_first["row"][c]).otherwise(expr)
+            expr = F.when(overlay, d_win["row"][c]).otherwise(expr)
         out.append(expr.cast(f.dataType).alias(c))
     out.append(
         F.coalesce(b_col(BUCKET_COL), F.col(KEY_BUCKET)).alias(BUCKET_COL)

@@ -6,12 +6,19 @@ applying a batch's events in offset order per key produces the same
 final row as applying only
 
 * the latest non-delete event (the surviving column values), and
-* the **earliest** delete event positioned after that upsert (or, with
-  no upsert, the earliest delete overall): the first delete marks the
-  row and the reference's "not already deleted" guard
-  (``BufferedRecords.java:287-303``) blocks every later delete from
-  re-overwriting the retain fields. Deletes sandwiched between upserts
-  never matter — the following upsert overwrites everything.
+* the winning delete event positioned after that upsert (or, with no
+  upsert, among all deletes). The reference applies each delete while
+  its "not already deleted" guard passes
+  (``BufferedRecords.java:287-303``), so the winner is the first delete
+  whose resulting row fails the guard, else the last one
+  (:func:`..lake.mor.winning_delete`). Under the usual guard on the
+  marker column that is the earliest delete: it marks the row and
+  blocks the rest. The resulting row takes the marker and retain
+  fields from the delete and every other guard column from the
+  batch's upsert; with no upsert in the batch those columns are
+  unknown here and count as NULL. Outside soft-delete mode the
+  earliest delete wins. Deletes sandwiched between upserts never
+  matter — the following upsert overwrites everything.
 
 so the whole batch collapses to ≤1 row per key — which is also the
 cardinality Iceberg/Delta MERGE requires of its source, and what makes
@@ -42,7 +49,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kafka_jdbc_sink_connector_spark.config import SinkConfig
+from kafka_jdbc_sink_connector_spark.config import DeleteMode, SinkConfig
+from kafka_jdbc_sink_connector_spark.lake.mor import winning_delete
 
 UPSERT_STRUCT = "__upsert"
 DELETE_STRUCT = "__delete"
@@ -72,12 +80,32 @@ def _payload_structs(events: DataFrame, cfg: SinkConfig, payload_cols):
     return payload, del_payload
 
 
-def _winner_select(df: DataFrame, keys: list[str]) -> DataFrame:
-    """Pick the earliest delete positioned after the latest upsert from
+def _winner_select(df: DataFrame, cfg: SinkConfig) -> DataFrame:
+    """Pick the winning delete positioned after the latest upsert from
     the sorted per-key delete list, then drop the list."""
+    keys = list(cfg.pk_fields)
     floor = F.coalesce(F.col(UPSERT_OFF), F.lit(_LONG_MIN))
     after = F.filter(F.col(DELETE_LIST), lambda d: d["off"] > floor)
-    win = F.get(after, 0)
+    if cfg.delete_mode is DeleteMode.UPDATE:
+        retain = set(cfg.delete_retain_fields)
+        ups_fields = set(df.schema[UPSERT_STRUCT].dataType.fieldNames())
+
+        def result_col(d, c: str):
+            if c == cfg.soft_delete_column:
+                return cfg.soft_delete_value
+            if c in keys:
+                return F.col(c)
+            if c in retain:
+                return d["row"][c]
+            ups = F.col(UPSERT_STRUCT)
+            return ups[c] if c in ups_fields else F.lit(None)
+
+        win = winning_delete(after, {
+            "guard": cfg.soft_delete_conditions,
+            "guard_null_is_not_null": cfg.guard_null_is_not_null,
+        }, result_col)
+    else:
+        win = F.get(after, 0)
     return df.select(
         *keys,
         F.col(UPSERT_STRUCT),
@@ -97,8 +125,8 @@ def collapse_last_writer(
 
     Output: pk fields + ``__upsert`` (payload struct of the latest
     non-delete event incl. its op, or NULL), ``__delete`` (struct of
-    the winning delete event's *retained* fields — the earliest delete
-    after the latest upsert — or NULL), ``__upsert_off`` /
+    the winning delete event's *retained* fields — see the module
+    docstring — or NULL), ``__upsert_off`` /
     ``__delete_off`` (their offsets), ``__first_del_off`` (earliest
     delete offset regardless of position, or NULL).
 
@@ -129,7 +157,7 @@ def collapse_last_writer(
         F.min(F.when(is_del, off)).alias(FIRST_DEL_OFF),
     ]
 
-    return _winner_select(events.groupBy(*keys).agg(*aggs), keys)
+    return _winner_select(events.groupBy(*keys).agg(*aggs), cfg)
 
 
 def collapse_deletes_by_key(
@@ -143,10 +171,10 @@ def collapse_deletes_by_key(
     Output: delete-key fields + ``__delete_list`` — the offset-sorted
     list of (offset, retain-field struct) delete events. The list is
     kept whole because the winning delete differs per *target row*: a
-    row last upserted at offset o is marked by the earliest delete with
-    offset > o (every later one is blocked by the not-already-deleted
-    guard), and rows sharing the subset key have different o. Bounded
-    by deletes per subset key per micro-batch.
+    row last upserted at offset o is marked by the
+    :func:`..lake.mor.winning_delete` of the deletes with offset > o,
+    and rows sharing the subset key have different o. Bounded by
+    deletes per subset key per micro-batch.
     """
     op = F.col(cfg.op_column)
     off = F.col(cfg.offset_column)
@@ -173,7 +201,9 @@ def collapse_last_writer_window(
     """Window/row_number formulation of the same collapse — kept as a
     cross-check implementation for tests (sorts within key partitions;
     no partial aggregation, so strictly worse at scale than
-    :func:`collapse_last_writer`).
+    :func:`collapse_last_writer`). It always keeps the earliest delete
+    after the upsert, the winner under a guard on the marker column
+    alone.
     """
     from pyspark.sql import Window as W
 

@@ -13,16 +13,21 @@ Two decode paths, picked automatically:
   public Avro 1.x binary encoding (zigzag varints, length-prefixed
   strings/bytes, union branch indexes) for **flat records** — the only
   shape the reference ever handles (``BufferedRecords.java:89-96``:
-  flat Struct values, no nesting). This keeps the Avro path testable
-  on clusters without the package; it is a decode seam, not a query
-  hot path.
+  flat Struct values, no nesting). Where spark-avro is absent (the
+  package is not bundled with pyspark) this IS the hot path of an Avro
+  stream, so each writer schema is compiled once (:func:`_compile`:
+  the JSON parsed and every field's reader planned) and a batch is
+  decoded into column lists; :func:`decode_record` is the per-record
+  form of the same compiled plan. The stream runners checkpoint the
+  parsed micro-batch, so the UDF runs once per batch, not once per
+  job that reads it.
 
 Confluent wire format (magic byte ``0x00`` + 4-byte big-endian schema
 id + Avro binary body) is stripped with :func:`confluent_payload` when
 ``confluent_wire=True`` — the framing Schema Registry serializers
-prepend. Schema resolution is static (one writer schema per stream),
-matching the engine's versioned-StructType model; per-id registry
-lookup would slot in at :func:`confluent_payload`'s call site.
+prepend. :func:`avro_decode_column` decodes under one writer schema;
+:func:`avro_decode_multi` routes each record by the schema id in its
+frame.
 
 Supported Avro types (the flat-CDC subset): null, boolean, int, long,
 float, double, string, bytes, and ``["null", T]`` unions; logical
@@ -45,7 +50,6 @@ from __future__ import annotations
 
 import datetime as dt
 import decimal as _dec
-import io
 import json
 import struct as _struct
 
@@ -146,20 +150,6 @@ def _zigzag_encode(n: int) -> bytes:
             return bytes(out)
 
 
-def _zigzag_decode(buf: io.BytesIO) -> int:
-    shift, acc = 0, 0
-    while True:
-        byte = buf.read(1)
-        if not byte:
-            raise AvroDecodeError("truncated varint")
-        b = byte[0]
-        acc |= (b & 0x7F) << shift
-        if not b & 0x80:
-            break
-        shift += 7
-    return (acc >> 1) ^ -(acc & 1)
-
-
 def _encode_value(prim: str, logical: str | None, v, attrs: dict) -> bytes:
     if logical in ("timestamp-micros", "timestamp-millis") and isinstance(
         v, dt.datetime
@@ -212,60 +202,141 @@ def encode_record(schema_json: str, record: dict) -> bytes:
         prim, logical, nullable, attrs = _field_type(f["type"])
         v = record.get(f["name"])
         if nullable:
+            null_branch = f["type"].index("null")
             if v is None:
-                out += _zigzag_encode(0)  # null branch first by our convention
+                out += _zigzag_encode(null_branch)
                 continue
-            out += _zigzag_encode(1)
+            out += _zigzag_encode(1 - null_branch)
         elif v is None:
             raise AvroDecodeError(f"null for non-nullable field {f['name']}")
         out += _encode_value(prim, logical, v, attrs)
     return bytes(out)
 
 
-def _decode_value(prim: str, logical: str | None, buf: io.BytesIO,
-                  attrs: dict):
+def _read_long(b: bytes, pos: int) -> tuple[int, int]:
+    """Zigzag varint at ``b[pos]`` → (value, next position)."""
+    try:
+        byte = b[pos]
+    except IndexError:
+        raise AvroDecodeError("truncated varint") from None
+    if byte < 0x80:  # one-byte varint: |value| < 64
+        return (byte >> 1) ^ -(byte & 1), pos + 1
+    acc, shift = byte & 0x7F, 7
+    while True:
+        pos += 1
+        if pos >= len(b):
+            raise AvroDecodeError("truncated varint")
+        byte = b[pos]
+        acc |= (byte & 0x7F) << shift
+        if byte < 0x80:
+            return (acc >> 1) ^ -(acc & 1), pos + 1
+        shift += 7
+
+
+def _read_bytes(b, pos):
+    n, pos = _read_long(b, pos)
+    if n < 0:
+        raise AvroDecodeError(f"negative length {n}")
+    return b[pos:pos + n], pos + n
+
+
+def _read_string(b, pos):
+    n, pos = _read_long(b, pos)
+    if n < 0:
+        raise AvroDecodeError(f"negative length {n}")
+    return b[pos:pos + n].decode("utf-8"), pos + n
+
+
+def _read_boolean(b, pos):
+    return b[pos:pos + 1] == b"\x01", pos + 1
+
+
+def _read_float(b, pos):
+    return _struct.unpack_from("<f", b, pos)[0], pos + 4
+
+
+def _read_double(b, pos):
+    return _struct.unpack_from("<d", b, pos)[0], pos + 8
+
+
+_READERS = {
+    "int": _read_long,
+    "long": _read_long,
+    "boolean": _read_boolean,
+    "float": _read_float,
+    "double": _read_double,
+    "string": _read_string,
+    "bytes": _read_bytes,
+}
+
+
+_FROM_LONG = {
+    "timestamp-micros": lambda n: _EPOCH + dt.timedelta(microseconds=n),
+    "timestamp-millis": lambda n: _EPOCH + dt.timedelta(milliseconds=n),
+    "date": lambda n: _EPOCH_DATE + dt.timedelta(days=n),
+}
+
+
+def _field_reader(ftype):
+    """One field's compiled reader ``(buf, pos) → (value, next pos)``:
+    the union branch, primitive and logical-type conversion resolved
+    once, not per record."""
+    prim, logical, nullable, attrs = _field_type(ftype)
     if logical == "decimal" and prim == "bytes":
-        raw = buf.read(_zigzag_decode(buf))
-        unscaled = int.from_bytes(raw, "big", signed=True)
-        return _dec.Decimal(unscaled).scaleb(-int(attrs.get("scale", 0)))
-    if prim in ("int", "long"):
-        n = _zigzag_decode(buf)
-        if logical == "timestamp-micros":
-            return _EPOCH + dt.timedelta(microseconds=n)
-        if logical == "timestamp-millis":
-            return _EPOCH + dt.timedelta(milliseconds=n)
-        if logical == "date":
-            return _EPOCH_DATE + dt.timedelta(days=n)
-        return n
-    if prim == "boolean":
-        return buf.read(1) == b"\x01"
-    if prim == "float":
-        return _struct.unpack("<f", buf.read(4))[0]
-    if prim == "double":
-        return _struct.unpack("<d", buf.read(8))[0]
-    if prim == "string":
-        return buf.read(_zigzag_decode(buf)).decode("utf-8")
-    if prim == "bytes":
-        return bytes(buf.read(_zigzag_decode(buf)))
-    raise AvroDecodeError(f"unsupported primitive {prim!r}")
+        exp = -int(attrs.get("scale", 0))
+
+        def read(b, pos):
+            raw, pos = _read_bytes(b, pos)
+            unscaled = int.from_bytes(raw, "big", signed=True)
+            return _dec.Decimal(unscaled).scaleb(exp), pos
+    elif prim in ("int", "long") and logical in _FROM_LONG:
+        conv = _FROM_LONG[logical]
+
+        def read(b, pos):
+            n, pos = _read_long(b, pos)
+            return conv(n), pos
+    elif prim in _READERS:
+        read = _READERS[prim]
+    else:
+        raise AvroDecodeError(f"unsupported primitive {prim!r}")
+    if not nullable:
+        return read
+    null_branch = ftype.index("null")
+
+    def read_union(b, pos):
+        branch, pos = _read_long(b, pos)
+        if branch == null_branch:
+            return None, pos
+        if branch != 1 - null_branch:
+            raise AvroDecodeError(f"union branch {branch} out of range")
+        return read(b, pos)
+
+    return read_union
+
+
+def _compile(schema_json: str) -> tuple[tuple[str, ...], tuple]:
+    """Writer schema JSON → (field names, field readers), parsed and
+    planned once per schema."""
+    fields = json.loads(schema_json)["fields"]
+    return (
+        tuple(f["name"] for f in fields),
+        tuple(_field_reader(f["type"]) for f in fields),
+    )
+
+
+def _decode_body(readers, b: bytes, pos: int = 0) -> list:
+    out = []
+    for read in readers:
+        v, pos = read(b, pos)
+        out.append(v)
+    return out
 
 
 def decode_record(schema_json: str, payload: bytes) -> dict:
-    sch = json.loads(schema_json)
-    buf = io.BytesIO(payload)
-    row = {}
-    for f in sch["fields"]:
-        prim, logical, nullable, attrs = _field_type(f["type"])
-        if nullable:
-            branch = _zigzag_decode(buf)
-            # writer schema lists null first in our fixtures; accept
-            # either order by convention null=branch of the null type
-            types = f["type"]
-            if types[branch] == "null":
-                row[f["name"]] = None
-                continue
-        row[f["name"]] = _decode_value(prim, logical, buf, attrs)
-    return row
+    """Decode one flat record (the per-record form of the compiled
+    decoder the Spark fallback runs)."""
+    names, readers = _compile(schema_json)
+    return dict(zip(names, _decode_body(readers, bytes(payload))))
 
 
 # --- Spark integration ------------------------------------------------
@@ -388,34 +459,33 @@ def avro_decode_multi(
             ).cast(target)
         )
 
-    import pandas as pd
+    slot = {f.name: i for i, f in enumerate(target.fields)}
+    # compiled once per writer schema id: its field readers and the
+    # superset column each field fills
+    plans = {}
+    for sid_k, sj in schemas.items():
+        fnames, readers = _compile(sj)
+        slots = [slot[n] for n in fnames]
+        plans[sid_k] = (
+            readers, None if slots == list(range(len(slot))) else slots
+        )
+    known = sorted(schemas)
 
-    names = [f.name for f in target.fields]
+    def plan_of(b: bytes):
+        if len(b) < 5 or b[0] != 0:
+            raise AvroDecodeError(
+                "not Confluent wire format (magic byte != 0)"
+            )
+        sid_v = int.from_bytes(b[1:5], "big")
+        plan = plans.get(sid_v)
+        if plan is None:
+            raise AvroDecodeError(
+                f"unknown schema id {sid_v} (registry miss); known: "
+                f"{known}"
+            )
+        return plan[0], plan[1], 5
 
-    def _decode(s):  # pd.Series[bytes] -> pd.DataFrame (superset rows)
-        rows = []
-        for payload in s:
-            if payload is None:
-                rows.append({n: None for n in names})
-                continue
-            b = bytes(payload)
-            if len(b) < 5 or b[0] != 0:
-                raise AvroDecodeError(
-                    "not Confluent wire format (magic byte != 0)"
-                )
-            sid_v = int.from_bytes(b[1:5], "big")
-            sj = schemas.get(sid_v)
-            if sj is None:
-                raise AvroDecodeError(
-                    f"unknown schema id {sid_v} (registry miss); known: "
-                    f"{sorted(schemas)}"
-                )
-            rec = decode_record(sj, b[5:])
-            rows.append({n: rec.get(n) for n in names})
-        return pd.DataFrame(rows, columns=names)
-
-    udf = F.pandas_udf(_decode, returnType=target)
-    return udf(col)
+    return _fallback_udf(target, plan_of)(col)
 
 
 def spark_avro_available(spark: SparkSession) -> bool:
@@ -466,19 +536,52 @@ def avro_decode_column(
     # the UDF evaluates on every row (EvalPython runs before when()
     # picks), so tombstones produce an all-null struct — every return
     # field must be nullable regardless of the Avro schema
-    struct = target
-    import pandas as pd
+    readers = _compile(schema_json)[1]
+    return _fallback_udf(target, lambda b: (readers, None, 0))(col)
 
-    names = [f.name for f in struct.fields]
 
-    def _decode(s):  # pd.Series[bytes] -> pd.DataFrame (struct rows)
+def _fallback_udf(target: T.StructType, plan_of):
+    """The Arrow-batched fallback decoder: a ``pandas_udf`` binary →
+    ``target`` struct. ``plan_of(payload)`` → ``(readers, slots,
+    start)``: the writer schema's compiled field readers, the target
+    column each fills (None: all, in order) and where the Avro body
+    starts. NULL payloads (tombstones) decode to an all-NULL row.
+
+    Output is built column-wise. Integer columns stay ``object`` dtype:
+    pandas would turn a nullable int column into float64 and round
+    values beyond 2**53."""
+    names = [f.name for f in target.fields]
+    ints = {
+        f.name for f in target.fields
+        if isinstance(f.dataType, (T.IntegerType, T.LongType))
+    }
+    nulls = (None,) * len(names)
+
+    def _decode(s):  # pd.Series[bytes] -> pd.DataFrame (target rows)
+        import pandas as pd
+
         rows = []
         for payload in s:
             if payload is None:
-                rows.append({n: None for n in names})
-            else:
-                rows.append(decode_record(schema_json, bytes(payload)))
-        return pd.DataFrame(rows, columns=names)
+                rows.append(nulls)
+                continue
+            b = bytes(payload)
+            readers, slots, pos = plan_of(b)
+            vals = _decode_body(readers, b, pos)
+            if slots is not None:
+                row = list(nulls)
+                for i, v in zip(slots, vals):
+                    row[i] = v
+                vals = row
+            rows.append(vals)
+        if not rows:
+            return pd.DataFrame(columns=names)
+        return pd.DataFrame(
+            {
+                n: pd.Series(c, dtype=object) if n in ints else list(c)
+                for n, c in zip(names, zip(*rows))
+            },
+            columns=names,
+        )
 
-    udf = F.pandas_udf(_decode, returnType=struct)
-    return udf(col)
+    return F.pandas_udf(_decode, returnType=target)

@@ -50,6 +50,7 @@ from kafka_jdbc_sink_connector_spark.lake.changes import (
     table_changes,
 )
 from kafka_jdbc_sink_connector_spark.lake.table import LakeTable
+from kafka_jdbc_sink_connector_spark.streaming.runner import free_checkpoints
 
 _FEED_META = (CHANGE_TYPE, FROM_VERSION, TO_VERSION)
 
@@ -141,10 +142,7 @@ class ViewSync:
         return df
 
     def _free_checkpoints(self) -> None:
-        # DataFrame.unpersist() does not reach a local checkpoint: its
-        # blocks belong to the RDD behind the frame's LogicalRDD plan
-        for df in self._checkpoints:
-            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        free_checkpoints(self._checkpoints)
         self._checkpoints.clear()
 
     def _op(self, rows: DataFrame, delete: bool | Column) -> DataFrame:

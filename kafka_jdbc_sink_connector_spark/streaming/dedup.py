@@ -63,6 +63,7 @@ from kafka_jdbc_sink_connector_spark.streaming.runner import (
     RETRIES,
     RETRY_BACKOFF_S,
     ForeachBatchRunner,
+    free_checkpoints,
     retrying,
 )
 
@@ -78,7 +79,8 @@ class PairDedupStreamRunner(ForeachBatchRunner):
 
     ``record_parser`` mirrors :class:`..streaming.runner.CdcStreamRunner`:
     an optional ``DataFrame → DataFrame`` hook run inside the retried
-    batch body before dedup (decode/normalize lives there).
+    batch body before dedup (decode/normalize lives there); each
+    attempt checkpoints its output once and frees it on exit.
 
     Subclasses name the pair columns, the score column and its type,
     and the keyword the index takes its payload column under.
@@ -137,7 +139,8 @@ class PairDedupStreamRunner(ForeachBatchRunner):
             bucket_key=a,
         )
 
-    # foreachBatch body — public so tests can drive it directly
+    # foreachBatch body — public so tests can drive it directly;
+    # returns the batch's ``results`` entry
     def process_batch(self, batch_df: DataFrame, batch_id: int):
         return retrying(
             lambda: self._process_once(batch_df, batch_id),
@@ -146,7 +149,10 @@ class PairDedupStreamRunner(ForeachBatchRunner):
         )
 
     def _process_once(self, batch_df: DataFrame, batch_id: int):
-        parsed = self.parse(batch_df)
+        with self.materialized(self.parse(batch_df)) as parsed:
+            return self._dedup(parsed, batch_id)
+
+    def _dedup(self, parsed: DataFrame, batch_id: int):
         a, b = self.pair_cols
         # the batch id set is reused twice (loser marking) and is
         # micro-batch-sized — broadcast both uses
@@ -202,15 +208,18 @@ class PairDedupStreamRunner(ForeachBatchRunner):
         else:
             # count + append in one pass over a batch-sized frame
             rows = marked.localCheckpoint(eager=True)
-            n_pairs = rows.count()
-            pt.commit_append(
-                pt.with_bucket(rows),
-                source_id=self.source_id,
-                batch_id=batch_id,
-            )
+            try:
+                n_pairs = rows.count()
+                pt.commit_append(
+                    pt.with_bucket(rows),
+                    source_id=self.source_id,
+                    batch_id=batch_id,
+                )
+            finally:
+                free_checkpoints([rows])
         n_docs = batch_ids.count()
         self.results.append((batch_id, n_docs, n_pairs, skipped))
-        return marked
+        return self.results[-1]
 
     def dup_doc_ids(self) -> DataFrame:
         """Distinct records that lost at least one pair — the

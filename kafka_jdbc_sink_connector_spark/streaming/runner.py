@@ -31,6 +31,7 @@ import json
 import logging
 import os
 import time
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -81,13 +82,29 @@ def retrying(fn, attempts: int, backoff_s: float):
             time.sleep(backoff_s)
 
 
+def free_checkpoints(frames) -> None:
+    """Release the blocks of ``localCheckpoint``-ed frames.
+    ``DataFrame.unpersist()`` does not reach a local checkpoint: its
+    blocks belong to the RDD behind the frame's LogicalRDD plan."""
+    for df in frames:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 class ForeachBatchRunner:
     """The ``foreachBatch`` shell shared by every runner: checkpoint
     location, source id for the exactly-once watermarks, the optional
     ``record_parser`` hook, the ``results`` log, and ``start`` /
     ``run_available``. Subclasses implement ``process_batch(batch_df,
     batch_id)``; ``start`` dispatches through ``self.process_batch`` so
-    a wrapper installed on the class sees every micro-batch."""
+    a wrapper installed on the class sees every micro-batch.
+
+    A parsed micro-batch is read by several Spark jobs (the apply's
+    stats job, quarantine write and merge; a multi-table split). A
+    record parser is computed work — a Python Avro decode, a JSON
+    parse — so :meth:`materialized` takes a lazy ``localCheckpoint`` of
+    its output: the first job computes it, the later jobs read it back,
+    and it is freed when the batch body returns or raises. Frames
+    without a parser are plain scans and stay unmaterialized."""
 
     def __init__(self, checkpoint_dir: str, source_id: str, record_parser=None):
         self.checkpoint_dir = checkpoint_dir
@@ -99,6 +116,19 @@ class ForeachBatchRunner:
         if self.record_parser is None:
             return batch_df
         return self.record_parser(batch_df)
+
+    @contextmanager
+    def materialized(self, parsed: DataFrame):
+        """``parsed`` as the batch body reads it: lazily checkpointed
+        when a record parser made it, freed on exit."""
+        if self.record_parser is None:
+            yield parsed
+            return
+        parsed = parsed.localCheckpoint(eager=False)
+        try:
+            yield parsed
+        finally:
+            free_checkpoints([parsed])
 
     def start(
         self,
@@ -150,7 +180,14 @@ class CdcStreamRunner(ForeachBatchRunner):
 
     The parser runs inside the retried apply, so a transiently
     unreachable registry gets the runner's backoff on top of the HTTP
-    client's own retries.
+    client's own retries. Its output is decoded once per attempt: the
+    attempt takes a lazy ``localCheckpoint`` of the parsed frame
+    (:meth:`ForeachBatchRunner.materialized`), the apply's stats job
+    computes it, and the quarantine write and the merge read it back.
+    A local checkpoint has no replica, so losing an executor loses its
+    blocks and fails the attempt; the next attempt parses again from
+    the source frame and checkpoints afresh. Every attempt's
+    checkpoint is freed when the attempt returns or raises.
 
     ``followers`` are objects with an idempotent ``sync()`` —
     typically the maintained-view runners sharing one sync core
@@ -195,9 +232,10 @@ class CdcStreamRunner(ForeachBatchRunner):
         backoff_s = cfg.retry_backoff_ms / 1000.0
 
         def parse_and_apply() -> BatchResult:
-            return self.applier.apply_batch(
-                self.parse(batch_df), batch_id=batch_id, source_id=self.source_id
-            )
+            with self.materialized(self.parse(batch_df)) as events:
+                return self.applier.apply_batch(
+                    events, batch_id=batch_id, source_id=self.source_id
+                )
 
         res = retrying(parse_and_apply, attempts, backoff_s)
         self.results.append(res)
@@ -335,7 +373,11 @@ class MultiTableRunner(ForeachBatchRunner):
         #: must PRESERVE the topic column (parse_kafka_records:
         #: keep_topic=True) or routing has nothing to split on. The
         #: parse runs before any applier exists, so its retry uses the
-        #: module budget instead of a per-table cfg
+        #: module budget instead of a per-table cfg. Its output is
+        #: checkpointed once per batch, outside the per-topic apply
+        #: retries: a block lost with an executor fails the batch, and
+        #: the stream's replay parses again (committed topics skip on
+        #: their watermarks)
         super().__init__(checkpoint_dir, source_id, record_parser)
         #: topic -> CdcApplier, created lazily like the per-table
         #: BufferedRecords map (JdbcAuditDbWriter.java:63-83)
@@ -357,29 +399,32 @@ class MultiTableRunner(ForeachBatchRunner):
         parsed = retrying(
             lambda: self.parse(batch_df), RETRIES + 1, RETRY_BACKOFF_S
         )
-        topics = [
-            r[0]
-            for r in parsed.select(self.topic_column).distinct().collect()
-        ]
-        for topic in sorted(topics):
-            applier = self.appliers.get(topic)
-            if applier is None:
-                applier = self.applier_factory(topic)
-                self.appliers[topic] = applier
-            sub = parsed.filter(
-                F.col(self.topic_column) == topic
-            ).drop(self.topic_column)
-            # same bounded retry as the single-table runner; a topic
-            # that already applied this batch id skips via the
-            # per-table watermark, so retrying after a partial failure
-            # re-applies only the topics that didn't commit
-            self.results.append(retrying(
-                lambda: applier.apply_batch(
-                    sub, batch_id=batch_id, source_id=self.source_id
-                ),
-                applier.cfg.max_retries + 1,
-                applier.cfg.retry_backoff_ms / 1000.0,
-            ))
+        with self.materialized(parsed) as parsed:
+            # the topic split job computes the checkpoint; every
+            # topic's apply reads it back
+            topics = [
+                r[0]
+                for r in parsed.select(self.topic_column).distinct().collect()
+            ]
+            for topic in sorted(topics):
+                applier = self.appliers.get(topic)
+                if applier is None:
+                    applier = self.applier_factory(topic)
+                    self.appliers[topic] = applier
+                sub = parsed.filter(
+                    F.col(self.topic_column) == topic
+                ).drop(self.topic_column)
+                # same bounded retry as the single-table runner; a topic
+                # that already applied this batch id skips via the
+                # per-table watermark, so retrying after a partial
+                # failure re-applies only the topics that didn't commit
+                self.results.append(retrying(
+                    lambda: applier.apply_batch(
+                        sub, batch_id=batch_id, source_id=self.source_id
+                    ),
+                    applier.cfg.max_retries + 1,
+                    applier.cfg.retry_backoff_ms / 1000.0,
+                ))
         # every routed table committed — publish the batch's
         # consistency point (JdbcAuditDbWriter.java:84's commit)
         self._publish_group(batch_id)

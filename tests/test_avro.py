@@ -10,7 +10,9 @@ tests use.
 from __future__ import annotations
 
 import datetime as dt
+import re
 import struct
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import types as T
@@ -511,3 +513,129 @@ def test_decoder_selection(spark):
             raw, None, cfg, value_format="avro",
             avro_value_schema=VALUE_SCHEMA, avro_decoder="bogus",
         ).collect()
+
+
+#: every type the fallback decoder supports, both union orders
+ALL_TYPES_SCHEMA = """
+{"type": "record", "name": "all_types", "fields": [
+  {"name": "i", "type": "int"},
+  {"name": "l", "type": "long"},
+  {"name": "f", "type": "float"},
+  {"name": "d", "type": "double"},
+  {"name": "b", "type": "boolean"},
+  {"name": "s", "type": "string"},
+  {"name": "by", "type": "bytes"},
+  {"name": "dec", "type": {"type": "bytes", "logicalType": "decimal",
+                           "precision": 12, "scale": 3}},
+  {"name": "tsu", "type": {"type": "long",
+                           "logicalType": "timestamp-micros"}},
+  {"name": "tsm", "type": ["null", {"type": "long",
+                                    "logicalType": "timestamp-millis"}]},
+  {"name": "day", "type": [{"type": "int", "logicalType": "date"}, "null"]},
+  {"name": "tm", "type": {"type": "int", "logicalType": "time-millis"}},
+  {"name": "tu", "type": ["null", {"type": "long",
+                                   "logicalType": "time-micros"}]},
+  {"name": "nl", "type": ["long", "null"]},
+  {"name": "ns", "type": ["null", "string"]}
+]}
+"""
+#: an older writer schema of the same stream: a prefix of the fields
+OLD_TYPES_SCHEMA = """
+{"type": "record", "name": "all_types", "fields": [
+  {"name": "i", "type": "int"},
+  {"name": "l", "type": "long"},
+  {"name": "nl", "type": ["long", "null"]}
+]}
+"""
+
+ALL_TYPES_RECORDS = [
+    {"i": -2**31, "l": 2**63 - 1, "f": 1.5, "d": -1e300, "b": True,
+     "s": "héllo 𝄞", "by": b"\x00\xff", "dec": Decimal("-123456789.125"),
+     "tsu": TS, "tsm": dt.datetime(1969, 12, 31, 23, 59, 59, 999000),
+     "day": dt.date(1, 1, 1), "tm": 86_399_999, "tu": 0,
+     "nl": 2**62 + 1, "ns": "x"},
+    {"i": 0, "l": -2**63, "f": -0.25, "d": 0.0, "b": False, "s": "",
+     "by": b"", "dec": Decimal("0.001"), "tsu": dt.datetime(1970, 1, 1),
+     "tsm": None, "day": None, "tm": 0, "tu": None, "nl": None,
+     "ns": None},
+    {"i": 63, "l": 64, "f": 3.0, "d": 2.5, "b": True, "s": "a" * 300,
+     "by": bytes(range(256)), "dec": Decimal("999999999.999"),
+     "tsu": dt.datetime(2262, 4, 11), "tsm": TS.replace(microsecond=123000),
+     "day": dt.date(2024, 2, 29), "tm": 1, "tu": 86_399_999_999,
+     "nl": -(2**62) - 3, "ns": ""},
+]
+
+
+def test_compiled_decoder_matches_decode_record(spark):
+    """The Spark fallback (compiled per writer schema, built column-wise)
+    and ``decode_record`` give the same rows, equal to the encoded
+    records, over every supported type — in a batch carrying two schema
+    ids and a tombstone. Values beyond 2**53 in a nullable long column
+    that also holds a NULL keep every digit."""
+    from pyspark.sql import functions as F
+
+    from kafka_jdbc_sink_connector_spark.sources.avro import (
+        avro_decode_column,
+        avro_decode_multi,
+    )
+
+    schemas = {10: OLD_TYPES_SCHEMA, 11: ALL_TYPES_SCHEMA}
+    old_rec = {"i": 7, "l": -8, "nl": 2**53 + 1}
+    frames = [_confluent(encode_record(ALL_TYPES_SCHEMA, r), 11)
+              for r in ALL_TYPES_RECORDS]
+    frames += [_confluent(encode_record(OLD_TYPES_SCHEMA, old_rec), 10),
+               None]
+    # one partition: one Arrow batch holds the big longs and the NULLs
+    df = spark.createDataFrame(
+        list(enumerate(frames)), "n int, v binary"
+    ).coalesce(1)
+    names = [f.name for f in avro_schema_to_struct(ALL_TYPES_SCHEMA).fields]
+
+    def expected(frame):
+        if frame is None:
+            return dict.fromkeys(names)
+        sid = struct.unpack(">I", frame[1:5])[0]
+        rec = decode_record(schemas[sid], frame[5:])
+        return {n: rec.get(n) for n in names}
+
+    want = [expected(f) for f in frames]
+    assert want[:3] == ALL_TYPES_RECORDS
+    assert want[3] == {n: old_rec.get(n) for n in names}
+
+    got = [
+        r["d"].asDict() if r["d"] is not None else dict.fromkeys(names)
+        for r in df.select(
+            "n", avro_decode_multi(spark, F.col("v"), schemas,
+                                   decoder="python").alias("d")
+        ).orderBy("n").collect()
+    ]
+    assert got == want
+
+    single = [
+        r["d"].asDict() for r in df.filter("n < 3").select(
+            "n", avro_decode_column(spark, F.col("v"), ALL_TYPES_SCHEMA,
+                                    confluent_wire=True,
+                                    decoder="python").alias("d")
+        ).orderBy("n").collect()
+    ]
+    assert single == ALL_TYPES_RECORDS
+
+
+def test_compiled_decoder_errors_keep_their_messages(spark):
+    from pyspark.sql import functions as F
+
+    from kafka_jdbc_sink_connector_spark.sources.avro import avro_decode_multi
+
+    schemas = {10: OLD_TYPES_SCHEMA, 11: ALL_TYPES_SCHEMA}
+    body = encode_record(OLD_TYPES_SCHEMA, {"i": 1, "l": 2, "nl": None})
+    for frame, msg in (
+        (b"\x01" + body, "not Confluent wire format (magic byte != 0)"),
+        (_confluent(body, 42),
+         "unknown schema id 42 (registry miss); known: [10, 11]"),
+    ):
+        df = spark.createDataFrame([(frame,)], "v binary")
+        with pytest.raises(Exception, match=re.escape(msg)):
+            df.select(avro_decode_multi(spark, F.col("v"), schemas,
+                                        decoder="python")).collect()
+    with pytest.raises(AvroDecodeError, match="truncated varint"):
+        decode_record(OLD_TYPES_SCHEMA, body[:1])

@@ -120,6 +120,30 @@ def test_custom_guard_checks_the_fresh_upsert(spark, tmp_table, merge_mode):
     _compare_to_oracle(applier, rows0 + rows1, cfg)
 
 
+def test_guard_that_still_passes_applies_every_delete(spark, tmp_table,
+                                                     merge_mode):
+    """With a guard the soft-deleted row still passes (`role IS NOT
+    NULL` under guard_null_is_not_null, role not retained), the
+    reference applies every delete in turn, so the LAST delete's retain
+    fields win: within one batch `c, d, d`, and across batches (a later
+    batch's delete, a second delta commit under mor)."""
+    cfg = SinkConfig(soft_delete_conditions=(("op_type", "D"),
+                                             ("role", None)),
+                     guard_null_is_not_null=True,
+                     n_buckets=2, merge_mode=merge_mode)
+    applier = CdcApplier(spark, cfg, tmp_table, audit_ts=audit_col())
+    rows0 = [ev(1, "c", "conv-a", 0), ev(2, "d", "conv-a", 0),
+             ev(3, "d", "conv-a", 0)]
+    rows1 = [ev(4, "d", "conv-a", 0)]
+    applier.apply_batch(_events_df(spark, rows0), batch_id=0)
+    got = applier.read_target().collect()
+    assert [(r["op_type"], r["ts"]) for r in got] == [("D", rows0[2]["ts"])]
+    _compare_to_oracle(applier, rows0, cfg)
+    applier.apply_batch(_events_df(spark, rows1), batch_id=1)
+    assert applier.read_target().collect()[0]["ts"] == rows1[0]["ts"]
+    _compare_to_oracle(applier, rows0 + rows1, cfg)
+
+
 def test_snapshot_read_op_r(spark, tmp_table):
     """Debezium snapshot reads (op='r') apply as upserts."""
     cfg = SinkConfig(n_buckets=2)
