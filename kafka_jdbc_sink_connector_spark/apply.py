@@ -35,19 +35,11 @@ written by the driver), not scans.
 
 from __future__ import annotations
 
+import logging
 import os
 import shutil
 import time
 from dataclasses import dataclass, field
-
-_DEBUG_TIMING = os.environ.get("SPARK_GRAFT_DEBUG_TIMING") == "1"
-
-
-def _tick(label: str, t0: float) -> float:
-    now = time.monotonic()
-    if _DEBUG_TIMING:
-        print(f"    [timing] {label}: {now - t0:.2f}s", flush=True)
-    return now
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -76,6 +68,15 @@ from kafka_jdbc_sink_connector_spark.operators.validate import (
     error_expr,
 )
 from kafka_jdbc_sink_connector_spark.schemas import LINEAGE_SCHEMA
+
+log = logging.getLogger(__name__)
+
+
+def _tick(label: str, t0: float) -> float:
+    """Log the wall time of one apply phase at DEBUG; returns now."""
+    now = time.monotonic()
+    log.debug("apply phase %s: %.2fs", label, now - t0)
+    return now
 
 
 @dataclass

@@ -7,9 +7,23 @@ instead of rescanning the table. The reference has no equivalent — its
 JDBC target is the end of the line — but any lakehouse user of this
 engine expects it.
 
-Implementation: both versions stay readable (snapshots are immutable
-until vacuum), so the feed is a key-wise full-outer diff of the two
-resolved states:
+Two paths, chosen on the driver from the manifests:
+
+* **Generic diff** (:func:`_diff_changes`, any two versions): both
+  versions stay readable (snapshots are immutable until vacuum), so
+  the feed is a key-wise full-outer diff of the two resolved states,
+  read only over the buckets whose base/delta/sdel file lists differ.
+* **One keyed pass** (:func:`_adjacent_delta_changes`): when the new
+  version is the old one plus one merge-on-read commit, that commit's
+  delta/sdel files name every key it can have changed, and both states
+  of those keys resolve from the same files. One fold of the touched
+  buckets' delta rows carries the pre-commit and the full per-key
+  input side by side, one join brings in the base row, and the
+  per-row rules of :mod:`.mor` run over it twice, once per state. No
+  diff join, no checkpoint: building the frame runs no Spark job, and
+  ``count()`` on a steady delta commit runs 4.
+
+Either way each changed key becomes one row:
 
 * key only in the new version   → ``insert`` (post-image)
 * key in both, any column differs → ``update`` (post-image)
@@ -17,22 +31,15 @@ resolved states:
   image a hard-deleted row has; soft deletes surface as ``update``
   because the row still exists with its marker flipped)
 
-This is O(old + new) — correct for any mode and any distance. The
-full-outer join does shuffle both sides (plain parquet reads don't
-expose the bucket layout to Catalyst as a join distribution); the
-scale lever is one level up: manifest-level bucket pruning restricts
-both scans to buckets whose file lists differ, so feed cost follows
-changed data, not table size. For adjacent delta (MOR) versions — subset-delete
-commits included — :func:`table_changes` takes a cheaper route
-automatically: the commit's delta/sdel files list exactly the changed
-keys (resp. subsets), so only they and the OLD state of their buckets
-are read (no resolve of the new snapshot); see
-:func:`_adjacent_delta_changes`.
+Feed cost follows the changed buckets, not the table; SCALE.md
+("Change data feed") has the measurements.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kafka_jdbc_sink_connector_spark.lake.table import LakeTable
@@ -40,6 +47,9 @@ from kafka_jdbc_sink_connector_spark.lake.table import LakeTable
 CHANGE_TYPE = "_change_type"
 FROM_VERSION = "_from_version"
 TO_VERSION = "_to_version"
+#: tags the rows of the commit's own delta/sdel files in the one-pass
+#: feed (:func:`_adjacent_delta_changes`)
+_IN_COMMIT = "__in_commit"
 
 
 def table_changes(
@@ -65,8 +75,8 @@ def table_changes(
     ``update_postimage`` — which consumers that must UNDO the old row
     need (incremental aggregate maintenance subtracts the pre-image;
     a group-by column change must debit the OLD group, which the
-    post-image alone cannot name). Free in both feed paths: the diff
-    join already holds both sides of every update.
+    post-image alone cannot name). Free in both feed paths: each holds
+    both states of a key in one row.
 
     Contract (checked): both versions share the bucket layout and the
     old schema's columns are a subset of the new one's (the engine's
@@ -130,62 +140,78 @@ def _keywise_diff(
     ``old``'s columns must be pre-renamed with an ``o_`` prefix."""
     cond = [new[k].eqNullSafe(old[f"o_{k}"]) for k in keys]
     j = new.join(old, cond, "full_outer")
-
     # key presence flags via any key column's side (keys are non-null
     # within their side by construction; eqNullSafe keeps this exact)
-    new_exists = j[keys[0]].isNotNull()
-    old_exists = j[f"o_{keys[0]}"].isNotNull()
-    differs = F.lit(False)
-    for c in cmp_cols:
-        differs = differs | ~j[c].eqNullSafe(j[f"o_{c}"])
+    return _change_rows(
+        j, keys, cols, cmp_cols,
+        f"{_q(keys[0])} IS NOT NULL", f"{_q('o_' + keys[0])} IS NOT NULL",
+        from_version, to_version, include_preimages,
+    )
+
+
+def _q(name: str) -> str:
+    """``name`` quoted as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _str(value: str) -> str:
+    """``value`` as a SQL string literal."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _change_rows(
+    j: DataFrame, keys, cols, cmp_cols, new_exists: str, old_exists: str,
+    from_version: int, to_version: int, include_preimages: bool,
+) -> DataFrame:
+    """Change rows of ``j``, one row per key holding both states: the
+    new one in columns named like the table's, the old one in
+    ``o_``-prefixed columns; ``new_exists``/``old_exists`` are SQL
+    predicates saying whether the key has a row in each state. Keys
+    whose state did not change (absent from both included) yield
+    nothing. The expressions are SQL text: one py4j call per output
+    column, where Column objects cost about ten each."""
+    n, o = f"({new_exists})", f"({old_exists})"
+    new = _q
+    old = lambda c: _q(f"o_{c}")  # noqa: E731
+    differs = " OR ".join(
+        f"NOT ({new(c)} <=> {old(c)})" for c in cmp_cols
+    ) or "false"
+    insert = f"{n} AND NOT {o}"
+    delete = f"NOT {n} AND {o}"
+    update = f"{n} AND {o} AND ({differs})"
+    bounds = [f"{int(from_version)} AS {FROM_VERSION}",
+              f"{int(to_version)} AS {TO_VERSION}"]
 
     if include_preimages:
         # Delta-CDF scheme: updates emit pre- AND post-image rows.
         # One pass over the join via explode of a per-row entry array
         # (a union of two selects would execute the diff join twice);
         # a no-match WHEN yields NULL and explode drops it.
-        pre = F.struct(*[j[f"o_{c}"].alias(c) for c in cols])
-        post = F.struct(*[j[c].alias(c) for c in cols])
-
-        def entry(img, ct):
-            return F.struct(img.alias("img"), F.lit(ct).alias("ct"))
+        def entry(col, ct):
+            img = ", ".join(f"{_str(c)}, {col(c)}" for c in cols)
+            return f"named_struct('img', named_struct({img}), 'ct', '{ct}')"
 
         entries = (
-            F.when(new_exists & ~old_exists,
-                   F.array(entry(post, "insert")))
-            .when(~new_exists & old_exists,
-                  F.array(entry(pre, "delete")))
-            .when(differs,
-                  F.array(entry(pre, "update_preimage"),
-                          entry(post, "update_postimage")))
+            f"CASE WHEN {insert} THEN array({entry(new, 'insert')}) "
+            f"WHEN {delete} THEN array({entry(old, 'delete')}) "
+            f"WHEN {update} THEN array({entry(old, 'update_preimage')}, "
+            f"{entry(new, 'update_postimage')}) END"
         )
-        return j.select(F.explode(entries).alias("e")).select(
-            "e.img.*",
-            F.col("e.ct").alias(CHANGE_TYPE),
-            F.lit(from_version).alias(FROM_VERSION),
-            F.lit(to_version).alias(TO_VERSION),
+        return j.selectExpr(f"explode({entries}) AS e").selectExpr(
+            "e.img.*", f"e.ct AS {CHANGE_TYPE}", *bounds
         )
 
-    change = (
-        F.when(new_exists & ~old_exists, F.lit("insert"))
-        .when(~new_exists & old_exists, F.lit("delete"))
-        .when(differs, F.lit("update"))
-    )
+    change = (f"CASE WHEN {insert} THEN 'insert' WHEN {delete} THEN "
+              f"'delete' WHEN {update} THEN 'update' END")
     out = [
-        (
-            F.coalesce(j[c], j[f"o_{c}"]).alias(c)
-            if c in keys
-            # post-image; pre-image only when the row is gone
-            else F.when(new_exists, j[c]).otherwise(j[f"o_{c}"]).alias(c)
-        )
+        f"coalesce({new(c)}, {old(c)}) AS {new(c)}" if c in keys
+        # post-image; pre-image only when the row is gone
+        else f"CASE WHEN {n} THEN {new(c)} ELSE {old(c)} END AS {new(c)}"
         for c in cols
     ]
-    return j.select(
-        *out,
-        change.alias(CHANGE_TYPE),
-        F.lit(from_version).alias(FROM_VERSION),
-        F.lit(to_version).alias(TO_VERSION),
-    ).filter(F.col(CHANGE_TYPE).isNotNull())
+    return j.selectExpr(*out, f"{change} AS {CHANGE_TYPE}", *bounds).filter(
+        f"{CHANGE_TYPE} IS NOT NULL"
+    )
 
 
 def _old_state(
@@ -269,14 +295,7 @@ def _new_commit_files(
     The per-bucket prefix check (old list == head of new list) is what
     proves the commit only APPENDED files — a compaction between the
     versions reorders/folds the lists and falls through to the generic
-    diff.
-
-    One declined combination: NEW sdel files under
-    ``insert_mode=update`` + hard delete. There a subset delete kills
-    its subset key for good (``mor.apply_subset_overlays`` matches on
-    the sdel's existence, not its position), so resolving a commit's
-    rows needs the FULL sdel history since compaction, not just this
-    commit's — the generic diff already reads it."""
+    diff."""
     if new_snap.parent != old_snap.version:
         return None
     if new_snap.buckets != old_snap.buckets:
@@ -289,9 +308,6 @@ def _new_commit_files(
     )
     if new_delta is None or new_sdel is None:
         return None
-    meta = new_snap.mor_meta
-    if new_sdel and bool(meta.get("upd_only")) and bool(meta.get("hard")):
-        return None
     return new_delta, new_sdel
 
 
@@ -301,139 +317,147 @@ def _adjacent_delta_changes(
     new_sdel: dict[str, list[str]] | None = None,
     *, keys, cols, cmp_cols, include_preimages: bool = False,
 ) -> DataFrame:
-    """Adjacent-delta fast path: the just-committed delta/sdel files
-    list exactly the keys that can have changed, so the feed touches
+    """Adjacent merge-on-read feed in one keyed pass. The commit's
+    delta/sdel files name every key it can have changed, and the
+    buckets they touch (the *affected* buckets) hold everything both
+    states of those keys are resolved from: the same base files in
+    both snapshots, the old delta/sdel files, and the commit's.
 
-    * the commit's own delta files (batch-sized),
-    * the commit's own subset-delete files, if any (the delete-key
-      subsets this batch issued under ``delete.as.update.key ⊂ pk``),
-      and
-    * the OLD state of the affected buckets, key-filtered to the delta
-      keys plus the rows matching the sdel subset keys before the diff
-      join (needed for pre-images and the insert-vs-update distinction
-      — the deltas alone cannot say whether a key existed at the old
-      version; the sdel files name subsets, and only the old state
-      enumerates which pk rows they hit),
+    1. Every delta row of the affected buckets is folded per pk, with
+       two folds side by side (:func:`.mor.fold_deltas` ``new=``): one
+       over the rows from before the commit, one over all of them,
+       plus whether the key has a row in the commit's files.
+    2. The keys with a row in the commit join the base rows of the
+       affected buckets once (:func:`.mor.base_join`).
+    3. If the affected buckets hold sdel files (the manifest says so
+       on the driver; else this step is skipped), their entry lists
+       join on the subset key once (:func:`.mor.fold_sdels`, again
+       with the pre-commit entries beside all of them). A commit that
+       writes sdel entries also changes rows that only its subset keys
+       hit, so then the join to base is full outer, filtered to the
+       keys with a row in the commit or a subset key with an entry in
+       it.
+    4. :func:`.mor.resolve_rule`, then :func:`.mor.subset_overlay_rule`,
+       runs over that one row twice: over the pre-commit folds it
+       gives the old state, over the full ones the new state. The
+       rules are built once, as the body of a ``transform`` over the
+       two states. The old row is projected to the new schema as
+       :func:`_old_state` does (columns the old snapshot predates read
+       as NULL).
+    5. The change type is computed row-wise (:func:`_change_rows`): no
+       diff join, no semi join, no checkpoint.
 
-    and never resolves the NEW snapshot (whose delta history spans
-    every commit since the last compaction). Shuffle volume follows
-    the batch size plus the sdel-matched rows, not the bucket
-    contents: both key filters run before the full-outer diff (AQE can
-    convert them to broadcasts at runtime). Inputs are a strict subset
-    of the generic diff's; measured trade at local sizes in SCALE.md
-    ("Change data feed").
+    Building the frame runs no Spark job; ``count()`` runs 4 on a
+    steady delta commit (delta fold, base side, join, count) and 6 on
+    an sdel commit, against 10 and 14 for resolving the old state,
+    cutting it to the commit's keys, checkpointing it and diffing it
+    with the resolved new state.
 
-    New state for the affected keys = ``mor.resolve(old state, folded
-    new deltas)`` then ``mor.apply_subset_overlays(…, new sdels)`` —
-    resolution composes (the resolved old row plays the base role at
-    position (-1, -inf), exactly how a base file row written by
-    compaction would, and every NEW sdel entry is positioned after
-    any old-state row), so this is the same answer the two-snapshot
-    diff computes, at batch cost. Historical sdel entries need never
-    be read: a row present in the old state by definition survived
-    them (they are not applicable after its position), and the one
-    combination where existence alone matters (update+hard) is
-    declined by :func:`_new_commit_files`.
+    Resolving both states under the NEW snapshot's ``mor_meta`` is
+    exact when the old snapshot has no delta/sdel entries in the
+    affected buckets (then the old row is the base row under any rule)
+    or the same ``mor_meta``; other commits take :func:`_diff_changes`.
     """
-    import os
-
     from kafka_jdbc_sink_connector_spark.lake import mor
 
     new_sdel = new_sdel or {}
     affected = sorted({int(b) for b in new_delta}
                       | {int(b) for b in new_sdel})
-    if not affected:
-        # metadata-only / empty commit: nothing can have changed
-        empty = table.spark.createDataFrame(
-            [], table.read(version=new_snap.version, buckets=[]).schema
-        )
-        return empty.select(
-            "*",
-            F.lit(None).cast("string").alias(CHANGE_TYPE),
-            F.lit(old_snap.version).alias(FROM_VERSION),
-            F.lit(new_snap.version).alias(TO_VERSION),
-        ).filter(F.col(CHANGE_TYPE).isNotNull())
-    spark = table.spark
-    dschema = mor.delta_schema(new_snap.schema, keys)
-    dfiles = [
-        os.path.join(table.path, f)
-        for b in new_delta
-        for f in new_delta[b]
-    ]
-    deltas = (
-        spark.read.schema(dschema).parquet(*dfiles)
-        if dfiles
-        else spark.createDataFrame([], dschema)
-    )
-    dkeys = deltas.select(*keys).distinct()
-    skey = list(new_snap.mor_meta.get("sdel_key") or [])
-    sdels = None
-    if new_sdel:
-        sfiles = [
-            os.path.join(table.path, f)
-            for b in new_sdel
-            for f in new_sdel[b]
-        ]
-        sdels = spark.read.schema(
-            mor.sdel_schema(new_snap.schema, keys, skey)
-        ).parquet(*sfiles)
-        skeys = sdels.select(*skey).distinct()
-
-    # old resolved state of the affected buckets, restricted to the
-    # affected keys (left joins against the distinct key sets — no row
-    # duplication; AQE broadcasts the batch-sized key frames).
-    # localCheckpoint: both consumers below (the resolve base and the
-    # diff's old side) reuse ONE materialization of this batch-sized
-    # frame instead of scanning the old buckets twice
-    old_all = _old_state(table, old_snap, new_snap, affected)
-    if sdels is None:
-        # delta-only commit (the common steady-state case): plain
-        # LEFT SEMI — cheaper than the marker join below, which
-        # Catalyst does not reduce back to a semi join
-        old = old_all.join(
-            dkeys.select(*[F.col(k).alias(f"o_{k}") for k in keys]),
-            [f"o_{k}" for k in keys],
-            "left_semi",
-        )
-    else:
-        # rows hit by EITHER the delta pk keys OR the sdel subset
-        # keys: two marker left-joins against distinct key frames (no
-        # row duplication) + one filter — a single old-state scan
-        in_d = dkeys.select(
-            *[F.col(k).alias(f"o_{k}") for k in keys],
-            F.lit(True).alias("__in_d"),
-        )
-        in_s = skeys.select(
-            *[F.col(k).alias(f"o_{k}") for k in skey],
-            F.lit(True).alias("__in_s"),
-        )
-        old = (
-            old_all.join(in_d, [f"o_{k}" for k in keys], "left")
-            .join(in_s, [f"o_{k}" for k in skey], "left")
-            .filter(
-                F.col("__in_d").isNotNull()
-                | F.col("__in_s").isNotNull()
-            )
-            .drop("__in_d", "__in_s")
-        )
-    old = old.localCheckpoint(eager=False)
-    # resolve the new deltas (and sdel overlays) over the old state →
-    # new state per key
-    base = old.select(
-        *[F.col(f"o_{c}").alias(c) for c in cols]
-    ).withColumn(
-        mor.BUCKET_COL,
-        F.lit(None).cast("int"),  # only carried through, keys drive joins
-    )
+    old_deltas = old_snap.delta_files(affected)
+    old_sdels = old_snap.sdel_files(affected)
     meta = new_snap.mor_meta
-    new = mor.resolve(
-        base, mor.fold_deltas(deltas, keys, meta), new_snap, meta,
-        carry_pos=sdels is not None,
+    if meta != old_snap.mor_meta and (old_deltas or old_sdels):
+        return _diff_changes(table, old_snap, new_snap, keys, cols,
+                             cmp_cols, include_preimages)
+
+    def tagged(old_files, new_files, schema):
+        # the two file lists as one frame, each row tagged with
+        # whether this commit wrote it; an empty list is left out, so
+        # the frame stays a parquet scan whose size the planner knows
+        parts = [
+            table._scan(files, schema).withColumn(_IN_COMMIT, F.lit(tag))
+            for files, tag in ((old_files, False), (new_files, True))
+            if files
+        ]
+        return reduce(DataFrame.unionByName, parts) if parts else (
+            table._scan([], schema).withColumn(_IN_COMMIT, F.lit(True))
+        )
+
+    keyed = mor.fold_deltas(
+        tagged(old_deltas, _files(new_delta),
+               mor.delta_schema(new_snap.schema, keys)),
+        keys, meta, new=F.col(_IN_COMMIT),
     )
-    if sdels is not None:
-        new = mor.apply_subset_overlays(new, sdels, new_snap, meta)
-    new = new.drop(mor.BUCKET_COL)
-    return _keywise_diff(
-        new, old, keys, cols, cmp_cols, old_snap.version,
-        new_snap.version, include_preimages,
+    base = table._scan(new_snap.files(affected), new_snap.schema)
+    if new_sdel:
+        j = mor.base_join(base, keyed, keys)
+    else:
+        j = mor.base_join(base, keyed.filter(mor.KEY_NEW), keys, "right")
+    skey = list(meta.get("sdel_key") or [])
+    has_sdel = bool(skey) and bool(old_sdels or new_sdel)
+    if has_sdel:
+        sd = mor.fold_sdels(
+            tagged(old_sdels, _files(new_sdel),
+                   mor.sdel_schema(new_snap.schema, keys, skey)),
+            skey, new=F.col(_IN_COMMIT),
+        )
+        j = j.join(sd, [
+            F.coalesce(F.col(k), F.col(f"b_{k}")) == sd[f"sd_{k}"]
+            for k in skey
+        ], "left")
+    if new_sdel:
+        j = j.filter(
+            F.coalesce(F.col(mor.KEY_NEW), F.lit(False))
+            | F.coalesce(F.col(mor.SD_NEW), F.lit(False))
+        )
+
+    b_exists = F.col("__b_exists").isNotNull()
+    b_col = lambda c: F.col(f"b_{c}")  # noqa: E731
+
+    def state(u, dels, sd):
+        return F.struct(
+            F.col(u).alias("u"), F.col(dels).alias("dels"),
+            *([F.col(sd).alias("sd")] if has_sdel else []),
+        )
+
+    def resolved(s):
+        row, drop, pos = mor.resolve_rule(
+            meta, new_snap, s["u"], s["dels"], b_exists, b_col
+        )
+        if has_sdel:
+            row, sd_drop = mor.subset_overlay_rule(
+                meta, s["sd"], pos, row.__getitem__, cols
+            )
+            drop = drop | sd_drop
+        return F.struct(
+            F.struct(*[e.alias(c) for c, e in row.items()]).alias("row"),
+            (~drop).alias("live"),
+        )
+
+    # the rules are built once and run over both states, [old, new];
+    # exploding the one-element array makes a generator, which Catalyst
+    # does not inline into the projection below, so they run once per
+    # row rather than once per column read
+    rows = j.select(F.explode(F.array(F.transform(F.array(
+        state(mor.KEY_UPS_PRE, mor.KEY_DELS_PRE, mor.SD_ENTRIES_PRE),
+        state(mor.KEY_UPS, mor.KEY_DELS, mor.SD_ENTRIES),
+    ), resolved))).alias("__s")).selectExpr(
+        *[f"__s[1].row.{_q(c)} AS {_q(c)}" for c in cols],
+        *[f"__s[0].row.{_q(c)} AS {_q('o_' + c)}" for c in cols],
+        "__s[1].live AS __n_exists", "__s[0].live AS __o_exists",
     )
+    old_cols = {f.name for f in old_snap.schema.fields}
+    added = {
+        f"o_{f.name}": F.lit(None).cast(f.dataType)
+        for f in new_snap.schema.fields if f.name not in old_cols
+    }
+    if added:  # the old state predates these columns: NULL there
+        rows = rows.withColumns(added)
+    return _change_rows(
+        rows, keys, cols, cmp_cols, "__n_exists", "__o_exists",
+        old_snap.version, new_snap.version, include_preimages,
+    )
+
+
+def _files(per_bucket: dict[str, list[str]]) -> list[str]:
+    return [f for fs in per_bucket.values() for f in fs]

@@ -22,12 +22,20 @@ Delta row layout (per key, per commit):
 * ``__bucket`` — same hash bucket as the base layout.
 
 Resolution (per key, position = (seq, offset), base row = (-1,
--inf)) is split in two: :func:`fold_deltas` folds a key's delta rows
-across commits (readers only), and :func:`resolve` applies the rule
-below per row. The copy-on-write merge (``operators/merge.py``) runs
-the same :func:`resolve` over one batch's delta rows
-(:func:`batch_keys`, no aggregate) and rewrites the buckets, so both
-layouts share one rule set:
+-inf)) is a fold, a join and a column-level rule:
+:func:`fold_deltas` folds a key's delta rows across commits (readers
+only), :func:`base_join` joins that to the base rows on the pk, and
+:func:`resolve_rule` is the rule below over one joined row;
+:func:`resolve` is the join plus the rule. Subset deletes split the
+same way: :func:`fold_sdels`, a left join on the subset key, and
+:func:`subset_overlay_rule` make :func:`apply_subset_overlays`. The
+rules only read columns, so the change feed (``lake/changes.py``)
+runs them twice over one joined row — over the folds from before a
+commit and over the full ones — to get a key's old and new state
+without a second join. The copy-on-write merge
+(``operators/merge.py``) runs the same :func:`resolve` over one
+batch's delta rows (:func:`batch_keys`, no aggregate) and rewrites
+the buckets, so both layouts and the feed share one rule set:
 
 1. ``U`` = the latest delta upsert by position; valid only if the
    insert mode allows it (UPDATE mode needs a base row to match).
@@ -107,6 +115,11 @@ def delta_schema(schema: T.StructType, key_fields: list[str]) -> T.StructType:
 KEY_UPS = "__u"
 KEY_DELS = "__dels"
 KEY_BUCKET = "__dbucket"
+#: the pre-commit fold and the has-a-new-entry flag of
+#: ``fold_deltas(new=...)``
+KEY_UPS_PRE = "__u_pre"
+KEY_DELS_PRE = "__dels_pre"
+KEY_NEW = "__new"
 
 
 def _entry(off: str, row: str, present: Column | None = None) -> Column:
@@ -148,23 +161,43 @@ def _present(entries: list[Column]) -> Column:
     return F.filter(F.array(*entries), lambda x: x.isNotNull())
 
 
-def fold_deltas(deltas: DataFrame, keys: list[str], meta: dict) -> DataFrame:
+def _fold(meta: dict, keep: Column | None = None) -> tuple[Column, Column]:
+    """The per-key fold aggregates (latest upsert, sorted delete
+    entries), over the delta rows where ``keep`` holds (all if None)."""
+    ups, dels = _entries(bool(meta.get("hard")))
+    if keep is not None:
+        ups = F.when(keep, ups)
+        dels = [F.when(keep, d) for d in dels]
+    if len(dels) == 1:
+        dels_agg = F.array_sort(F.collect_list(dels[0]))
+    else:
+        dels_agg = F.array_sort(F.flatten(F.collect_list(_present(dels))))
+    return F.max(ups), dels_agg
+
+
+def fold_deltas(
+    deltas: DataFrame, keys: list[str], meta: dict,
+    new: Column | None = None,
+) -> DataFrame:
     """Per-key fold of delta files (any number of rows per key, across
     commits) → the :func:`resolve` input: the latest upsert by
     lexicographic max over (seq, off, row) — (seq, off) is unique per
     key, so the row never ties — and every delete entry, sorted. A
     declarative aggregate (partial aggregation map-side, reuses the pk
-    hash partitioning for the join)."""
-    ups, dels = _entries(bool(meta.get("hard")))
-    if len(dels) == 1:
-        dels_agg = F.array_sort(F.collect_list(dels[0]))
-    else:
-        dels_agg = F.array_sort(F.flatten(F.collect_list(_present(dels))))
-    return deltas.groupBy(*keys).agg(
-        F.max(ups).alias(KEY_UPS),
-        dels_agg.alias(KEY_DELS),
-        F.max(BUCKET_COL).alias(KEY_BUCKET),
-    )
+    hash partitioning for the join).
+
+    ``new`` (a boolean over the delta rows, for the change feed) adds
+    a second fold side by side, over the rows where it is false
+    (``__u_pre``, ``__dels_pre``: the key's input before one commit),
+    and ``__new``: whether the key has a row where it is true."""
+    u, dels = _fold(meta)
+    aggs = [u.alias(KEY_UPS), dels.alias(KEY_DELS),
+            F.max(BUCKET_COL).alias(KEY_BUCKET)]
+    if new is not None:
+        u_pre, dels_pre = _fold(meta, ~new)
+        aggs += [u_pre.alias(KEY_UPS_PRE), dels_pre.alias(KEY_DELS_PRE),
+                 F.max(new).alias(KEY_NEW)]
+    return deltas.groupBy(*keys).agg(*aggs)
 
 
 def batch_keys(delta_rows: DataFrame, keys: list[str], meta: dict) -> DataFrame:
@@ -250,23 +283,19 @@ def sdel_schema(schema: T.StructType, snap_key_fields, sdel_key) -> T.StructType
 #: resolve(carry_pos=True) for the subset-delete overlay pass
 P_POS = "__p_pos"
 
+#: per-subset-key fold of the sdel entries (see :func:`fold_sdels`)
+SD_ENTRIES = "__sd"
+SD_ENTRIES_PRE = "__sd_pre"
+SD_NEW = "__sd_new"
 
-def apply_subset_overlays(
-    resolved: DataFrame, sdels: DataFrame, snap, meta: dict
+
+def fold_sdels(
+    sdels: DataFrame, skey: list[str], new: Column | None = None
 ) -> DataFrame:
-    """Overlay subset-key deletes (sdel rows with ``__seq``) on
-    pk-resolved rows (``resolved`` must carry ``__p_pos`` from
-    :func:`resolve`). Per row, the winning delete is the
-    :func:`winning_delete` of the sdel entries positioned after the
-    row's last upsert; the not-already-deleted guard is also checked
-    against the row's CURRENT marker (a row already deleted in base
-    stays untouched). Hard mode drops matched rows; under
-    insert_mode=update any matching delete drops the row (updates never
-    re-create it)."""
-    skey = list(meta.get("sdel_key") or [])
-    if not skey:
-        return resolved.drop(P_POS)
-
+    """Per subset key: every sdel entry (seq, off, row), sorted by
+    position, with the key columns renamed ``sd_<k>``. ``new`` works as
+    in :func:`fold_deltas`: a second list of the entries where it is
+    false (``__sd_pre``) and ``__sd_new``."""
     entries = F.transform(
         F.col(SDEL_LIST),
         lambda e: F.struct(
@@ -275,58 +304,87 @@ def apply_subset_overlays(
             e["row"].alias("row"),
         ),
     )
-    agg = (
-        sdels.select(*skey, entries.alias("__e"))
-        .groupBy(*skey)
-        .agg(F.array_sort(F.flatten(F.collect_list("__e"))).alias("__sd"))
-        .select(
-            *[F.col(k).alias(f"sd_{k}") for k in skey], F.col("__sd")
-        )
+    fold = lambda e: F.array_sort(F.flatten(F.collect_list(e)))  # noqa: E731
+    aggs = [fold(entries).alias(SD_ENTRIES)]
+    if new is not None:
+        aggs += [fold(F.when(~new, entries)).alias(SD_ENTRIES_PRE),
+                 F.max(new).alias(SD_NEW)]
+    return sdels.groupBy(*skey).agg(*aggs).withColumnsRenamed(
+        {k: f"sd_{k}" for k in skey}
     )
-    cond = [resolved[k] == agg[f"sd_{k}"] for k in skey]
-    j = resolved.join(agg, cond, "left")
 
+
+def subset_overlay_rule(
+    meta: dict, sd: Column, p_pos: Column, col, cols: list[str]
+) -> tuple[dict[str, Column], Column]:
+    """The subset-delete overlay of one pk-resolved row: ``sd`` its
+    subset key's sorted entries (NULL for none), ``p_pos`` its last
+    upsert's position, ``col(name)`` its columns → (its ``cols`` after
+    the overlay, by name; whether the overlay drops it)."""
     applicable = F.filter(
-        F.col("__sd"),
+        sd,
         lambda e: F.struct(e["seq"].alias("seq"), e["off"].alias("off"))
-        > F.col(P_POS),
+        > p_pos,
     )
-
-    out_cols = [f.name for f in snap.schema.fields] + [BUCKET_COL]
-    overlay_cols = set(meta.get("overlay_cols", []))
+    same = {c: col(c) for c in cols}
     if meta.get("hard"):
         matched = (
-            F.coalesce(F.size("__sd") > 0, F.lit(False))
+            F.coalesce(F.size(sd) > 0, F.lit(False))
             if meta.get("upd_only")
             else F.get(applicable, 0).isNotNull()
         )
-        return j.filter(~matched).select(*out_cols)
+        return same, matched
     if not meta.get("soft"):
-        return j.select(*out_cols)  # delete mode none: sdels never written
+        return same, F.lit(False)  # delete mode none: sdels never written
+    overlay_cols = set(meta.get("overlay_cols", []))
     d0 = winning_delete(
         applicable, meta,
-        lambda d, c: d["row"][c] if c in overlay_cols else F.col(c),
+        lambda d, c: d["row"][c] if c in overlay_cols else col(c),
     )
-    overlay = d0.isNotNull() & guard_passes(meta, F.col)
-    return j.select(*[
-        F.when(overlay, d0["row"][c]).otherwise(F.col(c)).alias(c)
-        if c in overlay_cols else F.col(c)
-        for c in out_cols
-    ])
+    overlay = d0.isNotNull() & guard_passes(meta, col)
+    return {
+        c: F.when(overlay, d0["row"][c]).otherwise(col(c))
+        if c in overlay_cols else col(c)
+        for c in cols
+    }, F.lit(False)
 
 
-def resolve(
-    base: DataFrame | None, keyed: DataFrame, snap, meta: dict,
-    carry_pos: bool = False,
+def apply_subset_overlays(
+    resolved: DataFrame, sdels: DataFrame, snap, meta: dict
 ) -> DataFrame:
-    """Per-row resolution of ``keyed`` (one row per key, from
-    :func:`fold_deltas` or :func:`batch_keys`) over ``base`` (rows with
-    ``__bucket``, at position (-1, LONG_MIN); None when the buckets hold
-    no rows — then there is no join) → the resolved rows, with
-    ``__bucket``. ``meta`` is the resolution spec (``snap.mor_meta`` for
-    readers, the writer's config for a copy-on-write merge).
-    ``carry_pos`` appends ``__p_pos`` — each output row's (seq, offset)
-    position — for the subset-delete overlay pass."""
+    """Overlay subset-key deletes (sdel rows with ``__seq``) on
+    pk-resolved rows (``resolved`` must carry ``__p_pos`` from
+    :func:`resolve`): a left join on the subset key
+    (:func:`fold_sdels`), then :func:`subset_overlay_rule` per row. The
+    winning delete is the :func:`winning_delete` of the sdel entries
+    positioned after the row's last upsert; the not-already-deleted
+    guard is also checked against the row's CURRENT marker (a row
+    already deleted in base stays untouched). Hard mode drops matched
+    rows; under insert_mode=update any matching delete drops the row
+    (updates never re-create it)."""
+    skey = list(meta.get("sdel_key") or [])
+    if not skey:
+        return resolved.drop(P_POS)
+    agg = fold_sdels(sdels, skey)
+    cond = [resolved[k] == agg[f"sd_{k}"] for k in skey]
+    j = resolved.join(agg, cond, "left")
+    out_cols = [f.name for f in snap.schema.fields] + [BUCKET_COL]
+    row, drop = subset_overlay_rule(
+        meta, F.col(SD_ENTRIES), F.col(P_POS), F.col, out_cols
+    )
+    return j.filter(~drop).select(*[e.alias(c) for c, e in row.items()])
+
+
+def resolve_rule(
+    meta: dict, snap, u: Column, dels: Column, b_exists: Column, b_col
+) -> tuple[dict[str, Column], Column, Column]:
+    """The per-row rule (steps 1-4 of the module docstring) over one
+    joined row: ``u`` and ``dels`` its fold (:data:`KEY_UPS`,
+    :data:`KEY_DELS` or their pre-commit twins), ``b_exists`` whether a
+    base row joined, ``b_col(name)`` the base row's columns; pk columns
+    are read as ``coalesce(<pk>, base pk)``. Returns (the resolved
+    row's columns by name in ``snap.schema`` order, cast; whether
+    the row is absent; its (seq, offset) position)."""
     soft = bool(meta.get("soft"))
     hard = bool(meta.get("hard"))
     upd_only = bool(meta.get("upd_only"))
@@ -335,21 +393,6 @@ def resolve(
 
     pos = lambda s, o: F.struct(s.alias("seq"), o.alias("off"))  # noqa: E731
 
-    if base is None:
-        j = keyed
-        b_exists = F.lit(False)
-        b_col = lambda c: F.lit(None)  # noqa: E731
-    else:
-        b = base.select(
-            *[F.col(c).alias(f"b_{c}") for c in base.columns],
-            F.lit(True).alias("__b_exists"),
-        )
-        cond = [b[f"b_{k}"] == keyed[k] for k in keys]
-        j = b.join(keyed, cond, "full_outer")
-        b_exists = F.col("__b_exists").isNotNull()
-        b_col = lambda c: F.col(f"b_{c}")  # noqa: E731
-
-    u = F.col(KEY_UPS)
     u_valid = u.isNotNull()
     if upd_only:
         u_valid = u_valid & b_exists
@@ -358,7 +401,7 @@ def resolve(
             # re-insert possible) — later updates match nothing
             u_valid = u_valid & ~F.coalesce(
                 F.exists(
-                    KEY_DELS,
+                    dels,
                     lambda d: pos(d["seq"], d["off"])
                     < pos(u["seq"], u["off"]),
                 ),
@@ -368,9 +411,7 @@ def resolve(
     p_pos = F.when(u_valid, pos(u["seq"], u["off"])).otherwise(
         pos(F.lit(-1).cast("long"), F.lit(_LONG_MIN))
     )
-    after = F.filter(
-        KEY_DELS, lambda d: pos(d["seq"], d["off"]) > p_pos
-    )
+    after = F.filter(dels, lambda d: pos(d["seq"], d["off"]) > p_pos)
 
     def p_col(c: str):
         if c in keys:
@@ -390,13 +431,53 @@ def resolve(
         overlay = F.lit(False)
         drop = ~p_exists | (F.lit(hard) & d_win.isNotNull())
 
-    out = []
+    out = {}
     for f in snap.schema.fields:
         c = f.name
         expr = p_col(c)
         if soft and c in overlay_cols and c not in keys:
             expr = F.when(overlay, d_win["row"][c]).otherwise(expr)
-        out.append(expr.cast(f.dataType).alias(c))
+        out[c] = expr.cast(f.dataType)
+    return out, drop, p_pos
+
+
+def base_join(base: DataFrame, keyed: DataFrame, keys: list[str],
+              how: str = "full_outer") -> DataFrame:
+    """``base`` rows (columns renamed ``b_<name>``, plus
+    ``__b_exists``) joined to ``keyed`` on the pk — the input of
+    :func:`resolve_rule`."""
+    b = base.select(
+        *[F.col(c).alias(f"b_{c}") for c in base.columns],
+        F.lit(True).alias("__b_exists"),
+    )
+    return b.join(keyed, [b[f"b_{k}"] == keyed[k] for k in keys], how)
+
+
+def resolve(
+    base: DataFrame | None, keyed: DataFrame, snap, meta: dict,
+    carry_pos: bool = False,
+) -> DataFrame:
+    """Per-row resolution of ``keyed`` (one row per key, from
+    :func:`fold_deltas` or :func:`batch_keys`) over ``base`` (rows with
+    ``__bucket``, at position (-1, LONG_MIN); None when the buckets hold
+    no rows — then there is no join) → the resolved rows, with
+    ``__bucket``: :func:`base_join`, then :func:`resolve_rule` per row.
+    ``meta`` is the resolution spec (``snap.mor_meta`` for readers, the
+    writer's config for a copy-on-write merge). ``carry_pos`` appends
+    ``__p_pos`` — each output row's (seq, offset) position — for the
+    subset-delete overlay pass."""
+    if base is None:
+        j = keyed
+        b_exists = F.lit(False)
+        b_col = lambda c: F.lit(None)  # noqa: E731
+    else:
+        j = base_join(base, keyed, list(snap.key_fields))
+        b_exists = F.col("__b_exists").isNotNull()
+        b_col = lambda c: F.col(f"b_{c}")  # noqa: E731
+    row, drop, p_pos = resolve_rule(
+        meta, snap, F.col(KEY_UPS), F.col(KEY_DELS), b_exists, b_col
+    )
+    out = [e.alias(c) for c, e in row.items()]
     out.append(
         F.coalesce(b_col(BUCKET_COL), F.col(KEY_BUCKET)).alias(BUCKET_COL)
     )

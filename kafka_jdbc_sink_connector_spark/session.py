@@ -31,6 +31,17 @@ def _env_byte_size(key: str, default: str) -> str:
     return raw
 
 
+def _env_cpus(key: str, default: str) -> str:
+    """``key`` from the environment: a positive CPU count or ``*``
+    (every core), checked like :func:`_env_byte_size`."""
+    raw = os.environ.get(key, default).strip()
+    if raw != "*" and not (raw.isdigit() and int(raw) > 0):
+        raise ConfigError(
+            f"{key}={raw!r} is not a CPU count (a positive integer or *)"
+        )
+    return raw
+
+
 def build_session(
     app_name: str = "kafka_jdbc_sink_connector_spark",
     cores: int | str | None = None,
@@ -38,7 +49,8 @@ def build_session(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     aqe_min_partition = _env_byte_size("SPARK_GRAFT_AQE_MIN_PARTITION", "64k")
-    cores = cores or os.environ.get("SPARK_GRAFT_CPUS", "*")
+    driver_mem = _env_byte_size("SPARK_DRIVER_MEM", "16g")
+    cores = cores or _env_cpus("SPARK_GRAFT_CPUS", "*")
     master = f"local[{cores}]"
     if shuffle_partitions is None:
         shuffle_partitions = os.cpu_count() or 8 if cores == "*" else int(cores)
@@ -63,7 +75,7 @@ def build_session(
         # modern parquet logical type and stats-bearing everywhere
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # single-JVM local mode: every task is PROCESS_LOCAL by
         # definition; any locality wait is pure scheduler stall (3s

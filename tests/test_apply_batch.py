@@ -89,6 +89,25 @@ def applier(spark, tmp_table, request):
     return CdcApplier(spark, cfg, tmp_table, audit_ts=audit_col())
 
 
+def test_apply_phases_log_at_debug(spark, applier, caplog, capsys):
+    """Each apply phase's wall time goes to the module logger at DEBUG
+    (nothing is printed)."""
+    import logging
+
+    name = "kafka_jdbc_sink_connector_spark.apply"
+    caplog.set_level(logging.DEBUG, logger=name)
+    applier.apply_batch(_events_df(spark, [ev(1, "c", "conv-a", 0)]),
+                        batch_id=0)
+    assert capsys.readouterr().out == ""
+    records = [r for r in caplog.records if r.name == name]
+    phases = [r.getMessage().split(":")[0] for r in records]
+    assert phases == [
+        "apply phase stats job", "apply phase quarantine+evolve",
+        "apply phase merge commit", "apply phase lineage write",
+    ]
+    assert {r.levelno for r in records} == {logging.DEBUG}
+
+
 def test_insert_update_upsert(spark, applier):
     rows = [
         ev(1, "c", "conv-a", 0),

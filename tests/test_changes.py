@@ -153,15 +153,31 @@ def _rows_sorted(df):
     )
 
 
-@pytest.mark.parametrize("delete_mode", ["update", "delete"])
-def test_adjacent_delta_fast_path_equals_diff(spark, tmp_table,
-                                              delete_mode):
-    """For every adjacent MOR version pair, the delta-replay fast path
-    and the two-snapshot diff must produce identical change rows —
-    inserts, updates, hard deletes (pre-image), soft deletes
-    (marker-flip update), and re-upserts of deleted keys included."""
-    from kafka_jdbc_sink_connector_spark.lake import changes
+def _sdel(off, conv):
+    """A subset delete: every turn of ``conv``."""
+    return {"kafka_partition": 0, "kafka_offset": off, "op": "d",
+            "conv_id": conv, "turn_idx": None,
+            "ts": ev(off, "d", conv, 0)["ts"]}
 
+
+def _counted_df(spark, rows, ntc, tool=False):
+    """``_events_df`` rows plus an ``n_tool_calls`` column of SQL type
+    ``ntc`` (and a ``tool`` column)."""
+    extra = ["tool"] if tool else []
+    cols = ["kafka_partition", "kafka_offset", "op", "conv_id",
+            "turn_idx", "role", "text", "ts", *extra, "n_tool_calls"]
+    schema = (
+        "kafka_partition int, kafka_offset long, op string, "
+        "conv_id string, turn_idx int, role string, text string, "
+        "ts timestamp, " + "".join(f"{c} string, " for c in extra)
+        + f"n_tool_calls {ntc}"
+    )
+    return spark.createDataFrame(
+        [tuple(r.get(c) for c in cols) for r in rows], schema
+    )
+
+
+def _steady_batches(spark, tmp_table, delete_mode):
     cfg = SinkConfig(n_buckets=4, merge_mode="mor",
                      delete_mode=delete_mode)
     applier = CdcApplier(spark, cfg, tmp_table, audit_ts=audit_col())
@@ -176,31 +192,194 @@ def test_adjacent_delta_fast_path_equals_diff(spark, tmp_table,
     ]
     for i, rows in enumerate(batches):
         applier.apply_batch(_events_df(spark, rows), batch_id=i)
+    return applier.table()
+
+
+def _insert_update_batches(spark, tmp_table):
+    """Upsert-mode commits seed the table, then insert_mode=update
+    with hard deletes takes over: updates of missing keys match
+    nothing, and a key once deleted stays gone."""
+    seeder = CdcApplier(
+        spark, SinkConfig(n_buckets=4, merge_mode="mor"), tmp_table,
+        audit_ts=audit_col(),
+    )
+    seeder.apply_batch(_events_df(spark, [
+        ev(1, "c", "conv-a", 0), ev(2, "c", "conv-b", 0),
+        ev(3, "c", "conv-c", 0), ev(4, "c", "conv-d", 1),
+    ]), batch_id=0)
+    seeder.apply_batch(_events_df(spark, [
+        ev(5, "u", "conv-d", 1, text="v2"), ev(6, "c", "conv-e", 0),
+    ]), batch_id=1)
+    upd = CdcApplier(
+        spark, SinkConfig(n_buckets=4, merge_mode="mor",
+                          insert_mode="update", delete_mode="delete"),
+        tmp_table, audit_ts=audit_col(),
+    )
+    for i, rows in enumerate([
+        [ev(7, "u", "conv-a", 0, text="v2"),
+         ev(8, "u", "conv-x", 0),                 # no row: ignored
+         ev(9, "d", "conv-c", 0)],
+        [ev(10, "u", "conv-c", 0, text="ghost"),  # deleted: stays gone
+         ev(11, "d", "conv-b", 0), ev(12, "u", "conv-b", 0),
+         ev(13, "u", "conv-d", 1, text="v3"), ev(14, "u", "conv-e", 0)],
+    ], start=2):
+        upd.apply_batch(_events_df(spark, rows), batch_id=i)
+    return upd.table()
+
+
+def _sdel_insert_update_batches(spark, tmp_table):
+    """insert_mode=update + hard delete under a subset delete key, on a
+    table another writer seeded: a subset delete kills every row of
+    its subset key for good, whatever the position."""
+    sub = dict(pk_fields=("conv_id", "turn_idx"),
+               delete_as_update_key=("conv_id",), n_buckets=2,
+               merge_mode="mor")
+    seeder = CdcApplier(spark, SinkConfig(**sub), tmp_table,
+                        audit_ts=audit_col())
+    seeder.apply_batch(_events_df(spark, [
+        ev(1, "c", "conv-a", 0), ev(2, "c", "conv-a", 1),
+        ev(3, "c", "conv-b", 0), ev(4, "c", "conv-b", 1),
+        ev(5, "c", "conv-c", 0),
+    ]), batch_id=0)
+    seeder.apply_batch(_events_df(spark, [
+        ev(6, "u", "conv-c", 0, text="v2"),
+    ]), batch_id=1)
+    upd = CdcApplier(
+        spark, SinkConfig(**sub, insert_mode="update",
+                          delete_mode="delete"),
+        tmp_table, audit_ts=audit_col(),
+    )
+    for i, rows in enumerate([
+        [_sdel(7, "conv-a"), ev(8, "u", "conv-b", 0, text="v2")],
+        [ev(9, "u", "conv-a", 0, text="ghost"),   # killed: stays gone
+         ev(10, "u", "conv-b", 1, text="v2"), _sdel(11, "conv-c")],
+        [ev(12, "u", "conv-a", 1, text="ghost"),
+         ev(13, "u", "conv-c", 0, text="ghost"),
+         ev(14, "u", "conv-b", 0, text="v3")],
+    ], start=2):
+        upd.apply_batch(_events_df(spark, rows), batch_id=i)
+    return upd.table()
+
+
+def _evolve_batches(spark, tmp_table):
+    """An int column widened to bigint, then a column added: the
+    commits after each step read older delta and base files through
+    the evolved schema."""
+    cfg = SinkConfig(n_buckets=2, merge_mode="mor",
+                     auto_evolve_widen=True)
+    applier = CdcApplier(spark, cfg, tmp_table, audit_ts=audit_col())
+    batches = [
+        ("int", False, [ev(i, "c", f"conv-{i}", 0, n_tool_calls=i)
+                        for i in range(1, 7)]),
+        ("int", False, [ev(7, "u", "conv-1", 0, n_tool_calls=70),
+                        ev(8, "d", "conv-2", 0),
+                        ev(9, "c", "conv-7", 0, n_tool_calls=9)]),
+        ("bigint", False, [ev(10, "u", "conv-3", 0, n_tool_calls=2**40),
+                           ev(11, "u", "conv-1", 0, n_tool_calls=71),
+                           ev(12, "c", "conv-8", 0, n_tool_calls=12)]),
+        ("bigint", True, [ev(13, "u", "conv-4", 0, tool="search",
+                             n_tool_calls=4),
+                          ev(14, "u", "conv-5", 0, n_tool_calls=15),
+                          ev(15, "d", "conv-1", 0)]),
+        ("bigint", True, [ev(16, "u", "conv-6", 0, n_tool_calls=6),
+                          ev(17, "u", "conv-7", 0, tool="x",
+                             n_tool_calls=17)]),
+    ]
+    for i, (ntc, tool, rows) in enumerate(batches):
+        applier.apply_batch(_counted_df(spark, rows, ntc, tool),
+                            batch_id=i)
     t = applier.table()
+    assert t.schema["n_tool_calls"].dataType.simpleString() == "bigint"
+    assert "tool" in t.schema.fieldNames()
+    return t
+
+
+def _sdel_history_batches(spark, tmp_table, delete_mode):
+    """Plain delta commits after a subset delete, no compaction
+    between: their rows resolve over the earlier sdel files."""
+    cfg = SinkConfig(
+        pk_fields=("conv_id", "turn_idx"),
+        delete_as_update_key=("conv_id",),
+        n_buckets=2, merge_mode="mor", delete_mode=delete_mode,
+    )
+    applier = CdcApplier(spark, cfg, tmp_table, audit_ts=audit_col())
+    batches = [
+        [ev(1, "c", "conv-a", 0), ev(2, "c", "conv-a", 1),
+         ev(3, "c", "conv-b", 0), ev(4, "c", "conv-c", 0),
+         ev(5, "c", "conv-c", 1)],
+        [_sdel(6, "conv-a"), ev(7, "u", "conv-b", 0, text="v2")],
+        [ev(8, "c", "conv-a", 0, text="back"),
+         ev(9, "u", "conv-c", 1, text="v2"), ev(10, "c", "conv-d", 0)],
+        [ev(11, "u", "conv-a", 1, text="back"),
+         ev(12, "u", "conv-a", 0, text="again"),
+         ev(13, "u", "conv-b", 0, text="v3")],
+    ]
+    for i, rows in enumerate(batches):
+        applier.apply_batch(_events_df(spark, rows), batch_id=i)
+    t = applier.table()
+    assert t.snapshot.sdel_files() and t.snapshot.delta_files()
+    return t
+
+
+def _assert_every_pair_equals_diff(t, min_fast_pairs, min_history_pairs):
+    """For every adjacent version pair: the feed ``table_changes``
+    serves equals the two-snapshot diff, with and without pre-images.
+    At least ``min_fast_pairs`` pairs are one merge-on-read commit,
+    ``min_history_pairs`` of them delta-only over earlier sdel files."""
+    from kafka_jdbc_sink_connector_spark.lake import changes
+
     keys = list(t.snapshot.key_fields)
-    cols = [f.name for f in t.snapshot.schema.fields]
-    cmp_cols = [c for c in cols if c not in keys]
-    fast_pairs = 0
+    fast_pairs = history_pairs = 0
     for v_from, v_to in zip(t.history(), t.history()[1:]):
         old_snap = t._read_version(v_from)
         new_snap = t._read_version(v_to)
+        cols = [f.name for f in new_snap.schema.fields]
+        cmp_cols = [c for c in cols if c not in keys]
         nd = changes._new_commit_files(old_snap, new_snap)
-        if nd is None:
-            continue
-        fast_pairs += 1
-        fast = changes._adjacent_delta_changes(
-            t, old_snap, new_snap, *nd,
-            keys=keys, cols=cols, cmp_cols=cmp_cols,
-        )
-        ref = changes._diff_changes(
-            t, old_snap, new_snap, keys, cols, cmp_cols
-        )
-        assert _rows_sorted(fast) == _rows_sorted(ref), (v_from, v_to)
-        # dispatch: table_changes itself must pick the fast path's plan
-        assert _rows_sorted(
-            table_changes(t, from_version=v_from, to_version=v_to)
-        ) == _rows_sorted(ref)
-    assert fast_pairs >= 2  # the steady-state delta commits
+        if nd is not None and (nd[0] or nd[1]):
+            fast_pairs += 1
+            history_pairs += bool(
+                nd[0] and not nd[1] and old_snap.sdel_files()
+            )
+        for pre in (False, True):
+            ref = changes._diff_changes(
+                t, old_snap, new_snap, keys, cols, cmp_cols, pre
+            )
+            got = table_changes(t, from_version=v_from, to_version=v_to,
+                                include_preimages=pre)
+            assert _rows_sorted(got) == _rows_sorted(ref), (
+                v_from, v_to, pre)
+    assert fast_pairs >= min_fast_pairs
+    assert history_pairs >= min_history_pairs
+
+
+@pytest.mark.parametrize("scenario", [
+    "update", "delete", "insert_update", "evolve", "sdel_history_update",
+    "sdel_history_delete", "sdel_insert_update",
+])
+def test_adjacent_delta_fast_path_equals_diff(spark, tmp_table, scenario):
+    """For every adjacent MOR version pair, the one-pass feed and the
+    two-snapshot diff must produce identical change rows — inserts,
+    updates, hard deletes (pre-image), soft deletes (marker-flip
+    update), re-upserts of deleted keys, insert_mode=update, schema
+    widening and column adds, plain commits over historical subset
+    deletes, and subset deletes under insert_mode=update + hard delete
+    (once sent to the generic diff) included; update pre-images too."""
+    history = 0
+    if scenario in ("update", "delete"):
+        t, fast = _steady_batches(spark, tmp_table, scenario), 2
+    elif scenario == "insert_update":
+        t, fast = _insert_update_batches(spark, tmp_table), 3
+    elif scenario == "evolve":
+        t, fast = _evolve_batches(spark, tmp_table), 4
+    elif scenario == "sdel_insert_update":
+        t = _sdel_insert_update_batches(spark, tmp_table)
+        fast, history = 4, 1
+    else:
+        t = _sdel_history_batches(
+            spark, tmp_table, scenario.rsplit("_", 1)[1])
+        fast, history = 3, 2
+    _assert_every_pair_equals_diff(t, fast, history)
 
 
 def test_adjacent_delta_fast_path_plan_reads_only_deltas_and_old_bucket(
@@ -289,18 +468,13 @@ def test_adjacent_fast_path_covers_subset_delete_commits(
     )
     applier = CdcApplier(spark, cfg, tmp_table, audit_ts=audit_col())
 
-    def sdel(off, conv):
-        return {"kafka_partition": 0, "kafka_offset": off, "op": "d",
-                "conv_id": conv, "turn_idx": None,
-                "ts": ev(off, "d", conv, 0)["ts"]}
-
     batches = [
         [ev(1, "c", "conv-a", 0), ev(2, "c", "conv-a", 1),
          ev(3, "c", "conv-b", 0), ev(4, "c", "conv-c", 0)],
         # pure subset-delete commit: kills both conv-a rows
-        [sdel(5, "conv-a")],
+        [_sdel(5, "conv-a")],
         # mixed commit: upsert + subset delete in one batch
-        [ev(6, "u", "conv-b", 0, text="v2"), sdel(7, "conv-c"),
+        [ev(6, "u", "conv-b", 0, text="v2"), _sdel(7, "conv-c"),
          ev(8, "c", "conv-d", 0)],
         # re-upsert a subset-deleted conversation
         [ev(9, "c", "conv-a", 0, text="back")],
@@ -383,58 +557,69 @@ def test_sdel_fast_path_plan_reads_only_commit_files_and_old_buckets(
     )
 
 
-def test_sdel_fast_path_declined_for_update_insert_hard_delete(
-    spark, tmp_table
-):
-    """insert_mode=update + hard delete: a subset delete kills its
-    subset key for good regardless of position
-    (mor.apply_subset_overlays matches on existence, not position), so
-    this commit's sdel files alone cannot resolve rows upserted later
-    — _new_commit_files must decline sdel commits under that meta and
-    fall back to the generic diff. Exercised on a REAL sdel commit's
-    snapshots with the mode flags swapped in (an upd_only pipeline
-    cannot seed its own rows, so the combination only arises on
-    externally-seeded tables)."""
-    import dataclasses
+# --- one-pass feed: job budget and memory ----------------------------
 
-    from kafka_jdbc_sink_connector_spark.lake import changes
 
+def _cached_rdds(spark) -> set[int]:
+    return {
+        i.id()
+        for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    }
+
+
+def _jobs(spark, group, fn):
+    """(result, number of Spark jobs) of ``fn()``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        res = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return res, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+#: Spark jobs of ``table_changes(t, v - 1, v).count()`` on a 4-core
+#: local session: the delta fold's map stage, the base side (a
+#: broadcast at this size), the join and the count; an sdel commit
+#: adds the sdel fold's map stage and its broadcast
+FEED_JOBS = {"delta": 4, "sdel": 6}
+
+
+@pytest.mark.parametrize("commit", ["delta", "sdel"])
+def test_feed_builds_without_jobs_and_leaves_no_cache(spark, tmp_path,
+                                                      commit):
+    """The adjacent MOR feed launches no job while its frame is built,
+    stays within its job budget on ``count()``, and leaves no cached
+    RDD behind (the old-state checkpoint it used to take stayed cached
+    until GC)."""
     cfg = SinkConfig(
         pk_fields=("conv_id", "turn_idx"),
         delete_as_update_key=("conv_id",),
         n_buckets=4, merge_mode="mor",
     )
-    applier = CdcApplier(spark, cfg, tmp_table, audit_ts=audit_col())
+    applier = CdcApplier(spark, cfg, str(tmp_path / "t"),
+                         audit_ts=audit_col())
     applier.apply_batch(_events_df(spark, [
-        ev(1, "c", "conv-a", 0), ev(2, "c", "conv-b", 0),
+        ev(i, "c", f"conv-{i % 6}", i // 6) for i in range(1, 25)
     ]), batch_id=0)
-    applier.apply_batch(_events_df(spark, [{
-        "kafka_partition": 0, "kafka_offset": 3, "op": "d",
-        "conv_id": "conv-a", "turn_idx": None,
-        "ts": ev(3, "d", "conv-a", 0)["ts"],
-    }]), batch_id=1)
-    t = applier.table()
-    old_snap = t._read_version(t.version - 1)
-    new_snap = t._read_version(t.version)
-    nd = changes._new_commit_files(old_snap, new_snap)
-    assert nd is not None and nd[1]          # sdel commit, fast-pathed
-    hard_upd = dataclasses.replace(
-        new_snap,
-        mor_meta={**new_snap.mor_meta, "upd_only": True, "hard": True,
-                  "soft": False},
-    )
-    assert changes._new_commit_files(old_snap, hard_upd) is None
-    # a DELTA-only commit under the same meta still fast-paths (the
-    # decline is specific to sdel files)
     applier.apply_batch(_events_df(spark, [
-        ev(4, "u", "conv-b", 0, text="v2"),
-    ]), batch_id=2)
-    t.refresh()
-    o2 = t._read_version(t.version - 1)
-    n2 = dataclasses.replace(
-        t._read_version(t.version),
-        mor_meta={**new_snap.mor_meta, "upd_only": True, "hard": True,
-                  "soft": False},
+        ev(30 + i, "u", f"conv-{i}", 0, text="v2") for i in range(4)
+    ]), batch_id=1)
+    last = [ev(40, "u", "conv-5", 1, text="v3"), ev(41, "c", "conv-9", 0)]
+    if commit == "sdel":
+        last.append(_sdel(42, "conv-2"))
+    applier.apply_batch(_events_df(spark, last), batch_id=2)
+    t = applier.table()
+    assert bool(t.snapshot.sdel_files()) == (commit == "sdel")
+
+    before = _cached_rdds(spark)
+    group = f"{tmp_path.name}-feed"
+    feed, built = _jobs(
+        spark, f"{group}-build",
+        lambda: table_changes(t, t.version - 1, t.version),
     )
-    nd2 = changes._new_commit_files(o2, n2)
-    assert nd2 is not None and nd2[0] and not nd2[1]
+    assert built == 0
+    n, counted = _jobs(spark, f"{group}-count", feed.count)
+    assert n == (6 if commit == "sdel" else 2)
+    assert counted <= FEED_JOBS[commit], counted
+    assert _cached_rdds(spark) <= before

@@ -177,3 +177,42 @@ def test_bad_aqe_min_partition_env_fails_at_session_build(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_AQE_MIN_PARTITION", "64 kilobytes")
     with pytest.raises(ConfigError, match="SPARK_GRAFT_AQE_MIN_PARTITION"):
         build_session(app_name="bad-env")
+
+
+@pytest.mark.parametrize("key,value", [
+    ("SPARK_GRAFT_CPUS", "abc"),
+    ("SPARK_GRAFT_CPUS", "0"),
+    ("SPARK_GRAFT_CPUS", "-2"),
+    ("SPARK_DRIVER_MEM", "16 gigs"),
+    ("SPARK_DRIVER_MEM", ""),
+])
+def test_bad_session_env_fails_at_session_build(monkeypatch, key, value):
+    """A malformed CPU count or driver memory raises at build_session,
+    naming the variable, before any session is asked for."""
+    from pyspark.sql import SparkSession
+
+    from kafka_jdbc_sink_connector_spark.session import build_session
+
+    def no_session(self):
+        raise AssertionError("build_session asked for a session")
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", no_session)
+    monkeypatch.setenv(key, value)
+    with pytest.raises(ConfigError, match=key):
+        build_session(app_name="bad-env")
+
+
+def test_session_env_accepts_cpu_counts_and_byte_sizes(monkeypatch):
+    from kafka_jdbc_sink_connector_spark.session import (
+        _env_byte_size,
+        _env_cpus,
+    )
+
+    for value in ("*", "4", " 2 "):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", value)
+        assert _env_cpus("SPARK_GRAFT_CPUS", "*") == value.strip()
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert _env_cpus("SPARK_GRAFT_CPUS", "*") == "*"
+    for value in ("16g", "512m", "1073741824"):
+        monkeypatch.setenv("SPARK_DRIVER_MEM", value)
+        assert _env_byte_size("SPARK_DRIVER_MEM", "16g") == value

@@ -19,6 +19,20 @@ Usage:
 --env-b`` to adjudicate an env-toggled code path. Emits one JSON line
 with per-query times for every run plus median ratios (B/A; < 1
 means B faster).
+
+Perfbench mode runs the CDC-sink benchmark instead of driver queries:
+
+    python tools/ab_adjudicate.py --tree-a /path/to/parent \
+        --tree-b /path/to/change --perfbench mor_read_mix \
+        --seeds 201 202 203 204 205 206 207 208 [--seconds 12]
+
+One untraced ``perfbench/run.py`` process per tree and seed, run from
+that tree's root; the tree that goes first alternates from seed to
+seed. The JSON line holds every run's ``correct``/``attempted``/
+``failed`` and, per end-to-end metric of tree A's ``BENCHMARK.json``:
+the medians, the median of the per-seed B/A ratios, the pairs in
+which B is better, tree A's interquartile range, and whether B's
+median beats A's by more than that range.
 """
 
 from __future__ import annotations
@@ -77,6 +91,76 @@ def _run_once(tree: str, sf_dir: str, cpus: str, names: list[str],
     )
 
 
+def _perfbench_once(tree: str, workload: str, seed: int, seconds: float,
+                    extra_env: dict[str, str]) -> dict:
+    """The result line of one untraced perfbench run in ``tree``."""
+    env = dict(os.environ)
+    env.update(extra_env)
+    p = subprocess.run(
+        [sys.executable, "perfbench/run.py", "--workload", workload,
+         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+        capture_output=True, text=True, env=env, cwd=tree,
+    )
+    lines = p.stdout.strip().splitlines()
+    if p.returncode != 0 or not lines:
+        raise RuntimeError(
+            f"perfbench in {tree} (seed {seed}) exited {p.returncode}:\n"
+            f"{p.stdout[-2000:]}\n{p.stderr[-2000:]}"
+        )
+    return json.loads(lines[-1])
+
+
+def _perfbench_verdict(runs: list[dict], metrics: list[dict]) -> dict:
+    """Per end-to-end metric: medians, median B/A ratio over the seeds,
+    pairs in which B is better, A's IQR and whether the median gain
+    exceeds it."""
+    seeds = sorted({r["seed"] for r in runs})
+    value = {(r["seed"], r["side"]): r["metrics"] for r in runs}
+    verdict = {}
+    for m in metrics:
+        name, lower = m["name"], m["better"] == "lower"
+        a = [value[s, "a"][name]["value"] for s in seeds]
+        b = [value[s, "b"][name]["value"] for s in seeds]
+        ma, mb = statistics.median(a), statistics.median(b)
+        q1, _, q3 = statistics.quantiles(a, n=4) if len(a) > 1 else (ma,) * 3
+        gain = ma - mb if lower else mb - ma
+        verdict[name] = {
+            "median_a": ma,
+            "median_b": mb,
+            "median_ratio_b_over_a": statistics.median(
+                y / x for x, y in zip(a, b) if x
+            ) if any(a) else None,
+            "pairs_better": sum((y < x) if lower else (y > x)
+                                for x, y in zip(a, b)),
+            "pairs": len(seeds),
+            "iqr_a": [q1, q3],
+            "gain_exceeds_iqr_a": gain > q3 - q1,
+        }
+    return verdict
+
+
+def _perfbench_main(args) -> None:
+    with open(os.path.join(args.tree_a, "BENCHMARK.json")) as f:
+        metrics = json.load(f)["end_to_end"]
+    env = {"a": _parse_env(args.env_a), "b": _parse_env(args.env_b)}
+    trees = {"a": args.tree_a, "b": args.tree_b}
+    runs: list[dict] = []
+    for i, seed in enumerate(args.seeds):
+        for side in ("a", "b") if i % 2 == 0 else ("b", "a"):
+            res = _perfbench_once(trees[side], args.perfbench, seed,
+                                  args.seconds, env[side])
+            runs.append({"seed": seed, "side": side, **res})
+            print(f"  seed {seed} side {side}: correct={res['correct']} "
+                  f"failed={res['failed']}", file=sys.stderr, flush=True)
+    print(json.dumps({
+        "workload": args.perfbench, "seconds": args.seconds,
+        "runs": [{k: r[k] for k in
+                  ("seed", "side", "correct", "attempted", "failed")}
+                 for r in runs],
+        "verdict": _perfbench_verdict(runs, metrics),
+    }))
+
+
 def _parse_env(pairs: list[str]) -> dict[str, str]:
     return dict(p.split("=", 1) for p in pairs)
 
@@ -96,8 +180,21 @@ def main() -> None:
              "first-vs-second position effect (cache warmth, load "
              "drift) within each pair",
     )
-    ap.add_argument("queries", nargs="+")
+    ap.add_argument("--perfbench", metavar="WORKLOAD",
+                    help="run perfbench/run.py untraced instead of "
+                         "driver queries")
+    ap.add_argument("--seeds", type=int, nargs="+", default=[],
+                    help="perfbench seeds, one alternating pair each")
+    ap.add_argument("--seconds", type=float, default=12)
+    ap.add_argument("queries", nargs="*")
     args = ap.parse_args()
+    if args.perfbench:
+        if not args.seeds:
+            ap.error("--perfbench needs --seeds")
+        _perfbench_main(args)
+        return
+    if not args.queries:
+        ap.error("name at least one query, or use --perfbench")
 
     local = tempfile.mkdtemp(
         prefix="ab-local-",
