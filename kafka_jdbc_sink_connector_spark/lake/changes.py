@@ -144,74 +144,72 @@ def _keywise_diff(
     # within their side by construction; eqNullSafe keeps this exact)
     return _change_rows(
         j, keys, cols, cmp_cols,
-        f"{_q(keys[0])} IS NOT NULL", f"{_q('o_' + keys[0])} IS NOT NULL",
+        j[keys[0]].isNotNull(), j[f"o_{keys[0]}"].isNotNull(),
         from_version, to_version, include_preimages,
     )
 
 
-def _q(name: str) -> str:
-    """``name`` quoted as a SQL identifier."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _str(value: str) -> str:
-    """``value`` as a SQL string literal."""
-    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
 def _change_rows(
-    j: DataFrame, keys, cols, cmp_cols, new_exists: str, old_exists: str,
-    from_version: int, to_version: int, include_preimages: bool,
+    j: DataFrame, keys, cols, cmp_cols, new_exists: Column,
+    old_exists: Column, from_version: int, to_version: int,
+    include_preimages: bool,
 ) -> DataFrame:
     """Change rows of ``j``, one row per key holding both states: the
     new one in columns named like the table's, the old one in
-    ``o_``-prefixed columns; ``new_exists``/``old_exists`` are SQL
-    predicates saying whether the key has a row in each state. Keys
-    whose state did not change (absent from both included) yield
-    nothing. The expressions are SQL text: one py4j call per output
-    column, where Column objects cost about ten each."""
-    n, o = f"({new_exists})", f"({old_exists})"
-    new = _q
-    old = lambda c: _q(f"o_{c}")  # noqa: E731
-    differs = " OR ".join(
-        f"NOT ({new(c)} <=> {old(c)})" for c in cmp_cols
-    ) or "false"
-    insert = f"{n} AND NOT {o}"
-    delete = f"NOT {n} AND {o}"
-    update = f"{n} AND {o} AND ({differs})"
-    bounds = [f"{int(from_version)} AS {FROM_VERSION}",
-              f"{int(to_version)} AS {TO_VERSION}"]
+    ``o_``-prefixed columns; ``new_exists``/``old_exists`` say whether
+    the key has a row in each state. Keys whose state did not change
+    (absent from both included) yield nothing."""
+    differs = F.lit(False)
+    for c in cmp_cols:
+        differs = differs | ~j[c].eqNullSafe(j[f"o_{c}"])
+    insert = new_exists & ~old_exists
+    delete = ~new_exists & old_exists
+    update = new_exists & old_exists & differs
 
     if include_preimages:
         # Delta-CDF scheme: updates emit pre- AND post-image rows.
         # One pass over the join via explode of a per-row entry array
         # (a union of two selects would execute the diff join twice);
         # a no-match WHEN yields NULL and explode drops it.
-        def entry(col, ct):
-            img = ", ".join(f"{_str(c)}, {col(c)}" for c in cols)
-            return f"named_struct('img', named_struct({img}), 'ct', '{ct}')"
+        pre = F.struct(*[j[f"o_{c}"].alias(c) for c in cols])
+        post = F.struct(*[j[c].alias(c) for c in cols])
+
+        def entry(img, ct):
+            return F.struct(img.alias("img"), F.lit(ct).alias("ct"))
 
         entries = (
-            f"CASE WHEN {insert} THEN array({entry(new, 'insert')}) "
-            f"WHEN {delete} THEN array({entry(old, 'delete')}) "
-            f"WHEN {update} THEN array({entry(old, 'update_preimage')}, "
-            f"{entry(new, 'update_postimage')}) END"
+            F.when(insert, F.array(entry(post, "insert")))
+            .when(delete, F.array(entry(pre, "delete")))
+            .when(update, F.array(entry(pre, "update_preimage"),
+                                  entry(post, "update_postimage")))
         )
-        return j.selectExpr(f"explode({entries}) AS e").selectExpr(
-            "e.img.*", f"e.ct AS {CHANGE_TYPE}", *bounds
+        return j.select(F.explode(entries).alias("e")).select(
+            "e.img.*",
+            F.col("e.ct").alias(CHANGE_TYPE),
+            F.lit(from_version).alias(FROM_VERSION),
+            F.lit(to_version).alias(TO_VERSION),
         )
 
-    change = (f"CASE WHEN {insert} THEN 'insert' WHEN {delete} THEN "
-              f"'delete' WHEN {update} THEN 'update' END")
+    change = (
+        F.when(insert, F.lit("insert"))
+        .when(delete, F.lit("delete"))
+        .when(update, F.lit("update"))
+    )
     out = [
-        f"coalesce({new(c)}, {old(c)}) AS {new(c)}" if c in keys
-        # post-image; pre-image only when the row is gone
-        else f"CASE WHEN {n} THEN {new(c)} ELSE {old(c)} END AS {new(c)}"
+        (
+            F.coalesce(j[c], j[f"o_{c}"]).alias(c)
+            if c in keys
+            # post-image; pre-image only when the row is gone
+            else F.when(new_exists, j[c]).otherwise(j[f"o_{c}"]).alias(c)
+        )
         for c in cols
     ]
-    return j.selectExpr(*out, f"{change} AS {CHANGE_TYPE}", *bounds).filter(
-        f"{CHANGE_TYPE} IS NOT NULL"
-    )
+    return j.select(
+        *out,
+        change.alias(CHANGE_TYPE),
+        F.lit(from_version).alias(FROM_VERSION),
+        F.lit(to_version).alias(TO_VERSION),
+    ).filter(F.col(CHANGE_TYPE).isNotNull())
 
 
 def _old_state(
@@ -438,13 +436,14 @@ def _adjacent_delta_changes(
     # exploding the one-element array makes a generator, which Catalyst
     # does not inline into the projection below, so they run once per
     # row rather than once per column read
+    s = F.col("__s")
     rows = j.select(F.explode(F.array(F.transform(F.array(
         state(mor.KEY_UPS_PRE, mor.KEY_DELS_PRE, mor.SD_ENTRIES_PRE),
         state(mor.KEY_UPS, mor.KEY_DELS, mor.SD_ENTRIES),
-    ), resolved))).alias("__s")).selectExpr(
-        *[f"__s[1].row.{_q(c)} AS {_q(c)}" for c in cols],
-        *[f"__s[0].row.{_q(c)} AS {_q('o_' + c)}" for c in cols],
-        "__s[1].live AS __n_exists", "__s[0].live AS __o_exists",
+    ), resolved))).alias("__s")).select(
+        *[s[1]["row"][c].alias(c) for c in cols],
+        *[s[0]["row"][c].alias(f"o_{c}") for c in cols],
+        s[1]["live"].alias("__n_exists"), s[0]["live"].alias("__o_exists"),
     )
     old_cols = {f.name for f in old_snap.schema.fields}
     added = {
@@ -454,7 +453,7 @@ def _adjacent_delta_changes(
     if added:  # the old state predates these columns: NULL there
         rows = rows.withColumns(added)
     return _change_rows(
-        rows, keys, cols, cmp_cols, "__n_exists", "__o_exists",
+        rows, keys, cols, cmp_cols, rows["__n_exists"], rows["__o_exists"],
         old_snap.version, new_snap.version, include_preimages,
     )
 

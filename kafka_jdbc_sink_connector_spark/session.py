@@ -14,9 +14,11 @@ from pyspark.sql import SparkSession
 
 from kafka_jdbc_sink_connector_spark.config import ConfigError
 
-#: a Spark byte-size string (``JavaUtils.byteStringAsBytes``): whole
+#: a Spark byte-size string (``JavaUtils.byteStringAsBytes``): ASCII
 #: digits plus an optional b/k/kb/m/mb/g/gb/t/tb/p/pb unit
-_BYTE_SIZE = re.compile(r"\d+(?:[kmgtp]b?|b)?", re.IGNORECASE)
+_BYTE_SIZE = re.compile(r"[0-9]+(?:[kmgtp]b?|b)?", re.IGNORECASE)
+#: a ``local[N]`` core count: a positive ASCII integer or ``*``
+_CPUS = re.compile(r"\*|[1-9][0-9]*")
 
 
 def _env_byte_size(key: str, default: str) -> str:
@@ -35,7 +37,7 @@ def _env_cpus(key: str, default: str) -> str:
     """``key`` from the environment: a positive CPU count or ``*``
     (every core), checked like :func:`_env_byte_size`."""
     raw = os.environ.get(key, default).strip()
-    if raw != "*" and not (raw.isdigit() and int(raw) > 0):
+    if not _CPUS.fullmatch(raw):
         raise ConfigError(
             f"{key}={raw!r} is not a CPU count (a positive integer or *)"
         )

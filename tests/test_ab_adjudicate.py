@@ -42,3 +42,30 @@ def test_perfbench_verdict_pairs_by_seed_and_direction():
     eps = v["events_per_s"]
     assert eps["pairs_better"] == 4
     assert eps["gain_exceeds_iqr_a"] is True  # A's spread is 0
+
+
+def test_perfbench_runs_the_benchmark_length_alternating(
+    tmp_path, monkeypatch, capsys
+):
+    """Every run lasts tree A's ``run_seconds``; the tree that runs
+    first alternates from seed to seed."""
+    import argparse
+    import json
+
+    (tmp_path / "BENCHMARK.json").write_text(json.dumps(
+        {"run_seconds": 7, "end_to_end": METRICS}))
+    calls = []
+
+    def once(tree, workload, seed, seconds, env):
+        calls.append((tree, seed, seconds))
+        side = "a" if tree == str(tmp_path) else "b"
+        return _run(seed, side, 2.0, 100.0)
+
+    monkeypatch.setattr(ab, "_perfbench_once", once)
+    ab._perfbench_main(argparse.Namespace(
+        tree_a=str(tmp_path), tree_b="/tree-b", perfbench="mor_read_mix",
+        seeds=[1, 2], env_a=[], env_b=[]))
+    a, b = str(tmp_path), "/tree-b"
+    assert calls == [(a, 1, 7), (b, 1, 7), (b, 2, 7), (a, 2, 7)]
+    out = json.loads(capsys.readouterr().out)
+    assert out["seconds"] == 7 and len(out["runs"]) == 4

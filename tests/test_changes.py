@@ -321,13 +321,21 @@ def _sdel_history_batches(spark, tmp_table, delete_mode):
     return t
 
 
-def _assert_every_pair_equals_diff(t, min_fast_pairs, min_history_pairs):
+def _assert_every_pair_equals_diff(t, monkeypatch, min_fast_pairs,
+                                   min_history_pairs):
     """For every adjacent version pair: the feed ``table_changes``
     serves equals the two-snapshot diff, with and without pre-images.
-    At least ``min_fast_pairs`` pairs are one merge-on-read commit,
+    A pair is *fast* when it is one merge-on-read commit whose parent
+    has the same ``mor_meta`` or no delta/sdel files in the buckets the
+    commit touches; exactly these pairs (and commits that wrote no
+    files) must be served without the diff. At least ``min_fast_pairs`` pairs are fast,
     ``min_history_pairs`` of them delta-only over earlier sdel files."""
     from kafka_jdbc_sink_connector_spark.lake import changes
 
+    diff = changes._diff_changes
+    diffed = []
+    monkeypatch.setattr(changes, "_diff_changes",
+                        lambda *a, **k: diffed.append(a) or diff(*a, **k))
     keys = list(t.snapshot.key_fields)
     fast_pairs = history_pairs = 0
     for v_from, v_to in zip(t.history(), t.history()[1:]):
@@ -336,17 +344,24 @@ def _assert_every_pair_equals_diff(t, min_fast_pairs, min_history_pairs):
         cols = [f.name for f in new_snap.schema.fields]
         cmp_cols = [c for c in cols if c not in keys]
         nd = changes._new_commit_files(old_snap, new_snap)
-        if nd is not None and (nd[0] or nd[1]):
-            fast_pairs += 1
-            history_pairs += bool(
-                nd[0] and not nd[1] and old_snap.sdel_files()
+        one_pass = nd is not None
+        if one_pass:
+            touched = sorted({int(b) for b in (*nd[0], *nd[1])})
+            one_pass = new_snap.mor_meta == old_snap.mor_meta or not (
+                old_snap.delta_files(touched) or old_snap.sdel_files(touched)
             )
+        # a commit that wrote no files (a schema step) has no change
+        fast = one_pass and bool(nd[0] or nd[1])
+        fast_pairs += fast
+        history_pairs += fast and bool(
+            nd[0] and not nd[1] and old_snap.sdel_files()
+        )
         for pre in (False, True):
-            ref = changes._diff_changes(
-                t, old_snap, new_snap, keys, cols, cmp_cols, pre
-            )
+            ref = diff(t, old_snap, new_snap, keys, cols, cmp_cols, pre)
+            diffed.clear()
             got = table_changes(t, from_version=v_from, to_version=v_to,
                                 include_preimages=pre)
+            assert bool(diffed) is not one_pass, (v_from, v_to, pre)
             assert _rows_sorted(got) == _rows_sorted(ref), (
                 v_from, v_to, pre)
     assert fast_pairs >= min_fast_pairs
@@ -357,7 +372,9 @@ def _assert_every_pair_equals_diff(t, min_fast_pairs, min_history_pairs):
     "update", "delete", "insert_update", "evolve", "sdel_history_update",
     "sdel_history_delete", "sdel_insert_update",
 ])
-def test_adjacent_delta_fast_path_equals_diff(spark, tmp_table, scenario):
+def test_adjacent_delta_fast_path_equals_diff(
+    spark, tmp_table, monkeypatch, scenario
+):
     """For every adjacent MOR version pair, the one-pass feed and the
     two-snapshot diff must produce identical change rows — inserts,
     updates, hard deletes (pre-image), soft deletes (marker-flip
@@ -374,12 +391,12 @@ def test_adjacent_delta_fast_path_equals_diff(spark, tmp_table, scenario):
         t, fast = _evolve_batches(spark, tmp_table), 4
     elif scenario == "sdel_insert_update":
         t = _sdel_insert_update_batches(spark, tmp_table)
-        fast, history = 4, 1
+        fast, history = 3, 1  # the switch to insert_mode=update is diffed
     else:
         t = _sdel_history_batches(
             spark, tmp_table, scenario.rsplit("_", 1)[1])
         fast, history = 3, 2
-    _assert_every_pair_equals_diff(t, fast, history)
+    _assert_every_pair_equals_diff(t, monkeypatch, fast, history)
 
 
 def test_adjacent_delta_fast_path_plan_reads_only_deltas_and_old_bucket(

@@ -183,6 +183,9 @@ def test_bad_aqe_min_partition_env_fails_at_session_build(monkeypatch):
     ("SPARK_GRAFT_CPUS", "abc"),
     ("SPARK_GRAFT_CPUS", "0"),
     ("SPARK_GRAFT_CPUS", "-2"),
+    ("SPARK_GRAFT_CPUS", "\u00b2"),  # superscript two: isdigit() but not int()
+    ("SPARK_GRAFT_CPUS", "\u0661"),  # Arabic-Indic one: int() but not Spark
+    ("SPARK_DRIVER_MEM", "\u0661g"),
     ("SPARK_DRIVER_MEM", "16 gigs"),
     ("SPARK_DRIVER_MEM", ""),
 ])

@@ -24,12 +24,13 @@ Perfbench mode runs the CDC-sink benchmark instead of driver queries:
 
     python tools/ab_adjudicate.py --tree-a /path/to/parent \
         --tree-b /path/to/change --perfbench mor_read_mix \
-        --seeds 201 202 203 204 205 206 207 208 [--seconds 12]
+        --seeds 201 202 203 204 205 206 207 208
 
 One untraced ``perfbench/run.py`` process per tree and seed, run from
-that tree's root; the tree that goes first alternates from seed to
-seed. The JSON line holds every run's ``correct``/``attempted``/
-``failed`` and, per end-to-end metric of tree A's ``BENCHMARK.json``:
+that tree's root for the ``run_seconds`` of tree A's ``BENCHMARK.json``;
+the tree that goes first alternates from seed to seed. The JSON line
+holds every run's ``correct``/``attempted``/``failed`` and, per
+end-to-end metric of tree A's ``BENCHMARK.json``:
 the medians, the median of the per-seed B/A ratios, the pairs in
 which B is better, tree A's interquartile range, and whether B's
 median beats A's by more than that range.
@@ -141,19 +142,20 @@ def _perfbench_verdict(runs: list[dict], metrics: list[dict]) -> dict:
 
 def _perfbench_main(args) -> None:
     with open(os.path.join(args.tree_a, "BENCHMARK.json")) as f:
-        metrics = json.load(f)["end_to_end"]
+        bench = json.load(f)
+    metrics, seconds = bench["end_to_end"], bench["run_seconds"]
     env = {"a": _parse_env(args.env_a), "b": _parse_env(args.env_b)}
     trees = {"a": args.tree_a, "b": args.tree_b}
     runs: list[dict] = []
     for i, seed in enumerate(args.seeds):
         for side in ("a", "b") if i % 2 == 0 else ("b", "a"):
             res = _perfbench_once(trees[side], args.perfbench, seed,
-                                  args.seconds, env[side])
+                                  seconds, env[side])
             runs.append({"seed": seed, "side": side, **res})
             print(f"  seed {seed} side {side}: correct={res['correct']} "
                   f"failed={res['failed']}", file=sys.stderr, flush=True)
     print(json.dumps({
-        "workload": args.perfbench, "seconds": args.seconds,
+        "workload": args.perfbench, "seconds": seconds,
         "runs": [{k: r[k] for k in
                   ("seed", "side", "correct", "attempted", "failed")}
                  for r in runs],
@@ -185,7 +187,6 @@ def main() -> None:
                          "driver queries")
     ap.add_argument("--seeds", type=int, nargs="+", default=[],
                     help="perfbench seeds, one alternating pair each")
-    ap.add_argument("--seconds", type=float, default=12)
     ap.add_argument("queries", nargs="*")
     args = ap.parse_args()
     if args.perfbench:
